@@ -47,7 +47,9 @@ from boann_ocsf_security_data_platform_spark.operators.text import (
     STOPWORDS_EN,
     bpe_ish_tokens,
 )
+from boann_ocsf_security_data_platform_spark.session import session_memo
 from boann_ocsf_security_data_platform_spark.sources import load_table
+from boann_ocsf_security_data_platform_spark.sources.catalog import table_identity
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -451,20 +453,18 @@ def _percentiles_by_group(
     )
 
 
-_COUNT_CACHE: "dict[tuple[str, str], int]" = {}
-
-
 def _table_count(spark, sf_dir: str, name: str) -> int:
-    """Memoized table row count per (sf_dir, table). The count only
-    drives size-based PLAN choices (gates, valves, join pins) and a
-    dozen entries re-derive the identical number within one bench or
-    sweep run — one job instead of twelve. Test/benchmark data dirs are
-    immutable within a session; a pipeline overwriting its inputs
-    mid-session should call ``_COUNT_CACHE.clear()``."""
-    key = (sf_dir, name)
-    if key not in _COUNT_CACHE:
-        _COUNT_CACHE[key] = _t(spark, sf_dir, name).count()
-    return _COUNT_CACHE[key]
+    """Table row count, memoized per session on the table's file
+    identity (``table_identity``: data files with size and mtime), so a
+    table rewritten mid-session is recounted. The count only drives
+    size-based PLAN choices (gates, valves, join pins) and a dozen
+    entries re-derive the identical number within one bench or sweep
+    run — one job instead of twelve. A table that cannot be stat'ed
+    locally is counted once per session."""
+    key = table_identity(sf_dir, name) or (sf_dir, name)
+    return session_memo(
+        spark, ("entry.table_count", key), lambda: _t(spark, sf_dir, name).count()
+    )
 
 
 def _docs_gated_with_pin(spark, sf_dir):

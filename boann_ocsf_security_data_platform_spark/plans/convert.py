@@ -37,9 +37,13 @@ Semantic notes (reference file:line):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from typing import NamedTuple
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
+
+from ..session import session_memo
 
 # OCSF constants for class 2007 (reference: base_converter.py:38-60)
 CLASS_NAME = "Application Security Posture Finding"
@@ -88,6 +92,23 @@ def _join_cwe(cwe: Column) -> Column:
     return F.when(is_list, joined).otherwise(cwe)
 
 
+class _ConvertColumns(NamedTuple):
+    """The fixed column sets of ``convert_sarif_to_ocsf``, one per step."""
+
+    doc_id: Column
+    runs: tuple[Column, ...]
+    per_run: tuple[Column, ...]
+    rules: tuple[Column, ...]
+    rule_present: Column
+    rule_rank: Column
+    rule_last: Column
+    rules_side: tuple[Column, ...]
+    results: tuple[Column, ...]
+    result_present: Column
+    join_on: Column
+    findings: tuple[Column, ...]
+
+
 def convert_sarif_to_ocsf(sarif_df: DataFrame, now_ms: int | None = None) -> DataFrame:
     """Convert parsed SARIF rows (one per file, `SARIF_SCHEMA`-shaped) into
     OCSF finding rows.
@@ -98,20 +119,51 @@ def convert_sarif_to_ocsf(sarif_df: DataFrame, now_ms: int | None = None) -> Dat
 
     `now_ms` pins the wall-clock used for `time` and the created_time
     fallback (tests); production leaves it None → per-batch
-    `current_timestamp()`.
+    `current_timestamp()`. It enters the plan as the `_now` column, so the
+    column sets (built once per session, `session_memo`) do not depend on it.
     """
     now_col = (
         F.lit(now_ms).cast("long")
         if now_ms is not None
         else F.unix_millis(F.current_timestamp())
     )
+    lineage = "_source_file" in sarif_df.columns
+    spark = sarif_df.sparkSession
+    c = session_memo(
+        spark, ("plans.convert", lineage), lambda: _convert_columns(lineage)
+    )
 
-    lineage = [F.col("_source_file")] if "_source_file" in sarif_df.columns else []
+    runs = sarif_df.withColumns({"_doc_id": c.doc_id, "_now": now_col}).select(
+        *c.runs
+    )
+    # Narrow per-run columns, materialized once per run. The repartition is
+    # a deliberate optimizer barrier AND the scale lever: without it the
+    # per-run expressions float above the results explode, forcing every
+    # generated row to carry the full `run` struct; with it, one run's
+    # results also fan out across the cluster instead of one task.
+    per_run = runs.select(*c.per_run).repartition(
+        spark.sparkContext.defaultParallelism
+    )
 
-    runs = sarif_df.withColumn(
-        "_doc_id", F.monotonically_increasing_id()
-    ).select(*lineage, "_doc_id", F.posexplode_outer("runs").alias("_run_index", "run"))
+    # rules as a (small) broadcast side: last rule wins for duplicate ids
+    # (Python dict build semantics, reference :304-312)
+    rules_side = (
+        per_run.select(*c.rules)
+        .where(c.rule_present)
+        .withColumn("_rn", c.rule_rank)
+        .filter(c.rule_last)
+        .select(*c.rules_side)
+    )
+    results = per_run.select(*c.results).where(c.result_present)
+    return results.join(F.broadcast(rules_side), c.join_on, "left").select(
+        *c.findings
+    )
 
+
+def _convert_columns(lineage: bool) -> _ConvertColumns:
+    """Build every Column of the conversion; ``lineage``: whether the input
+    carries ``_source_file``."""
+    lineage_cols = [F.col("_source_file")] if lineage else []
     driver = F.col("run.tool.driver")
     inv = F.col("run.invocations")
 
@@ -128,63 +180,60 @@ def convert_sarif_to_ocsf(sarif_df: DataFrame, now_ms: int | None = None) -> Dat
         1,
     )
     tool_name = F.coalesce(driver["name"], F.lit(UNKNOWN))
-
-    # Narrow per-run columns, materialized once per run. The repartition is
-    # a deliberate optimizer barrier AND the scale lever: without it the
-    # per-run expressions float above the results explode, forcing every
-    # generated row to carry the full `run` struct; with it, one run's
-    # results also fan out across the cluster instead of one task.
-    per_run = runs.select(
-        *lineage,
-        "_doc_id",
-        "_run_index",
+    per_run = (
+        *lineage_cols,
+        F.col("_doc_id"),
+        F.col("_run_index"),
         tool_name.alias("_tool_name"),
         F.coalesce(driver["semanticVersion"], driver["version"]).alias("_tool_version"),
-        F.coalesce(F.element_at(parsed_starts, 1), now_col).alias("_created_time"),
+        F.coalesce(F.element_at(parsed_starts, 1), F.col("_now")).alias(
+            "_created_time"
+        ),
         F.coalesce(
             F.col("run.automationDetails.id"),
             F.col("run.automationDetails.guid"),
             F.concat(tool_name, F.lit("_run_"), first_start_raw),
         ).alias("_scan_run_id"),
+        F.col("_now"),
         driver["rules"].alias("_rules_arr"),
         F.col("run.results").alias("_results"),
-    ).repartition(sarif_df.sparkSession.sparkContext.defaultParallelism)
+    )
 
-    # rules as a (small) broadcast side: last rule wins for duplicate ids
-    # (Python dict build semantics, reference :304-312)
-    rules_exploded = per_run.select(
-        "_doc_id",
-        "_run_index",
+    rules = (
+        F.col("_doc_id"),
+        F.col("_run_index"),
         F.posexplode_outer("_rules_arr").alias("_rule_pos", "_rule"),
-    ).where(F.col("_rule.id").isNotNull())
-    from pyspark.sql import Window
-
+    )
+    rules_side = (
+        F.col("_doc_id").alias("_r_doc_id"),
+        F.col("_run_index").alias("_r_run_index"),
+        F.col("_rule.id").alias("_rule_id"),
+        F.col("_rule.shortDescription.text").alias("_rule_short_desc"),
+        F.col("_rule.properties.cwe").alias("_rule_cwe"),
+    )
     last_wins = Window.partitionBy("_doc_id", "_run_index", "_rule.id").orderBy(
         F.desc("_rule_pos")
     )
-    rules_side = (
-        rules_exploded.withColumn("_rn", F.row_number().over(last_wins))
-        .filter(F.col("_rn") == 1)
-        .select(
-            F.col("_doc_id").alias("_r_doc_id"),
-            F.col("_run_index").alias("_r_run_index"),
-            F.col("_rule.id").alias("_rule_id"),
-            F.col("_rule.shortDescription.text").alias("_rule_short_desc"),
-            F.col("_rule.properties.cwe").alias("_rule_cwe"),
-        )
-    )
-
-    results = per_run.drop("_rules_arr").select(
-        *[c for c in per_run.columns if c not in ("_rules_arr", "_results")],
+    results = (
+        *lineage_cols,
+        *[
+            F.col(n)
+            for n in (
+                "_doc_id",
+                "_run_index",
+                "_tool_name",
+                "_tool_version",
+                "_created_time",
+                "_scan_run_id",
+                "_now",
+            )
+        ],
         F.explode_outer("_results").alias("result"),
-    ).where(F.col("result").isNotNull())
-
-    joined = results.join(
-        F.broadcast(rules_side),
+    )
+    join_on = (
         (F.col("_doc_id") == F.col("_r_doc_id"))
         & (F.col("_run_index") == F.col("_r_run_index"))
-        & (F.col("result.ruleId") == F.col("_rule_id")),
-        "left",
+        & (F.col("result.ruleId") == F.col("_rule_id"))
     )
 
     r = F.col("result")
@@ -296,9 +345,9 @@ def convert_sarif_to_ocsf(sarif_df: DataFrame, now_ms: int | None = None) -> Dat
     )
     enrichments = F.when(F.size(enrichments) > 0, enrichments)
 
-    return joined.select(
-        *lineage,
-        "_run_index",
+    findings = (
+        *lineage_cols,
+        F.col("_run_index"),
         F.lit(CLASS_NAME).alias("class_name"),
         F.lit(CLASS_UID).alias("class_uid"),
         F.lit(CATEGORY_UID).alias("category_uid"),
@@ -306,7 +355,7 @@ def convert_sarif_to_ocsf(sarif_df: DataFrame, now_ms: int | None = None) -> Dat
         F.lit(ACTIVITY_ID).alias("activity_id"),
         F.lit(ACTIVITY_NAME).alias("activity_name"),
         F.lit(TYPE_UID).alias("type_uid"),
-        now_col.alias("time"),
+        F.col("_now").alias("time"),
         _severity_id(level).alias("severity_id"),
         _severity_name(level).alias("severity"),
         F.lit(1).alias("status_id"),
@@ -329,6 +378,25 @@ def convert_sarif_to_ocsf(sarif_df: DataFrame, now_ms: int | None = None) -> Dat
             "vulnerabilities"
         ),
         enrichments.alias("enrichments"),
+    )
+    return _ConvertColumns(
+        doc_id=F.monotonically_increasing_id(),
+        runs=(
+            *lineage_cols,
+            F.col("_doc_id"),
+            F.col("_now"),
+            F.posexplode_outer("runs").alias("_run_index", "run"),
+        ),
+        per_run=per_run,
+        rules=rules,
+        rule_present=F.col("_rule.id").isNotNull(),
+        rule_rank=F.row_number().over(last_wins),
+        rule_last=F.col("_rn") == 1,
+        rules_side=rules_side,
+        results=results,
+        result_present=F.col("result").isNotNull(),
+        join_on=join_on,
+        findings=findings,
     )
 
 

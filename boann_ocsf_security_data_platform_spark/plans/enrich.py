@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hash_fns import normalize_name, sha256_hex
+from ..session import session_memo
 
 logger = logging.getLogger(__name__)
 
@@ -32,16 +33,29 @@ _ENRICHMENT_DT = (
 )
 
 
-def _append_enrichment(df: DataFrame, enrichment: Column) -> DataFrame:
-    """Append one enrichment struct to the ``enrichments`` array column
-    (creating it when absent — reference base.py behavior of
+# scan_run_id of ScanMetadataEnrichment, as a literal column: the memoized
+# enrichment expression reads it from here instead of embedding the value
+_SCAN_RUN_ID = "_enrich_scan_run_id"
+
+
+def _appended(has_enrichments: bool, enrichment: Column) -> Column:
+    """The ``enrichments`` array column with one enrichment struct appended
+    (created when absent — reference base.py behavior of
     ``finding.setdefault``-style appends)."""
     existing = (
         F.coalesce(F.col("enrichments"), F.array().cast(_ENRICHMENT_DT))
-        if "enrichments" in df.columns
+        if has_enrichments
         else F.array().cast(_ENRICHMENT_DT)
     )
-    return df.withColumn("enrichments", F.concat(existing, F.array(enrichment)))
+    return F.concat(existing, F.array(enrichment))
+
+
+def _append_enrichment(df: DataFrame, enrichment: Column) -> DataFrame:
+    """Append one enrichment struct to the ``enrichments`` array column
+    (the helper plugins build on)."""
+    return df.withColumn(
+        "enrichments", _appended("enrichments" in df.columns, enrichment)
+    )
 
 
 class ColumnEnrichment:
@@ -94,16 +108,26 @@ class ScanMetadataEnrichment(ColumnEnrichment):
         self.scan_run_id = str(scan_run_id)
 
     def apply(self, df: DataFrame) -> DataFrame:
-        return _append_enrichment(
-            df,
-            F.struct(
-                F.lit("scan_metadata").alias("name"),
-                F.lit("Scan metadata").alias("value"),
-                F.lit("custom").alias("type"),
-                F.create_map(F.lit("scan_run_id"), F.lit(self.scan_run_id)).alias(
-                    "data"
+        has = "enrichments" in df.columns
+        enrichments = session_memo(
+            df.sparkSession,
+            ("plans.enrich.scan_metadata", has),
+            lambda: _appended(
+                has,
+                F.struct(
+                    F.lit("scan_metadata").alias("name"),
+                    F.lit("Scan metadata").alias("value"),
+                    F.lit("custom").alias("type"),
+                    F.create_map(
+                        F.lit("scan_run_id"), F.col(_SCAN_RUN_ID)
+                    ).alias("data"),
                 ),
             ),
+        )
+        return (
+            df.withColumn(_SCAN_RUN_ID, F.lit(self.scan_run_id))
+            .withColumn("enrichments", enrichments)
+            .drop(_SCAN_RUN_ID)
         )
 
 
@@ -139,15 +163,28 @@ class FindingUIDGenerator(ColumnEnrichment):
         self.uid_prefix = "boann"
 
     def apply(self, df: DataFrame) -> DataFrame:
-        sdlc = normalize_name(F.lit(self.sdlc_type))
-
         if self.uid_suffix is not None:
             suffix = self.uid_suffix(df) if callable(self.uid_suffix) else self.uid_suffix
+            sdlc = normalize_name(F.lit(self.sdlc_type))
             uid = F.concat_ws(":", F.lit(self.uid_prefix), sdlc, suffix)
             return df.withColumn(
                 "finding_info", F.col("finding_info").withField("uid", uid)
             )
 
+        has = "enrichments" in df.columns
+        finding_info, enrichments = session_memo(
+            df.sparkSession,
+            ("plans.enrich.uid", self.uid_prefix, self.sdlc_type, has),
+            lambda: self._uid_columns(has),
+        )
+        return df.withColumns(
+            {"finding_info": finding_info, "enrichments": enrichments}
+        )
+
+    def _uid_columns(self, has_enrichments: bool) -> tuple[Column, Column]:
+        """(``finding_info`` with the uid set, ``enrichments`` with the
+        uid_generation entry appended), both over the input columns."""
+        sdlc = normalize_name(F.lit(self.sdlc_type))
         tool = normalize_name(
             F.coalesce(F.col("metadata.product.name"), F.lit("unknown"))
         )
@@ -186,23 +223,23 @@ class FindingUIDGenerator(ColumnEnrichment):
             F.coalesce(fp_hash, content_hash),
         )
 
-        df = df.withColumn(
-            "finding_info", F.col("finding_info").withField("uid", uid)
-        )
         # uid_generation traceability metadata (reference :300-323)
-        return _append_enrichment(
-            df,
-            F.struct(
-                F.lit("uid_generation").alias("name"),
-                F.concat(F.lit("UID generated using "), method, F.lit(" method")).alias(
-                    "value"
+        return (
+            F.col("finding_info").withField("uid", uid),
+            _appended(
+                has_enrichments,
+                F.struct(
+                    F.lit("uid_generation").alias("name"),
+                    F.concat(
+                        F.lit("UID generated using "), method, F.lit(" method")
+                    ).alias("value"),
+                    F.lit(None).cast("string").alias("type"),
+                    F.create_map(
+                        F.lit("method"), method,
+                        F.lit("version"), F.lit("v1"),
+                        F.lit("algorithm"), F.lit("sha256"),
+                    ).alias("data"),
                 ),
-                F.lit(None).cast("string").alias("type"),
-                F.create_map(
-                    F.lit("method"), method,
-                    F.lit("version"), F.lit("v1"),
-                    F.lit("algorithm"), F.lit("sha256"),
-                ).alias("data"),
             ),
         )
 

@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import OCSF_FINDING_SCHEMA
-from ..session import max_records_per_file
+from ..session import max_records_per_file, session_memo
 
 
 def _first_enrichment(enr: Column, name: str) -> Column:
@@ -67,10 +67,18 @@ def stage(landing_df: DataFrame, hwm: datetime.datetime | None = None) -> DataFr
     df = landing_df
     if hwm is not None:
         df = df.filter(F.col("loaded_at") > F.lit(hwm))
+    ocsf, columns = session_memo(
+        landing_df.sparkSession, "plans.staging.stage", _stage_columns
+    )
+    return df.withColumn("ocsf", ocsf).select(*columns)
 
+
+def _stage_columns() -> tuple[Column, tuple[Column, ...]]:
+    """(typed ``ocsf`` view, the stg_ocsf_findings projection over it):
+    fixed for the session, so ``stage`` builds them once (session_memo)."""
     # Typed view over the raw document; the raw string column stays the
     # fidelity source of truth (unknown fields live only there).
-    df = df.withColumn("ocsf", F.from_json("raw_ocsf_json", OCSF_FINDING_SCHEMA))
+    ocsf = F.from_json("raw_ocsf_json", OCSF_FINDING_SCHEMA)
 
     o = F.col("ocsf")
     enr = o["enrichments"]
@@ -136,7 +144,7 @@ def stage(landing_df: DataFrame, hwm: datetime.datetime | None = None) -> DataFr
         )
     )
 
-    return df.select(
+    return ocsf, (
         F.col("finding_uid"),
         o["metadata"]["product"]["name"].alias("tool_name"),
         o["metadata"]["product"]["version"].alias("tool_version"),

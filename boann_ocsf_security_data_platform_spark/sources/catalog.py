@@ -7,9 +7,13 @@ factor.)
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampType
+
+from ..session import session_memo
 
 TABLES = (
     "region",
@@ -30,6 +34,37 @@ TABLES = (
 _NANO_TS_COLUMNS = {"events": ("ts",)}
 
 
+# Confs that change the schema Parquet inference returns for the same file.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+def table_identity(sf_dir: str, name: str) -> tuple | None:
+    """(path, ((file, size, mtime_ns), ...)) of a table's data files — a
+    file or a directory tree; Spark's hidden ``_``/``.`` entries are
+    skipped. It changes whenever the table is rewritten, so memo entries
+    keyed on it (the schema here, row counts in the entry module) are
+    rebuilt. None when the path cannot be stat'ed locally (another URI
+    scheme)."""
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return path, ((path, st.st_size, st.st_mtime_ns),)
+        files = []
+        for root, dirs, names in os.walk(path):
+            dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+            for n in sorted(names):
+                if not n.startswith(("_", ".")):
+                    st = os.stat(os.path.join(root, n))
+                    files.append((os.path.join(root, n), st.st_size, st.st_mtime_ns))
+        return path, tuple(files)
+    except OSError:
+        return None
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # Defensive runtime confs for caller-provided sessions (e.g. the
     # verification driver's): timestamps must render in UTC to agree with
@@ -47,7 +82,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    identity = table_identity(sf_dir, name)
+    if identity is None:
+        df = spark.read.parquet(path)
+    else:
+        # Schema inference is a Spark job per read; the schema of unchanged
+        # files under unchanged inference confs is inferred once.
+        key = (
+            "sources.catalog.schema",
+            identity,
+            *[spark.conf.get(c) for c in _INFERENCE_CONFS],
+        )
+        schema = session_memo(spark, key, lambda: spark.read.parquet(path).schema)
+        df = spark.read.schema(schema).parquet(path)
     for col in _NANO_TS_COLUMNS.get(name, ()):
         if col in df.columns and isinstance(df.schema[col].dataType, LongType):
             # ns → µs truncation, identical to DuckDB's read of the file

@@ -46,7 +46,6 @@ def test_theta_gate_arms_identical(spark, monkeypatch):
     per-nation pair counts. ADVICE r12 #3 discipline: BOTH arms are
     forced explicitly — the baseline never silently rides the real
     gate."""
-    em._COUNT_CACHE.clear()
     monkeypatch.setattr(em._gates, "PIN_DIM_MIN_ROWS", sys.maxsize)
     literal = sorted(
         tuple(r) for r in QS["join_theta_inequality"](spark, SF).collect()
@@ -64,7 +63,6 @@ def test_theta_plan_shapes_per_arm(spark, monkeypatch):
     no full-outer merge — the 0.4 s bench shape); above it the domain
     form runs its running-count Window and never materializes pairs (no
     inequality join condition anywhere)."""
-    em._COUNT_CACHE.clear()
     monkeypatch.setattr(em._gates, "PIN_DIM_MIN_ROWS", sys.maxsize)
     below = _executed_plan(QS["join_theta_inequality"](spark, SF))
     assert "BroadcastHashJoin" in below and "Window" not in below, below[
@@ -146,12 +144,10 @@ def test_q5_gate_arms_identical(spark, monkeypatch):
     with widened fact shuffles (above-gate arm) must produce identical
     per-nation revenue. Inner-join reorder provably cannot move rows;
     this pins it against future edits."""
-    em._COUNT_CACHE.clear()
     monkeypatch.setattr(em._gates, "PIN_DIM_MIN_ROWS", sys.maxsize)
     below = sorted(
         tuple(r) for r in QS["q5_local_supplier_volume"](spark, SF).collect()
     )
-    em._COUNT_CACHE.clear()
     monkeypatch.setattr(em._gates, "PIN_DIM_MIN_ROWS", 0)
     above = sorted(
         tuple(r) for r in QS["q5_local_supplier_volume"](spark, SF).collect()
