@@ -85,29 +85,34 @@ def cmd_convert(args) -> int:
 
 
 def cmd_ingest(args) -> int:
+    from pyspark.sql import functions as F
+
     from .plans.landing import land
-    from .sources.ocsf import read_ocsf_batch
+    from .sources.ocsf import explode_findings, lacks_uid, split_findings
 
     if not args.input_file.endswith(".ocsf.json"):
         print(f"error: not an .ocsf.json file: {args.input_file}", file=sys.stderr)
         return 1
     spark = _spark(args)
-    df = read_ocsf_batch(spark, args.input_file).cache()
-    try:
-        if df.filter(~df._parse_ok).count():
-            print(f"error: malformed JSON array: {args.input_file}", file=sys.stderr)
-            return 1
-        findings = df.filter(df.raw_ocsf_json.isNotNull())
-        # stricter than the reference (which inserts NULL finding_uid via
-        # .get()): enforce the dbt not_null contract at the door
-        bad = findings.filter(findings.finding_uid.isNull()).count()
-        if bad:
-            print(f"error: {bad} findings without finding_info.uid", file=sys.stderr)
-            return 1
-        n = findings.count()
-        land(findings.select("finding_uid", "raw_ocsf_json"), args.landing_path)
-    finally:
-        df.unpersist()
+    findings = spark.read.option("wholetext", True).text(args.input_file).select(
+        split_findings(F.col("value")).alias("_findings")
+    )
+    # one aggregate over the file verdict, then the write: nothing lands
+    # unless the whole file is good
+    parsed, bad, n = findings.agg(
+        F.bool_and(F.col("_findings").isNotNull()),
+        F.sum(F.size(F.filter("_findings", lacks_uid))),
+        F.sum(F.size(F.filter("_findings", lambda s: s.isNotNull()))),
+    ).first()
+    if not parsed:
+        print(f"error: malformed JSON array: {args.input_file}", file=sys.stderr)
+        return 1
+    # stricter than the reference (which inserts NULL finding_uid via
+    # .get()): enforce the dbt not_null contract at the door
+    if bad:
+        print(f"error: {bad} findings without finding_info.uid", file=sys.stderr)
+        return 1
+    land(explode_findings(findings), args.landing_path)
     print(f"ingested {n} findings -> {args.landing_path}")
     return 0
 

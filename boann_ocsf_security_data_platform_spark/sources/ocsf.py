@@ -17,8 +17,10 @@ the classpath.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import session_memo
 
 
 def split_findings(whole_text: F.Column) -> F.Column:
@@ -33,56 +35,44 @@ def split_findings(whole_text: F.Column) -> F.Column:
     return F.from_json(whole_text, "array<string>")
 
 
-def read_ocsf_batch(spark: SparkSession, path: str | list[str]) -> DataFrame:
-    """Read OCSF findings from `*.ocsf.json` array files.
+def lacks_uid(finding: F.Column) -> F.Column:
+    """True for a non-null finding without ``finding_info.uid`` — the
+    reference's insert key (ingest_raw_ocsf_findings.py:115-118)."""
+    return finding.isNotNull() & F.get_json_object(
+        finding, "$.finding_info.uid"
+    ).isNull()
 
-    Returns the landing-shaped projection: `finding_uid` (from
-    finding_info.uid, the reference's insert key,
-    ingest_raw_ocsf_findings.py:115-118), the verbatim per-finding
-    `raw_ocsf_json` text, plus `_source_file` lineage. Unparseable files
-    yield one row with a NULL `raw_ocsf_json` so callers can gate per file
-    (the reference fails the whole file on malformed JSON).
-    """
-    whole = (
-        spark.read.option("wholetext", True)
-        .text(path)
-        .withColumn("_source_file", F.input_file_name())
-        .withColumn("_findings", split_findings(F.col("value")))
+
+def findings_ok(findings: F.Column) -> F.Column:
+    """Per-file verdict over ``split_findings`` output, computed inside the
+    file's own row: the array parsed and no finding lacks a uid. ``[]`` and
+    NULL elements are OK (they land nothing). The uid gate is stricter than
+    the reference (which ``.get()``s and inserts a NULL finding_uid): it
+    keeps the dbt ``not_null`` contract on finding_uid enforceable
+    downstream instead of landing rows that are certain to fail quality
+    checks."""
+    return findings.isNotNull() & ~F.exists(findings, lacks_uid)
+
+
+def explode_findings(files: DataFrame) -> DataFrame:
+    """Landing-shaped rows (``finding_uid``, verbatim ``raw_ocsf_json``)
+    from a frame's ``_findings`` column (``split_findings`` output), NULL
+    elements dropped. Only the array rides the explode, so no exploded row
+    carries its file's whole findings array (a column kept beside a
+    Generate lands in its requiredChildOutput — same Catalyst trap as the
+    converter's run-struct explode, see plans/convert.py)."""
+    explode, uid = session_memo(
+        files.sparkSession, "sources.ocsf.explode_findings", _explode_columns
     )
-    return split_findings_rows(whole)
+    return files.select(explode).select(uid, "raw_ocsf_json")
 
 
-def split_findings_rows(whole: DataFrame) -> DataFrame:
-    """Explode a (_source_file, _findings) frame into per-finding rows.
-
-    ``_parse_ok`` is projected BEFORE the explode: a column computed beside
-    a Generate lands in its requiredChildOutput, so deriving it after would
-    make every exploded row carry the file's ENTIRE findings array
-    (quadratic memory on large files — same Catalyst trap as the converter's
-    run-struct explode, see plans/convert.py). Pre-projected, the Generate
-    carries only (_source_file, _parse_ok).
-
-    explode_outer keeps a NULL-raw row for unparseable files (parse failed)
-    while empty arrays ([] — valid, zero findings) also keep one NULL row;
-    distinguish via _parse_ok.
-    """
+def _explode_columns() -> tuple[F.Column, F.Column]:
     return (
-        whole.select(
-            "_source_file",
-            F.col("_findings").isNotNull().alias("_parse_ok"),
-            "_findings",
-        )
-        .select(
-            "_source_file",
-            "_parse_ok",
-            F.explode_outer("_findings").alias("raw_ocsf_json"),
-        )
-        .select(
-            F.get_json_object("raw_ocsf_json", "$.finding_info.uid").alias(
-                "finding_uid"
-            ),
-            "raw_ocsf_json",
-            "_source_file",
-            "_parse_ok",
-        )
+        F.explode(F.filter("_findings", lambda s: s.isNotNull())).alias(
+            "raw_ocsf_json"
+        ),
+        F.get_json_object("raw_ocsf_json", "$.finding_info.uid").alias(
+            "finding_uid"
+        ),
     )

@@ -29,10 +29,12 @@ import logging
 import signal
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.ocsf import read_ocsf_batch
+from ..plans.landing import land
+from ..session import session_memo
+from ..sources.ocsf import explode_findings, findings_ok, split_findings
 
 logger = logging.getLogger(__name__)
 
@@ -112,31 +114,15 @@ def process_directory(
 
     candidates = [f for f in files if f not in failed]
     if candidates:
-        # one distributed whole-text read of every remaining file; per-file
-        # parse health decided from the data itself. raw_ocsf_json is the
-        # VERBATIM array element (sources.ocsf.split_findings) — no schema
-        # round-trip, so unknown/extra fields survive into landing exactly
-        # like the reference's raw JSONB insert.
-        raw = read_ocsf_batch(spark, candidates).cache()
-        # a file fails if it is unparseable (non-JSON / non-array root) OR
-        # any finding lacks finding_info.uid. The uid gate is stricter than
-        # the reference (which .get()s and inserts NULL finding_uid,
-        # ingest_raw_ocsf_findings.py:115-123): quarantining the file here
-        # keeps the dbt not_null contract on finding_uid
-        # (dbt_project/models/.../schema.yml) enforceable downstream instead
-        # of landing rows that are guaranteed to fail quality checks.
-        bad = _bad_file_frame(raw)
-        # exclusion of bad files from landing is a distributed anti-join —
-        # NEVER keyed off the (capped) driver-side list, so correctness is
-        # independent of how many files failed
-        good = raw.join(bad, "_source_file", "left_anti").filter(
-            F.col("raw_ocsf_json").isNotNull()
+        whole = (
+            spark.read.option("wholetext", True)
+            .text(candidates)
+            .withColumn("_source_file", F.input_file_name())
         )
-        from ..plans.landing import land
-
-        land(good.select("finding_uid", "raw_ocsf_json"), landing_path)
-        bad_files, overflowed = _collect_bad_files(bad)
-        raw.unpersist()
+        # invariant: a bad file never lands — the landing job drops it by
+        # the verdict in its own row; the returned (capped) list only
+        # drives disposition, never what lands
+        bad_files, overflowed = land_ocsf_files(whole, landing_path)
         failed.update(_norm_matches(bad_files, candidates))
         if overflowed:
             # beyond the cap we cannot tell good files from bad driver-side,
@@ -189,41 +175,72 @@ def make_subprocess_validator(
 
 
 #: disposition safety valve — the per-sweep cap on how many failing files
-#: the driver will collect for the move loop (a pathological drop of a
-#: million bad files must not OOM the driver or turn the sweep into a
-#: million sequential renames). Excess bad files stay in the source dir,
-#: are NOT landed (exclusion is join-based), and quarantine on a later
-#: sweep — the same at-least-once floor as a crash mid-disposition.
+#: the driver will move (a pathological drop of a million bad files must not
+#: turn the sweep into a million sequential renames). Excess bad files stay
+#: in the source dir, are NOT landed (the landing job drops them by their own
+#: row's verdict), and quarantine on a later sweep — the same at-least-once
+#: floor as a crash mid-disposition.
 MAX_BAD_FILES_PER_SWEEP = 10_000
 
 
-def _bad_file_frame(rows: DataFrame) -> DataFrame:
-    """Distinct source files with any unparseable or uid-less finding —
-    stays distributed; join against it to exclude from landing."""
+def land_ocsf_files(
+    files: DataFrame, landing_path: str, batch_id: int | None = None
+) -> tuple[set[str], bool]:
+    """Land whole-text ``*.ocsf.json`` files — one row per file, columns
+    ``value`` (the file text) and ``_source_file`` — in ONE Spark job with
+    no cache.
+
+    Each file's verdict (``sources.ocsf.findings_ok``) is computed inside
+    the file's own row, and only OK files are exploded into
+    ``finding_uid``/``raw_ocsf_json`` rows, so the landing job itself drops
+    bad files: no driver-side list decides what lands, and correctness does
+    not depend on how many files failed. ``raw_ocsf_json`` is the VERBATIM
+    array element (``sources.ocsf.split_findings``) — no schema round-trip,
+    so unknown/extra fields survive into landing exactly like the
+    reference's raw JSONB insert.
+
+    The bad-file list rides the same job as an observed metric, placed
+    before the filter so it sees every file; it is at most as long as the
+    file list the caller already holds. Returns ``(bad_files, overflowed)``
+    with the list capped at MAX_BAD_FILES_PER_SWEEP.
+    """
+    findings, ok, bad = session_memo(
+        files.sparkSession, "streaming.monitor.land_ocsf_files", _land_columns
+    )
+    # unnamed: a fresh unique name, so concurrent streams cannot collide
+    obs = Observation()
+    ok_files = (
+        files.select("_source_file", findings)
+        .select("*", ok)
+        .observe(obs, bad)
+        .filter("_ok")
+    )
+    land(explode_findings(ok_files), landing_path, batch_id=batch_id)
+    return _cap_bad_files(obs.get["bad"])
+
+
+def _land_columns() -> tuple[Column, Column, Column]:
+    """(``_findings`` array, ``_ok`` verdict, observed ``bad`` file list):
+    fixed for the session, so each micro-batch reuses them (session_memo)."""
     return (
-        rows.filter(
-            ~F.col("_parse_ok")
-            | (F.col("raw_ocsf_json").isNotNull() & F.col("finding_uid").isNull())
-        )
-        .select("_source_file")
-        .distinct()
+        split_findings(F.col("value")).alias("_findings"),
+        findings_ok(F.col("_findings")).alias("_ok"),
+        F.collect_list(F.when(~F.col("_ok"), F.col("_source_file"))).alias("bad"),
     )
 
 
-def _collect_bad_files(bad: DataFrame) -> tuple[set[str], bool]:
-    """Driver-side bad-file list for the disposition move loop, capped at
-    MAX_BAD_FILES_PER_SWEEP (+1 row to detect overflow). Returns
-    ``(bad_files, overflowed)``."""
-    rows = bad.limit(MAX_BAD_FILES_PER_SWEEP + 1).collect()
-    overflowed = len(rows) > MAX_BAD_FILES_PER_SWEEP
+def _cap_bad_files(bad: list[str]) -> tuple[set[str], bool]:
+    """Cap the bad-file list for the disposition move loop at
+    MAX_BAD_FILES_PER_SWEEP. Returns ``(bad_files, overflowed)``."""
+    overflowed = len(bad) > MAX_BAD_FILES_PER_SWEEP
     if overflowed:
         logger.warning(
             "more than %d failing files in one sweep; quarantine capped — "
             "the remainder stays in the source directory for a later sweep",
             MAX_BAD_FILES_PER_SWEEP,
         )
-        rows = rows[:MAX_BAD_FILES_PER_SWEEP]
-    return {r["_source_file"] for r in rows}, overflowed
+        bad = sorted(bad)[:MAX_BAD_FILES_PER_SWEEP]
+    return set(bad), overflowed
 
 
 def _norm_matches(uri_set: set[str], candidates: list[str]) -> set[str]:
@@ -288,35 +305,14 @@ def start_monitor_stream(
     )
 
     def _land_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from ..sources.ocsf import split_findings, split_findings_rows
-
-        rows = split_findings_rows(
-            batch_df.withColumn("_findings", split_findings(F.col("value")))
-        ).cache()
-        try:
-            bad = _bad_file_frame(rows)
-            good = rows.join(bad, "_source_file", "left_anti").filter(
-                F.col("raw_ocsf_json").isNotNull()
-            )
-            from ..plans.landing import land
-
-            # batch_id-keyed dynamic overwrite: micro-batch replays after a
-            # crash overwrite their own partition instead of duplicating
-            land(
-                good.select("finding_uid", "raw_ocsf_json"),
-                landing_path,
-                batch_id=batch_id,
-            )
-            bad_files, _ = _collect_bad_files(bad)
-            if bad_files:
-                logger.warning(
-                    "batch %d: %d file(s) rejected", batch_id, len(bad_files)
-                )
-                if failed_dir is not None:
-                    for f in sorted(bad_files):
-                        move_file(spark, f, failed_dir)
-        finally:
-            rows.unpersist()
+        # batch_id-keyed dynamic overwrite: micro-batch replays after a
+        # crash overwrite their own partition instead of duplicating
+        bad_files, _ = land_ocsf_files(batch_df, landing_path, batch_id=batch_id)
+        if bad_files:
+            logger.warning("batch %d: %d file(s) rejected", batch_id, len(bad_files))
+            if failed_dir is not None:
+                for f in sorted(bad_files):
+                    move_file(spark, f, failed_dir)
 
     writer = stream.writeStream.foreachBatch(_land_batch).option(
         "checkpointLocation", checkpoint_dir

@@ -135,6 +135,98 @@ def test_batch_sweep_bad_file_cap(spark, monitor_dirs, monkeypatch):
     assert read_landing(spark, d["landing"]).count() == 2
 
 
+def _whole_text(spark, src):
+    return (
+        spark.read.option("wholetext", True)
+        .text(str(src))
+        .withColumn("_source_file", F.input_file_name())
+    )
+
+
+def _jobs_in(spark, group, fn):
+    """Run ``fn`` under a job group; return (result, Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_land_ocsf_files_one_job_per_batch(spark, monitor_dirs):
+    """Good, malformed, uid-less, ``[]`` and ``[null, {...}]`` files land in
+    exactly ONE Spark job: OK files' non-null findings land, the rest are
+    reported bad — a file is bad iff it does not parse as an array or any
+    non-null finding lacks finding_info.uid."""
+    from boann_ocsf_security_data_platform_spark.streaming.monitor import (
+        land_ocsf_files,
+    )
+
+    d = monitor_dirs
+    second = {**FINDING, "finding_info": {"uid": "u2"}, "zz_extra": [1]}
+    no_uid = {**FINDING, "finding_info": {"title": "no uid"}}
+    docs = {
+        "good.ocsf.json": [FINDING, second],
+        "nouid.ocsf.json": [FINDING, no_uid],
+        "empty.ocsf.json": [],
+        "nullel.ocsf.json": [None, {"finding_info": {"uid": "u3"}}],
+    }
+    for name, findings in docs.items():
+        _write_ocsf(d["src"], name, findings)
+    (d["src"] / "broken.ocsf.json").write_text("[{not json")
+    files = _whole_text(spark, d["src"])
+
+    for run in range(2):  # the job count repeats exactly; a replay is idempotent
+        (bad, overflowed), jobs = _jobs_in(
+            spark, f"land-ocsf-{run}",
+            lambda: land_ocsf_files(files, d["landing"], batch_id=0),
+        )
+        assert jobs == 1
+        assert not overflowed
+        assert sorted(b.rsplit("/", 1)[-1] for b in bad) == [
+            "broken.ocsf.json",
+            "nouid.ocsf.json",
+        ]
+        landed = read_landing(spark, d["landing"]).collect()
+        assert sorted((r["finding_uid"], r["raw_ocsf_json"]) for r in landed) == sorted(
+            (f["finding_info"]["uid"], json.dumps(f, separators=(",", ":")))
+            for f in [FINDING, second, docs["nullel.ocsf.json"][1]]
+        )
+
+
+def test_land_ocsf_files_all_bad_batch(spark, monitor_dirs):
+    """A batch with zero rows to land still returns (the observed bad-file
+    list arrives with the landing job) and reports every file."""
+    import threading
+
+    from boann_ocsf_security_data_platform_spark.streaming.monitor import (
+        land_ocsf_files,
+    )
+
+    d = monitor_dirs
+    (d["src"] / "broken.ocsf.json").write_text("{not json")
+    _write_ocsf(d["src"], "nouid.ocsf.json", [{"finding_info": {}}])
+    files = _whole_text(spark, d["src"])
+    out = []
+    t = threading.Thread(
+        target=lambda: out.append(land_ocsf_files(files, d["landing"], batch_id=3)),
+        daemon=True,
+    )
+    t.start()
+    t.join(120)
+    assert not t.is_alive(), "land_ocsf_files hung on an all-bad batch"
+    bad, overflowed = out[0]
+    assert sorted(b.rsplit("/", 1)[-1] for b in bad) == [
+        "broken.ocsf.json",
+        "nouid.ocsf.json",
+    ]
+    assert not overflowed
+    landed = [f for _, _, fs in os.walk(d["landing"]) for f in fs if f.endswith(".parquet")]
+    assert landed == []
+
+
 def test_batch_sweep_on_non_file_scheme(spark, tmp_path):
     """S4/S5 evidence beyond file://: the whole sweep — listing, landing
     write, disposition renames — runs against viewfs:// (a second Hadoop
