@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -28,6 +29,24 @@ def spark():
         master=f"local[{os.environ.get('BOANN_TEST_CPUS', '8')}]",
     )
     yield s
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``with spark_jobs(group) as jobs:`` — ``jobs()`` returns the ids of
+    the Spark jobs started inside the block (counted under a job group)."""
+
+    @contextlib.contextmanager
+    def counted(group: str):
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            yield lambda: list(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    return counted
 
 
 @pytest.fixture(scope="session")

@@ -3,7 +3,6 @@ table counts) built once per SparkContext. Memoized builds must match a
 fresh build row for row, per-call values must stay out of the keys, a
 rewritten table must be re-read, and nothing crosses SparkContexts."""
 
-import contextlib
 import datetime
 import os
 import subprocess
@@ -36,19 +35,6 @@ def _memo_size(spark) -> int:
     return len(session._MEMOS.get(spark.sparkContext, {}))
 
 
-@contextlib.contextmanager
-def _jobs(spark, group: str):
-    """Yield a callable returning the ids of the Spark jobs started inside
-    the block (counted under a job group)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        yield lambda: list(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-
-
 def _rows(df):
     return sorted(map(repr, df.collect()))
 
@@ -66,16 +52,16 @@ def test_memo_is_per_spark_context():
     assert len(session._MEMOS) == n - 1
 
 
-def test_load_table_memoized_read_starts_no_job(spark, tmp_path):
+def test_load_table_memoized_read_starts_no_job(spark, tmp_path, spark_jobs):
     sf = str(tmp_path)
     pq.write_table(
         pa.table({"k": [3, 1, 2], "ts": pa.array([1, 2, 3], pa.timestamp("us"))}),
         f"{sf}/t.parquet",
     )
-    with _jobs(spark, "memo-first-read") as jobs:
+    with spark_jobs("memo-first-read") as jobs:
         first = load_table(spark, sf, "t")
         assert jobs(), "the first read infers the schema with a Spark job"
-    with _jobs(spark, "memo-second-read") as jobs:
+    with spark_jobs("memo-second-read") as jobs:
         again = load_table(spark, sf, "t")
         assert jobs() == []
     assert again.schema == first.schema
@@ -83,7 +69,7 @@ def test_load_table_memoized_read_starts_no_job(spark, tmp_path):
     assert again.schema["ts"].dataType.typeName() == "timestamp_ntz"
 
 
-def test_load_table_picks_up_rewritten_files(spark, tmp_path):
+def test_load_table_picks_up_rewritten_files(spark, tmp_path, spark_jobs):
     """A rewrite — more rows, then an added column — is read afresh, for a
     single-file table and for a directory written by Spark."""
     sf = str(tmp_path)
@@ -97,7 +83,7 @@ def test_load_table_picks_up_rewritten_files(spark, tmp_path):
 
     spark.range(4).write.parquet(f"{sf}/d.parquet")
     assert load_table(spark, sf, "d").columns == ["id"]
-    with _jobs(spark, "memo-dir-read") as jobs:
+    with spark_jobs("memo-dir-read") as jobs:
         load_table(spark, sf, "d")
         assert jobs() == []
     spark.range(5).withColumn("w", F.col("id") * 2).write.mode("overwrite").parquet(
@@ -118,13 +104,13 @@ def test_load_table_memo_matches_inferred_read(spark, sf_smoke):
         assert _rows(memo) == _rows(fresh)
 
 
-def test_table_count_recounts_rewritten_table(spark, tmp_path):
+def test_table_count_recounts_rewritten_table(spark, tmp_path, spark_jobs):
     import __spark_entry__ as em
 
     sf = str(tmp_path)
     pq.write_table(pa.table({"k": [1, 2]}), f"{sf}/t.parquet")
     assert em._table_count(spark, sf, "t") == 2
-    with _jobs(spark, "memo-count") as jobs:
+    with spark_jobs("memo-count") as jobs:
         assert em._table_count(spark, sf, "t") == 2
         assert jobs() == []
     pq.write_table(pa.table({"k": [1, 2, 3, 4]}), f"{sf}/t.parquet")

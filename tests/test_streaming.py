@@ -143,19 +143,7 @@ def _whole_text(spark, src):
     )
 
 
-def _jobs_in(spark, group, fn):
-    """Run ``fn`` under a job group; return (result, Spark jobs it ran)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_land_ocsf_files_one_job_per_batch(spark, monitor_dirs):
+def test_land_ocsf_files_one_job_per_batch(spark, monitor_dirs, spark_jobs):
     """Good, malformed, uid-less, ``[]`` and ``[null, {...}]`` files land in
     exactly ONE Spark job: OK files' non-null findings land, the rest are
     reported bad — a file is bad iff it does not parse as an array or any
@@ -179,11 +167,9 @@ def test_land_ocsf_files_one_job_per_batch(spark, monitor_dirs):
     files = _whole_text(spark, d["src"])
 
     for run in range(2):  # the job count repeats exactly; a replay is idempotent
-        (bad, overflowed), jobs = _jobs_in(
-            spark, f"land-ocsf-{run}",
-            lambda: land_ocsf_files(files, d["landing"], batch_id=0),
-        )
-        assert jobs == 1
+        with spark_jobs(f"land-ocsf-{run}") as jobs:
+            bad, overflowed = land_ocsf_files(files, d["landing"], batch_id=0)
+            assert len(jobs()) == 1
         assert not overflowed
         assert sorted(b.rsplit("/", 1)[-1] for b in bad) == [
             "broken.ocsf.json",
