@@ -98,13 +98,14 @@ def cmd_ingest(args) -> int:
         split_findings(F.col("value")).alias("_findings")
     )
     # one aggregate over the file verdict, then the write: nothing lands
-    # unless the whole file is good
+    # unless the whole file is good. A zero-byte file reads as no rows, so
+    # every aggregate is NULL: it ingests 0 findings.
     parsed, bad, n = findings.agg(
         F.bool_and(F.col("_findings").isNotNull()),
         F.sum(F.size(F.filter("_findings", lacks_uid))),
         F.sum(F.size(F.filter("_findings", lambda s: s.isNotNull()))),
     ).first()
-    if not parsed:
+    if parsed is False:
         print(f"error: malformed JSON array: {args.input_file}", file=sys.stderr)
         return 1
     # stricter than the reference (which inserts NULL finding_uid via
@@ -113,7 +114,7 @@ def cmd_ingest(args) -> int:
         print(f"error: {bad} findings without finding_info.uid", file=sys.stderr)
         return 1
     land(explode_findings(findings), args.landing_path)
-    print(f"ingested {n} findings -> {args.landing_path}")
+    print(f"ingested {n or 0} findings -> {args.landing_path}")
     return 0
 
 

@@ -180,6 +180,13 @@ def test_ingest_rejects_malformed_and_null_uid(spark, tmp_path):
 
     assert read_landing(spark, str(tmp_path / "landing")).count() == 1
 
+    empty = tmp_path / "empty.ocsf.json"  # zero bytes: no findings, not malformed
+    empty.write_text("")
+    rc = _main(["ingest", "--input-file", str(empty), "--landing-path",
+                str(tmp_path / "landing")])
+    assert rc == 0
+    assert read_landing(spark, str(tmp_path / "landing")).count() == 1
+
 
 def test_audit_verb_end_to_end(spark, tmp_path, capsys):
     """ingest -> stage -> audit green; then land an extra batch WITHOUT
