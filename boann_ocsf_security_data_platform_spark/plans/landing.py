@@ -59,36 +59,28 @@ def land(
         if c not in ("finding_uid", "raw_ocsf_json", "loaded_at", "load_date")
         and not c.startswith("_")
     ]
-    out = (
-        findings_json_df.select("finding_uid", "raw_ocsf_json", *extra)
-        .withColumn("loaded_at", F.current_timestamp())
-        .withColumn("load_date", F.to_date(F.col("loaded_at")))
+    loaded_at = F.current_timestamp()  # one value per query
+    out = findings_json_df.select(
+        "finding_uid",
+        "raw_ocsf_json",
+        *extra,
+        loaded_at.alias("loaded_at"),
+        F.to_date(loaded_at).alias("load_date"),
+        # -1: the non-replayable sentinel of a batch append
+        F.lit(-1 if batch_id is None else int(batch_id)).alias("_batch_id"),
+    )
+    writer = (
+        out.write.option("mergeSchema", "true")  # on_schema_change='append_new_columns'
+        # guide §6 file sizing: split oversized write tasks; never merges
+        .option("maxRecordsPerFile", max_records_per_file())
+        .partitionBy("_batch_id", "load_date")
     )
     if batch_id is None:
-        (
-            out.withColumn("_batch_id", F.lit(-1))  # sentinel: non-replayable
-            .write.mode(mode)
-            .option("mergeSchema", "true")  # on_schema_change='append_new_columns'
-            # guide §6 file sizing: split oversized write tasks; never merges
-            .option("maxRecordsPerFile", max_records_per_file())
-            .partitionBy("_batch_id", "load_date")
-            .parquet(path)
-        )
-        return
-    spark = findings_json_df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            out.withColumn("_batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")  # dynamic: only this batch's partitions
-            .option("mergeSchema", "true")
-            .option("maxRecordsPerFile", max_records_per_file())
-            .partitionBy("_batch_id", "load_date")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        writer.mode(mode).parquet(path)
+    else:
+        # dynamic: only this batch's partitions. A writer option, so the
+        # session conf other threads read stays as it is.
+        writer.mode("overwrite").option("partitionOverwriteMode", "dynamic").parquet(path)
 
 
 def read_landing(spark: SparkSession, path: str) -> DataFrame:

@@ -3,8 +3,9 @@
 Single place where engine-wide physical-execution policy lives:
 AQE on (runtime re-planning, skew-join handling, partition coalescing),
 UTC session time, Arrow for any pandas exchange, nested-schema pruning for
-the OCSF struct columns. Tests and the bench harness all come through here
-so plans are comparable.
+the OCSF struct columns, and a parallel file-listing job of at most one
+task per core. Tests and the bench harness all come through here so plans
+are comparable.
 """
 
 from __future__ import annotations
@@ -81,6 +82,9 @@ _DEFAULT_CONF: dict[str, str] = {
 }
 
 
+LISTING_PARALLELISM = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+
+
 def merge_conf(extra_conf: dict[str, str] | None = None) -> dict[str, str]:
     """Engine defaults overlaid with caller conf. extraJavaOptions MERGES
     (caller flags appended, so they win on conflict) rather than
@@ -133,7 +137,18 @@ def get_spark(
     conf = merge_conf(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # Above parallelPartitionDiscovery.threshold paths (32) Spark lists
+    # files with a job of one task per path, capped only at 10000, so the
+    # streaming file source's getBatch relisting of a 50-file micro-batch
+    # would queue 50 tasks on 4 slots. Tasks beyond the slot count add
+    # scheduling, never concurrency: cap the job at one task per core. The
+    # session conf holds spark-submit and builder values alike (on an
+    # existing context builder values land only there), so an explicit
+    # setting is never replaced.
+    if spark.conf.get(LISTING_PARALLELISM, None) is None:
+        spark.conf.set(LISTING_PARALLELISM, str(spark.sparkContext.defaultParallelism))
+    return spark
 
 
 T = TypeVar("T")

@@ -491,6 +491,34 @@ def test_land_batch_id_replay_is_idempotent(spark, tmp_path):
     assert read_landing(spark, path).count() == 4
 
 
+@pytest.mark.parametrize("session_mode", [None, "static"])
+def test_land_batch_id_leaves_session_overwrite_mode(spark, tmp_path, session_mode):
+    """``land(..., batch_id=...)`` overwrites dynamically through a writer
+    option: the session's ``partitionOverwriteMode`` is left as it was
+    (unset, or ``static``), and a replay still replaces only its batch."""
+    from boann_ocsf_security_data_platform_spark.plans.landing import land
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    path = str(tmp_path / "landing")
+    df = spark.createDataFrame(
+        [("u1", "{}"), ("u2", "{}")], "finding_uid string, raw_ocsf_json string"
+    )
+    before = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    if session_mode is not None:
+        spark.conf.set(key, session_mode)
+    try:
+        land(df, path, batch_id=0)
+        land(df, path, batch_id=1)
+        land(df, path, batch_id=0)  # replay
+        assert spark.conf.get(key, None) == session_mode
+    finally:
+        spark.conf.unset(key)
+        if before is not None:
+            spark.conf.set(key, before)
+    assert read_landing(spark, path).count() == 4
+
+
 def test_land_mixed_batch_and_stream_layouts_coexist(spark, tmp_path):
     """Batch appends (sentinel _batch_id=-1) and streaming micro-batches
     (real batch ids) share one partition layout: after BOTH have written,
