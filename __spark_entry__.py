@@ -15,7 +15,6 @@ from __future__ import annotations
 import math
 from collections.abc import Callable
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -26,6 +25,10 @@ from boann_ocsf_security_data_platform_spark.operators import (
     text_quality,
 )
 from boann_ocsf_security_data_platform_spark.operators import gates as _gates
+from boann_ocsf_security_data_platform_spark.operators.cache import (
+    cache_scope,
+    materialize,
+)
 from boann_ocsf_security_data_platform_spark.operators.gates import size_gated
 from boann_ocsf_security_data_platform_spark.operators.dedup import (
     _xor_constant,
@@ -148,65 +151,26 @@ def _order_buckets(
     return df.withColumn("bkt", F.size(F.filter(arr, cond)))
 
 
-def _bucketed_ntile(
-    df: DataFrame,
-    value_col: str,
-    key_col: str,
-    k: int,
-    ascending: bool = True,
-) -> DataFrame:
-    """Exact ``ntile(k)`` over the deterministic (value, unique key)
-    order WITHOUT a global single-task sort (round-11 defect class): the
-    global row rank r = lower-bucket prefix count + in-bucket row_number
-    (equal values share a bucket — see :func:`_order_buckets`), and
-    ntile's remainder rule is closed-form in (r, n): the first n%k
-    buckets take ceil(n/k) rows. Bit-identical to the literal ntile;
-    adds a ``bin`` column, drops the helper columns. ``ascending=False``
-    mirrors ``orderBy(desc(value), key)`` (the key tie-break stays
-    ascending, matching the entries' deterministic orders)."""
-    bkts = _order_buckets(df, value_col, ascending=ascending)
-    order_v = F.asc(value_col) if ascending else F.desc(value_col)
-    w_in = Window.partitionBy("bkt").orderBy(order_v, F.asc(key_col))
-    w_pre = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    prefix = (
-        bkts.groupBy("bkt")
-        .agg(F.count(F.lit(1)).alias("_bn"))
-        .select(
-            "bkt",
-            F.coalesce(F.sum("_bn").over(w_pre), F.lit(0)).alias("_prev_n"),
-        )
-    )
-    nn = df.agg(F.count(F.lit(1)).alias("_n"))
-    r = F.col("_prev_n") + F.row_number().over(w_in)
-    q = F.floor(F.col("_n") / k)
-    rem = F.col("_n") % k
-    thr = rem * (q + 1)
-    bin_expr = (
-        F.when(r <= thr, F.floor((r - 1) / (q + 1)))
-        .otherwise(rem + F.floor((r - thr - 1) / q))
-        + 1
-    )
-    return (
-        bkts.join(F.broadcast(prefix), "bkt")
-        .crossJoin(F.broadcast(nn))
-        .withColumn("bin", bin_expr)
-        .drop("bkt", "_prev_n", "_n")
-    )
-
-
 def _bucketed_ntiles(
     df: DataFrame,
     specs: "list[tuple[str, bool, str]]",
     key_col: str,
     k: int,
 ) -> DataFrame:
-    """Several exact ntiles over one frame with ONE sketch action:
-    ``specs`` is [(value_col, ascending, out_col), ...]. Chaining
-    :func:`_bucketed_ntile` would run one approxQuantile action per
-    metric, each re-executing every previous ntile's join/window plan
-    (round-11: the 3-chain over 15M RFM customers cost 390 s at sf100);
-    the multi-column approxQuantile reads the BASE frame once and every
-    bucket/prefix/window composition after that is lazy plan."""
+    """Exact ``ntile(k)`` columns over the deterministic (value, unique
+    key) orders WITHOUT a global single-task sort (round-11 defect
+    class): ``specs`` is [(value_col, ascending, out_col), ...]. The
+    global row rank r = lower-bucket prefix count + in-bucket row_number
+    (equal values share a bucket — see :func:`_order_buckets`), and
+    ntile's remainder rule is closed-form in (r, n): the first n%k
+    buckets take ceil(n/k) rows. Bit-identical to the literal ntile.
+    ``ascending=False`` mirrors ``orderBy(desc(value), key)`` (the key
+    tie-break stays ascending). All specs share ONE sketch action:
+    chaining one ntile per metric re-executed every previous ntile's
+    join/window plan (round-11: the 3-chain over 15M RFM customers cost
+    390 s at sf100); the multi-column approxQuantile reads the BASE frame
+    once and every bucket/prefix/window composition after that is lazy
+    plan."""
     probs = [i / 200 for i in range(1, 200)]
     all_bounds = df.stat.approxQuantile([s[0] for s in specs], probs, 0.001)
     nn = df.agg(F.count(F.lit(1)).alias("_n"))
@@ -281,10 +245,10 @@ def _cum_before(
     bucket-summary prefix branch, and the bucketed window join — and
     every caller feeds it a chain ending in a fact scan, so unpersisted
     each consumer re-ran that scan (the agg_kruskal_wallis plan showed
-    the orders⋈customer join FIVE times). Domain-grain rows, so
-    MEMORY_AND_DISK_DESER is bounded at the gate scales and evicts
-    gracefully past them."""
-    df = df.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+    the orders⋈customer join FIVE times). Domain-grain rows, so the
+    in-memory level is bounded at the gate scales and evicts gracefully
+    past them."""
+    df = materialize(df)
     b = _order_buckets(df, order_col, ascending=True, n_buckets=n_buckets)
     w_in = (
         Window.partitionBy("bkt")
@@ -343,14 +307,13 @@ def _grouped_percentile_cont(
     caller's grouping can produce an all-null group (the TPC-H numeric
     columns are NOT NULL); a new caller that can must left-join its
     distinct group keys back."""
-    dv = (
+    # dv feeds the approxQuantile ACTION, the bucketed join chain, and
+    # the per-group total — unmaterialized, each re-ran the fact scan this
+    # arm exists to protect
+    dv = materialize(
         df.where(F.col(value_col).isNotNull())  # percentile ignores nulls
         .groupBy(part_col, value_col)
         .agg(F.count(F.lit(1)).alias("_c"))
-        # fan-out persist (round 13): dv feeds the approxQuantile ACTION,
-        # the bucketed join chain, and the per-group total — unpersisted,
-        # each re-ran the fact scan this arm exists to protect
-        .persist(StorageLevel.MEMORY_AND_DISK_DESER)
     )
     b = _order_buckets(dv, value_col)
     w_in = (
@@ -387,10 +350,10 @@ def _grouped_percentile_cont(
             ).alias("_cb"),
         )
     )
-    # idx is re-filtered once per requested percentile — persist it so a
-    # three-percentile caller (trimmed/winsorized, psi) pays the bucketed
+    # idx is re-filtered once per requested percentile — materialize it so
+    # a three-percentile caller (trimmed/winsorized, psi) pays the bucketed
     # cum-count pipeline once, not three times (round 13)
-    idx = idx.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+    idx = materialize(idx)
     out = None
     for p, name in ps:
         pos = F.lit(float(p)) * (F.col("_n") - 1)
@@ -499,7 +462,6 @@ def _near_dup_clusters_gated(spark, sf_dir: str) -> DataFrame:
     from boann_ocsf_security_data_platform_spark.operators.dedup import (
         cluster_pairs,
         near_dup_clusters_collapsed,
-        release_caches,
     )
 
     docs = _t(spark, sf_dir, "documents")
@@ -508,14 +470,13 @@ def _near_dup_clusters_gated(spark, sf_dir: str) -> DataFrame:
         _gates.MAX_LSH_BUCKET if n > _gates.LSH_VALVE_MIN_ROWS else None
     )
     if n <= HUBNESS_EXACT_MAX_ROWS:
-        pairs = minhash_near_dup_pairs(
-            docs,
-            max_bucket_size=valve,
-            pin_shuffle_join=_gates.pin_shuffle_join(n),
-        )
-        out = cluster_pairs(pairs)  # eager: result is checkpointed
-        release_caches(pairs)
-        return out
+        with cache_scope():
+            pairs = minhash_near_dup_pairs(
+                docs,
+                max_bucket_size=valve,
+                pin_shuffle_join=_gates.pin_shuffle_join(n),
+            )
+            return cluster_pairs(pairs)  # eager: result is checkpointed
     return near_dup_clusters_collapsed(docs, max_bucket_size=valve)
 
 
@@ -527,7 +488,6 @@ def _near_dup_participants_gated(spark, sf_dir: str) -> DataFrame:
     representative participates at the representative level."""
     from boann_ocsf_security_data_platform_spark.operators.dedup import (
         near_dup_participants_collapsed,
-        release_caches,
     )
 
     docs = _t(spark, sf_dir, "documents")
@@ -536,19 +496,18 @@ def _near_dup_participants_gated(spark, sf_dir: str) -> DataFrame:
         _gates.MAX_LSH_BUCKET if n > _gates.LSH_VALVE_MIN_ROWS else None
     )
     if n <= HUBNESS_EXACT_MAX_ROWS:
-        pairs = minhash_near_dup_pairs(
-            docs,
-            max_bucket_size=valve,
-            pin_shuffle_join=_gates.pin_shuffle_join(n),
-        )
-        out = (
-            pairs.select(F.col("id_a").alias("doc_id"))
-            .union(pairs.select(F.col("id_b").alias("doc_id")))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        release_caches(pairs)
-        return out
+        with cache_scope():
+            pairs = minhash_near_dup_pairs(
+                docs,
+                max_bucket_size=valve,
+                pin_shuffle_join=_gates.pin_shuffle_join(n),
+            )
+            return (
+                pairs.select(F.col("id_a").alias("doc_id"))
+                .union(pairs.select(F.col("id_b").alias("doc_id")))
+                .distinct()
+                .localCheckpoint(eager=True)
+            )
     return near_dup_participants_collapsed(docs, max_bucket_size=valve)
 
 
@@ -1507,31 +1466,29 @@ def text_levenshtein_fuzzy(spark, sf_dir):
     )
     from boann_ocsf_security_data_platform_spark.operators.dedup import (
         minhash_near_dup_pairs,
-        release_caches,
     )
 
     docs, valve, pin = _docs_gated_with_pin(spark, sf_dir)
-    pairs = minhash_near_dup_pairs(
-        docs, max_bucket_size=valve, pin_shuffle_join=pin
-    )
     p = docs.select(
         "doc_id", F.substring(normalize_text(F.col("text")), 1, 30).alias("prefix")
     )
     a = p.select(F.col("doc_id").alias("id_a"), F.col("prefix").alias("p_a"))
     b = p.select(F.col("doc_id").alias("id_b"), F.col("prefix").alias("p_b"))
-    out = (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.levenshtein("p_a", "p_b").cast("long").alias("edit_dist"),
+    with cache_scope():
+        pairs = minhash_near_dup_pairs(
+            docs, max_bucket_size=valve, pin_shuffle_join=pin
         )
-        .filter(F.col("edit_dist") <= 5)
-        .localCheckpoint(eager=True)  # materialize so the caches can go
-    )
-    release_caches(pairs)
-    return out
+        return (
+            pairs.join(a, "id_a")
+            .join(b, "id_b")
+            .select(
+                "id_a",
+                "id_b",
+                F.levenshtein("p_a", "p_b").cast("long").alias("edit_dist"),
+            )
+            .filter(F.col("edit_dist") <= 5)
+            .localCheckpoint(eager=True)  # so the caches can go
+        )
 
 
 @_q(
@@ -3424,12 +3381,11 @@ def q18_large_volume_customers(spark, sf_dir):
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders")
     l = _t(spark, sf_dir, "lineitem")
-    big = (
+    big = materialize(
         l.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("_q"))
         .filter(F.col("_q") > 300)
         .select(F.col("l_orderkey").alias("_bk"))
-        .persist(StorageLevel.MEMORY_AND_DISK_DESER)
     )
     # one long per qualifying order: 5M keys ≈ 40 MB broadcast build
     big_side = F.broadcast(big) if big.count() <= 5_000_000 else big
@@ -3485,9 +3441,8 @@ def q21_waiting_suppliers(spark, sf_dir):
     (ClusteredDistribution accepts a key subset), fused BOTH
     lineitem⋈orders sort-merge joins, the four rollup hash-agg levels
     and the qualifying join into ONE exchange-free pipeline — 5 sorts +
-    3 SMJ buffers per task, OOM at the default 8g heap. Persisting
-    `lines` DISK_ONLY above the fact gate (the parts_abc_xyz
-    discipline) halves the fact scan AND caps any single pipeline at a
+    3 SMJ buffers per task, OOM at the default 8g heap. Materializing
+    `lines` halves the fact scan AND caps any single pipeline at a
     plain-SMJ sorter footprint (pinned via tools/plan_audit.py's
     sorter-pipeline gate). Identical result (oracle hash unchanged;
     pinned in tests/test_round11_ops.py)."""
@@ -3496,16 +3451,15 @@ def q21_waiting_suppliers(spark, sf_dir):
     l = _t(spark, sf_dir, "lineitem")
     late_cut = F.col("o_orderdate") + F.expr("INTERVAL 365 DAYS")
     pin = _gates.pin_shuffle_join_fact(_table_count(spark, sf_dir, "lineitem"))
-    lines = (
+    lines = materialize(
         l.select("l_orderkey", "l_suppkey", "l_shipdate")
         .join(o, F.col("o_orderkey") == F.col("l_orderkey"))
         .select(
             "l_orderkey",
             "l_suppkey",
             (F.col("l_shipdate") > late_cut).alias("is_late"),
-        )
-    ).persist(
-        StorageLevel.DISK_ONLY if pin else StorageLevel.MEMORY_AND_DISK_DESER
+        ),
+        disk=pin,
     )
     # (orderkey, suppkey) grain first — map-side partial combine shrinks
     # the shuffle to distinct pairs; both follow-up aggs and the join
@@ -3899,10 +3853,9 @@ def semantic_dedup_survivors(spark, sf_dir):
         # reps feeds the pair pipeline AND the final anti-join: both
         # consumers re-ran the replica collapse, and the two vec_id
         # joins fused into one 5-sorter region (round-12 scan-all find).
-        # The scale arm only runs above HUBNESS_EXACT_MAX_ROWS, so the
-        # persist goes straight to DISK_ONLY (the parts_abc_xyz
-        # discipline; vectors are wide — keep them off the heap).
-        reps = exact_vector_dedup(e).persist(StorageLevel.DISK_ONLY)
+        # The scale arm only runs above HUBNESS_EXACT_MAX_ROWS, so it is
+        # fact-sized by construction (vectors are wide).
+        reps = materialize(exact_vector_dedup(e), disk=True)
         return semantic_dedup(
             reps, threshold=0.3, target_bucket_size=_HUBNESS_LSH_TARGET_BUCKET
         )
@@ -5779,9 +5732,6 @@ def dedup_duplicate_spans(spark, sf_dir):
     (what a distributed suffix array would shuffle anyway) + one
     semi-join; production hashes spans to 8-byte keys
     (operators/text.py:duplicate_span_stats)."""
-    from boann_ocsf_security_data_platform_spark.operators.dedup import (
-        release_caches,
-    )
     from boann_ocsf_security_data_platform_spark.operators.text import (
         duplicate_span_stats,
     )
@@ -5792,15 +5742,14 @@ def dedup_duplicate_spans(spark, sf_dir):
     # pins sort-merge; below it, verbatim strings = the oracle-hashed arm
     n_docs = _table_count(spark, sf_dir, "documents")
     gated = n_docs > _gates.LSH_VALVE_MIN_ROWS
-    res = duplicate_span_stats(
-        _t(spark, sf_dir, "documents"),
-        n=8,
-        hash_keys=gated,
-        pin_shuffle_join=gated,
-    )
-    out = res.localCheckpoint(eager=True)  # materialize; the span cache can go
-    release_caches(res)
-    return out
+    with cache_scope():
+        res = duplicate_span_stats(
+            _t(spark, sf_dir, "documents"),
+            n=8,
+            hash_keys=gated,
+            pin_shuffle_join=gated,
+        )
+        return res.localCheckpoint(eager=True)  # so the span cache can go
 
 
 @_q(
@@ -6356,7 +6305,7 @@ def window_distribution_ranks(spark, sf_dir):
     so rank == row_number and all three functions are closed-form in
     the per-priority rank r and count n: percent_rank = (r-1)/(n-1),
     cume_dist = r/n, and ntile's remainder rule is the same expression
-    :func:`_bucketed_ntile` uses. r decomposes through global price
+    :func:`_bucketed_ntiles` uses. r decomposes through global price
     buckets exactly as in the other bucketed windows — equal prices
     share a bucket (:func:`_order_buckets`), so r = per-(priority,
     lower-bucket) prefix count + in-(priority, bucket) row_number over
@@ -6592,18 +6541,11 @@ def agg_pareto_abc(spark, sf_dir):
     persisted (r12 VERDICT #6): it feeds FOUR consumers — the
     approxQuantile sketch action, the scalar total, the bucket prefix
     table and the classed aggregate — and unpersisted each re-ran the
-    fact scan + customer rollup (4 scans of orders; DISK_ONLY above the
-    fact gate, the q21 discipline)."""
+    fact scan + customer rollup (4 scans of orders)."""
     o = _t(spark, sf_dir, "orders")
-    c = (
-        o.groupBy("o_custkey")
-        .agg(F.sum("o_totalprice").alias("rev"))
-        .persist(
-            StorageLevel.DISK_ONLY
-            if _table_count(spark, sf_dir, "orders")
-            > _gates.PIN_FACT_MIN_ROWS
-            else StorageLevel.MEMORY_AND_DISK_DESER
-        )
+    c = materialize(
+        o.groupBy("o_custkey").agg(F.sum("o_totalprice").alias("rev")),
+        disk=_table_count(spark, sf_dir, "orders") > _gates.PIN_FACT_MIN_ROWS,
     )
     tot = c.agg(F.sum("rev").alias("tot"))
     b = _order_buckets(c, "rev", ascending=False)
@@ -6705,43 +6647,40 @@ def dedup_minhash_eval(spark, sf_dir):
     from boann_ocsf_security_data_platform_spark.operators.dedup import (
         minhash_near_dup_pairs,
         ngram_jaccard_pairs,
-        release_caches,
     )
 
     docs, valve, pin = _docs_gated_with_pin(spark, sf_dir)
-    cand = minhash_near_dup_pairs(
-        docs, max_bucket_size=valve, pin_shuffle_join=pin
-    ).select("id_a", "id_b")
-    truth = ngram_jaccard_pairs(
-        docs, threshold=0.5, pin_shuffle_join=pin
-    ).select("id_a", "id_b")
     src = docs.select("doc_id", "source")
-    cand_ss = (
-        cand.join(src.withColumnRenamed("doc_id", "id_a"), "id_a")
-        .withColumnRenamed("source", "src_a")
-        .join(src.withColumnRenamed("doc_id", "id_b"), "id_b")
-        .where(F.col("src_a") == F.col("source"))
-        .select("id_a", "id_b")
-    )
-    hits = truth.join(cand, ["id_a", "id_b"], "left_semi")
-    row = (
-        truth.agg(F.count(F.lit(1)).alias("n_truth"))
-        .crossJoin(cand_ss.agg(F.count(F.lit(1)).alias("n_cand_same_source")))
-        .crossJoin(hits.agg(F.count(F.lit(1)).alias("n_hits")))
-        .select(
-            "n_truth",
-            "n_cand_same_source",
-            "n_hits",
-            F.round(F.col("n_hits") / F.col("n_truth"), 6).alias("recall"),
-            F.round(
-                F.col("n_hits") / F.col("n_cand_same_source"), 6
-            ).alias("precision"),
+    with cache_scope():
+        cand = minhash_near_dup_pairs(
+            docs, max_bucket_size=valve, pin_shuffle_join=pin
+        ).select("id_a", "id_b")
+        truth = ngram_jaccard_pairs(
+            docs, threshold=0.5, pin_shuffle_join=pin
+        ).select("id_a", "id_b")
+        cand_ss = (
+            cand.join(src.withColumnRenamed("doc_id", "id_a"), "id_a")
+            .withColumnRenamed("source", "src_a")
+            .join(src.withColumnRenamed("doc_id", "id_b"), "id_b")
+            .where(F.col("src_a") == F.col("source"))
+            .select("id_a", "id_b")
         )
-        .localCheckpoint(eager=True)
-    )
-    release_caches(cand)
-    release_caches(truth)
-    return row
+        hits = truth.join(cand, ["id_a", "id_b"], "left_semi")
+        return (
+            truth.agg(F.count(F.lit(1)).alias("n_truth"))
+            .crossJoin(cand_ss.agg(F.count(F.lit(1)).alias("n_cand_same_source")))
+            .crossJoin(hits.agg(F.count(F.lit(1)).alias("n_hits")))
+            .select(
+                "n_truth",
+                "n_cand_same_source",
+                "n_hits",
+                F.round(F.col("n_hits") / F.col("n_truth"), 6).alias("recall"),
+                F.round(
+                    F.col("n_hits") / F.col("n_cand_same_source"), 6
+                ).alias("precision"),
+            )
+            .localCheckpoint(eager=True)
+        )
 
 
 _COS_T = (
@@ -6795,10 +6734,9 @@ def knn_truncated_recall(spark, sf_dir):
     # query spine consumed it — unpersisted, the spine branch re-ran the
     # whole scan, and the bounded-by-construction joins sort-merged on
     # fact-scaling estimates, fusing 4 sorters into one region (round-12
-    # scan-all find). Persist the tiny frame; broadcast the bounded sides.
-    full = cosine_topk(emb, q, k=5).select(
-        "query_id", "neighbor_id"
-    ).persist(StorageLevel.MEMORY_AND_DISK_DESER)
+    # scan-all find). Materialize the tiny frame; broadcast the bounded
+    # sides.
+    full = materialize(cosine_topk(emb, q, k=5).select("query_id", "neighbor_id"))
     tr = emb.withColumn("embedding", F.slice("embedding", 1, 16))
     trunc = cosine_topk(tr, tr.where(F.col("vec_id") < 10), k=5).select(
         "query_id", "neighbor_id"
@@ -7048,11 +6986,13 @@ def feature_psi_drift(spark, sf_dir):
     # (both binned() broadcasts, the spine, and their recomputes via j)
     # each re-ran it — round-12 sorter-pipeline scan found the
     # duplicated subtrees fusing 5 sorters into one region at sf10.
-    # Persist the bounded frame; every branch then reads 5 cached rows.
-    th = _percentiles_by_group(
-        spark, sf_dir, ref, "lineitem",
-        "flag", "x", [(i / 10, f"t{i}") for i in range(1, 10)],
-    ).persist(StorageLevel.MEMORY_AND_DISK_DESER)
+    # Materialize the bounded frame; every branch then reads 5 cached rows.
+    th = materialize(
+        _percentiles_by_group(
+            spark, sf_dir, ref, "lineitem",
+            "flag", "x", [(i / 10, f"t{i}") for i in range(1, 10)],
+        )
+    )
     bin_expr = sum(
         (F.col("x") > F.col(f"t{i}")).cast("int") for i in range(1, 10)
     ).alias("bin")
@@ -7073,7 +7013,7 @@ def feature_psi_drift(spark, sf_dir):
     # planner sort-merged them — fusing 3 sorts + 2 SMJs into one region
     # (round-12 scan-all find). Explicit bounded broadcast, the
     # pair-entry broadcast-budget discipline.
-    j = (
+    j = materialize(
         spine.join(F.broadcast(binned(ref).withColumnRenamed("n", "np")), ["flag", "bin"], "left")
         .join(F.broadcast(binned(cur).withColumnRenamed("n", "nq")), ["flag", "bin"], "left")
         .select(
@@ -7082,7 +7022,7 @@ def feature_psi_drift(spark, sf_dir):
             F.coalesce("np", F.lit(0)).alias("np"),
             F.coalesce("nq", F.lit(0)).alias("nq"),
         )
-    ).persist(StorageLevel.MEMORY_AND_DISK_DESER)
+    )
     # j is 50 bounded rows but carries BOTH fact-slice bin rollups in its
     # lineage; the totals branch and the share branch each re-ran them.
     tot = j.groupBy("flag").agg(
@@ -7129,17 +7069,11 @@ def agg_gini_coefficient(spark, sf_dir):
     row_number — exact integers); n and Σx ride ONE broadcast scalar
     row. The rollup is persisted (r12 VERDICT #6): it feeds the sketch
     action, the (n, tot) scalar, the prefix table and the ranked frame —
-    unpersisted, 4 fact scans (DISK_ONLY above the fact gate)."""
+    unpersisted, 4 fact scans."""
     o = _t(spark, sf_dir, "orders")
-    c = (
-        o.groupBy("o_custkey")
-        .agg(F.sum("o_totalprice").alias("rev"))
-        .persist(
-            StorageLevel.DISK_ONLY
-            if _table_count(spark, sf_dir, "orders")
-            > _gates.PIN_FACT_MIN_ROWS
-            else StorageLevel.MEMORY_AND_DISK_DESER
-        )
+    c = materialize(
+        o.groupBy("o_custkey").agg(F.sum("o_totalprice").alias("rev")),
+        disk=_table_count(spark, sf_dir, "orders") > _gates.PIN_FACT_MIN_ROWS,
     )
     nt = c.agg(
         F.count(F.lit(1)).alias("n"), F.sum("rev").alias("tot")
@@ -8782,9 +8716,6 @@ def graph_link_prediction(spark, sf_dir):
     resolution primitive. Work is the wedge bound (sum deg^2) via the
     triangle-count join shape, never |V|^2.
     operators/graph.py:jaccard_link_prediction."""
-    from boann_ocsf_security_data_platform_spark.operators.dedup import (
-        release_caches,
-    )
     from boann_ocsf_security_data_platform_spark.operators.graph import (
         jaccard_link_prediction,
     )
@@ -8804,12 +8735,11 @@ def graph_link_prediction(spark, sf_dir):
         .select(F.col("x.pk").alias("a"), F.col("y.pk").alias("b"))
         .distinct()
     )
-    scored = jaccard_link_prediction(
-        edges, k=50, pin_shuffle_join=_gates.pin_shuffle_join_fact(_table_count(spark, sf_dir, "lineitem"))
-    )
-    out = scored.localCheckpoint(eager=True)  # materialize, then free caches
-    release_caches(scored)
-    return out
+    with cache_scope():
+        scored = jaccard_link_prediction(
+            edges, k=50, pin_shuffle_join=_gates.pin_shuffle_join_fact(_table_count(spark, sf_dir, "lineitem"))
+        )
+        return scored.localCheckpoint(eager=True)  # so the caches can go
 
 
 @_q("agg_approx_percentiles")
@@ -9953,7 +9883,6 @@ def corpus_dedup_report(spark, sf_dir):
         cluster_pairs,
         exact_dedup,
         minhash_near_dup_pairs,
-        release_caches,
         replica_map,
     )
 
@@ -9970,71 +9899,71 @@ def corpus_dedup_report(spark, sf_dir):
         else None
     )
     if n_docs <= HUBNESS_EXACT_MAX_ROWS:
-        pairs = minhash_near_dup_pairs(docs, max_bucket_size=valve)
-        n_pairs = pairs.count()  # while the shingle caches are live
-        clusters = cluster_pairs(pairs)  # eager, checkpointed
-        release_caches(pairs)
+        with cache_scope():
+            pairs = minhash_near_dup_pairs(docs, max_bucket_size=valve)
+            n_pairs = pairs.count()  # while the shingle caches are live
+            clusters = cluster_pairs(pairs)  # eager, checkpointed
     else:
         # round 9, collapse-and-expand (see _near_dup_clusters_gated):
         # the FULL-corpus pair count expands exactly from representative
         # pairs and copy counts — a candidate pair exists between any
         # copies of adjacent texts, plus every within-text copy pair:
         #   n_pairs = Σ_(a,b)∈rep_pairs n_a·n_b + Σ_t C(n_t, 2)
-        m = replica_map(docs).persist()
-        reps = docs.join(
-            m.filter(F.col("doc_id") == F.col("rep_id"))
-            .select("doc_id")
-            .hint("merge"),
-            "doc_id",
-        )
-        rep_pairs = minhash_near_dup_pairs(reps, max_bucket_size=valve)
-        cnt = (
-            m.groupBy("rep_id")
-            .agg(F.first("n_copies").alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        cross = (
-            rep_pairs.join(
-                cnt.select(
-                    F.col("rep_id").alias("id_a"), F.col("n").alias("n_a")
-                ).hint("merge"),
-                "id_a",
+        with cache_scope():
+            m = materialize(replica_map(docs))
+            reps = docs.join(
+                m.filter(F.col("doc_id") == F.col("rep_id"))
+                .select("doc_id")
+                .hint("merge"),
+                "doc_id",
             )
-            .join(
-                cnt.select(
-                    F.col("rep_id").alias("id_b"), F.col("n").alias("n_b")
-                ).hint("merge"),
-                "id_b",
-            )
-            .agg(F.coalesce(F.sum(F.col("n_a") * F.col("n_b")), F.lit(0)))
-            .collect()[0][0]
-        )
-        within = (
-            cnt.agg(
-                F.coalesce(
-                    F.sum(F.col("n") * (F.col("n") - 1) / 2), F.lit(0)
+            with cache_scope():
+                rep_pairs = minhash_near_dup_pairs(reps, max_bucket_size=valve)
+                cnt = (
+                    m.groupBy("rep_id")
+                    .agg(F.first("n_copies").alias("n"))
+                    .localCheckpoint(eager=True)
                 )
-            ).collect()[0][0]
-        )
-        n_pairs = int(cross) + int(within)
-        repcl = cluster_pairs(rep_pairs)
-        release_caches(rep_pairs)
-        clusters = (
-            m.join(
-                repcl.hint("merge"), m.rep_id == repcl.node, "left"
+                cross = (
+                    rep_pairs.join(
+                        cnt.select(
+                            F.col("rep_id").alias("id_a"), F.col("n").alias("n_a")
+                        ).hint("merge"),
+                        "id_a",
+                    )
+                    .join(
+                        cnt.select(
+                            F.col("rep_id").alias("id_b"), F.col("n").alias("n_b")
+                        ).hint("merge"),
+                        "id_b",
+                    )
+                    .agg(F.coalesce(F.sum(F.col("n_a") * F.col("n_b")), F.lit(0)))
+                    .collect()[0][0]
+                )
+                within = (
+                    cnt.agg(
+                        F.coalesce(
+                            F.sum(F.col("n") * (F.col("n") - 1) / 2), F.lit(0)
+                        )
+                    ).collect()[0][0]
+                )
+                n_pairs = int(cross) + int(within)
+                repcl = cluster_pairs(rep_pairs)
+            clusters = (
+                m.join(
+                    repcl.hint("merge"), m.rep_id == repcl.node, "left"
+                )
+                .where(
+                    (F.col("n_copies") > 1) | F.col("cluster_id").isNotNull()
+                )
+                .select(
+                    F.col("doc_id").alias("node"),
+                    F.coalesce("cluster_id", F.col("rep_id")).alias(
+                        "cluster_id"
+                    ),
+                )
+                .localCheckpoint(eager=True)
             )
-            .where(
-                (F.col("n_copies") > 1) | F.col("cluster_id").isNotNull()
-            )
-            .select(
-                F.col("doc_id").alias("node"),
-                F.coalesce("cluster_id", F.col("rep_id")).alias(
-                    "cluster_id"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-        m.unpersist()
     cl_row = clusters.agg(
         F.count_distinct("cluster_id").alias("c"),
         F.sum(
@@ -10397,7 +10326,7 @@ def feature_quantile_binning(spark, sf_dir):
     row — is closed-form in (r, n). Bit-identical bins, bucket-parallel
     sort."""
     o = _t(spark, sf_dir, "orders").select("o_totalprice", "o_orderkey")
-    b = _bucketed_ntile(o, "o_totalprice", "o_orderkey", 10)
+    b = _bucketed_ntiles(o, [("o_totalprice", True, "bin")], "o_orderkey", 10)
     return b.groupBy(F.col("bin").cast("long").alias("bin")).agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.min("o_totalprice"), 2).alias("lo"),
@@ -10542,12 +10471,12 @@ def join_fuzzy_entity_resolution(spark, sf_dir):
         # with the candidate join, so unpersisted they FUSE into one
         # 4-sorter region (round-12 scan-all find) — and the probe side
         # would re-run the cap. The scale arm only runs above
-        # FUZZY_EXACT_MAX_ROWS, so persist straight to DISK_ONLY.
-        capped = (
+        # FUZZY_EXACT_MAX_ROWS, so it is fact-sized by construction.
+        capped = materialize(
             pp.withColumn("_crn", F.row_number().over(wb))
             .filter(F.col("_crn") <= FUZZY_MAX_BLOCK_CAND)
-            .drop("_crn")
-            .persist(StorageLevel.DISK_ONLY)
+            .drop("_crn"),
+            disk=True,
         )
         return pp, capped
 
@@ -11470,16 +11399,17 @@ def graph_community_modularity(spark, sf_dir):
         .distinct()
     )
     a, b = li.alias("a"), li.alias("b")
-    ec = (
+    ec = materialize(
         a.join(b, "ok")
         .where(F.col("a.pk") < F.col("b.pk"))
         .select(F.col("a.pk").alias("u"), F.col("b.pk").alias("v"))
         .distinct()
-        .persist()
     )
-    labels = label_propagation(
-        ec.select(F.col("u").alias("src"), F.col("v").alias("dst")), iters=3
-    ).persist()
+    labels = materialize(
+        label_propagation(
+            ec.select(F.col("u").alias("src"), F.col("v").alias("dst")), iters=3
+        )
+    )
     e2 = ec.select(F.col("u").alias("x")).unionAll(
         ec.select(F.col("v").alias("x"))
     )
@@ -11512,17 +11442,12 @@ def graph_community_modularity(spark, sf_dir):
     )
     n_nodes = labels.count()
     n_comms = dsum.count()
-    out = terms.join(F.broadcast(m)).agg(
+    return terms.join(F.broadcast(m)).agg(
         F.lit(n_comms).cast("long").alias("n_communities"),
         F.lit(n_nodes).cast("long").alias("n_nodes"),
         F.max("mm").cast("long").alias("n_edges"),
         F.round(F.sum("q"), 6).alias("modularity"),
     )
-    from boann_ocsf_security_data_platform_spark.operators.dedup import (
-        _register_caches,
-    )
-
-    return _register_caches(out, [ec, labels])
 
 
 @_q(
@@ -11642,19 +11567,19 @@ def parts_abc_xyz_classification(spark, sf_dir):
     )
     # The part-grain frame is consumed four times (quantile sketch,
     # bucket-prefix branch, total branch, main) and its lineage is the
-    # expensive double rollup of the lineitem fact — pin it so the fact
-    # is read once (DISK_ONLY above the fact gate, the
-    # graph_degree_assortativity discipline; isolated sf100: 365 s of
-    # recomputes -> one rollup).
+    # expensive double rollup of the lineitem fact — materialize it so
+    # the fact is read once (isolated sf100: 365 s of recomputes -> one
+    # rollup).
     pin = _gates.pin_shuffle_join_fact(_table_count(spark, sf_dir, "lineitem"))
-    per_part = pm.groupBy("pk").agg(
-        F.sum("rev").alias("rev"),
-        F.when(
-            F.avg("qty") > 0, F.stddev_samp("qty") / F.avg("qty")
-        ).alias("cv"),
-        F.count(F.lit(1)).alias("n_months"),
-    ).persist(
-        StorageLevel.DISK_ONLY if pin else StorageLevel.MEMORY_AND_DISK_DESER
+    per_part = materialize(
+        pm.groupBy("pk").agg(
+            F.sum("rev").alias("rev"),
+            F.when(
+                F.avg("qty") > 0, F.stddev_samp("qty") / F.avg("qty")
+            ).alias("cv"),
+            F.count(F.lit(1)).alias("n_months"),
+        ),
+        disk=pin,
     )
     # Bucketed running sum (round-11: the global Window.orderBy funneled
     # the whole part grain — 20M rows at sf100 — through one task; see
@@ -11974,14 +11899,14 @@ def feature_woe_information_value(spark, sf_dir):
     priority column is the correct reading. The supervised sibling of
     feature_quantile_binning beside feature_loo_target_encoding."""
     # bucket-decomposed exact ntile (round 11 — the literal ntile was a
-    # global single-task fact sort; see _bucketed_ntile)
-    b = _bucketed_ntile(
+    # global single-task fact sort; see _bucketed_ntiles)
+    b = _bucketed_ntiles(
         _t(spark, sf_dir, "orders").select(
             "o_totalprice",
             "o_orderkey",
             (F.col("o_orderpriority") == "1-URGENT").cast("int").alias("y"),
         ),
-        "o_totalprice",
+        [("o_totalprice", True, "bin")],
         "o_orderkey",
         10,
     )
@@ -12490,14 +12415,12 @@ def graph_degree_assortativity(spark, sf_dir):
     # broadcast builds of the derived degree table. Above the fact gate
     # the edge cache goes DISK_ONLY and the degree joins pin sort-merge.
     pin = _gates.pin_shuffle_join_fact(_table_count(spark, sf_dir, "lineitem"))
-    ec = (
+    ec = materialize(
         a.join(b, "ok")
         .where(F.col("a.pk") < F.col("b.pk"))
         .select(F.col("a.pk").alias("u"), F.col("b.pk").alias("v"))
-        .distinct()
-        .persist(
-            StorageLevel.DISK_ONLY if pin else StorageLevel.MEMORY_AND_DISK_DESER
-        )
+        .distinct(),
+        disk=pin,
     )
     e2 = ec.select(F.col("u").alias("x"), F.col("v").alias("y")).unionAll(
         ec.select(F.col("v").alias("x"), F.col("u").alias("y"))
@@ -12507,7 +12430,7 @@ def graph_degree_assortativity(spark, sf_dir):
     n_nodes = deg.count()
     da = _pin(deg.select(F.col("x").alias("_a"), F.col("d").alias("da")), pin)
     db = _pin(deg.select(F.col("x").alias("_b"), F.col("d").alias("db")), pin)
-    out = (
+    return (
         e2.join(da, e2.x == da._a)
         .join(db, e2.y == db._b)
         .agg(
@@ -12516,11 +12439,6 @@ def graph_degree_assortativity(spark, sf_dir):
             F.round(F.corr("da", "db"), 6).alias("assortativity"),
         )
     )
-    from boann_ocsf_security_data_platform_spark.operators.dedup import (
-        _register_caches,
-    )
-
-    return _register_caches(out, [ec])
 
 
 @_q(
@@ -12569,10 +12487,8 @@ def text_heaps_law_fit(spark, sf_dir):
     # both the first-occurrence aggregate and the per-doc token totals
     # (the BM25 lesson — re-deriving the explode per aggregate is the
     # 100 TB cost)
-    per_doc_term = (
-        w.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
+    per_doc_term = materialize(
+        w.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("c"))
     )
     first_doc = per_doc_term.groupBy("term").agg(F.min("doc_id").alias("fd"))
     tok_per_doc = per_doc_term.groupBy("doc_id").agg(
@@ -12593,7 +12509,7 @@ def text_heaps_law_fit(spark, sf_dir):
     )
     lv = "ln(CAST(v_cum AS DOUBLE))"
     ln = "ln(CAST(n_cum AS DOUBLE))"
-    out = curve.agg(
+    return curve.agg(
         F.count(F.lit(1)).alias("n_points"),
         F.round(F.expr(f"regr_slope({lv}, {ln})"), 6).alias("heaps_beta"),
         F.round(F.exp(F.expr(f"regr_intercept({lv}, {ln})")), 4).alias(
@@ -12602,11 +12518,6 @@ def text_heaps_law_fit(spark, sf_dir):
         F.max("v_cum").cast("long").alias("final_vocab"),
         F.max("n_cum").cast("long").alias("final_tokens"),
     )
-    from boann_ocsf_security_data_platform_spark.operators.dedup import (
-        _register_caches,
-    )
-
-    return _register_caches(out, [per_doc_term])
 
 
 @_q(
@@ -15659,44 +15570,41 @@ def graph_katz_centrality(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
     s = _t(spark, sf_dir, "supplier")
-    e = (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, l.l_suppkey == s.s_suppkey)
-        .select(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
-        )
-        .distinct()
-        .persist()
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    ranks = nodes.select("node", F.lit(1.0).alias("c")).localCheckpoint(
-        eager=True
-    )
-    for _ in range(4):
-        contrib = (
-            e.join(ranks, e.src == ranks.node)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("c").alias("sc"))
-        )
-        ranks = (
-            nodes.join(contrib, "node", "left")
+    with cache_scope():
+        e = materialize(
+            l.join(o, l.l_orderkey == o.o_orderkey)
+            .join(c, o.o_custkey == c.c_custkey)
+            .join(s, l.l_suppkey == s.s_suppkey)
             .select(
-                "node",
-                F.round(
-                    0.1 * F.coalesce("sc", F.lit(0.0)) + 1.0, 8
-                ).alias("c"),
+                F.col("c_nationkey").alias("src"),
+                F.col("s_nationkey").alias("dst"),
             )
-            .localCheckpoint(eager=True)
+            .distinct()
         )
-    e.unpersist()
-    nodes.unpersist()
+        nodes = materialize(
+            e.select(F.col("src").alias("node"))
+            .union(e.select(F.col("dst").alias("node")))
+            .distinct()
+        )
+        ranks = nodes.select("node", F.lit(1.0).alias("c")).localCheckpoint(
+            eager=True
+        )
+        for _ in range(4):
+            contrib = (
+                e.join(ranks, e.src == ranks.node)
+                .groupBy(F.col("dst").alias("node"))
+                .agg(F.sum("c").alias("sc"))
+            )
+            ranks = (
+                nodes.join(contrib, "node", "left")
+                .select(
+                    "node",
+                    F.round(
+                        0.1 * F.coalesce("sc", F.lit(0.0)) + 1.0, 8
+                    ).alias("c"),
+                )
+                .localCheckpoint(eager=True)
+            )
     return ranks.select(
         F.col("node").alias("nationkey"), F.round("c", 6).alias("katz")
     )
@@ -16241,37 +16149,36 @@ def graph_harmonic_closeness(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
     s = _t(spark, sf_dir, "supplier")
-    e = (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, l.l_suppkey == s.s_suppkey)
-        .select(
-            F.col("c_nationkey").alias("src"),
-            F.col("s_nationkey").alias("dst"),
+    with cache_scope():
+        e = materialize(
+            l.join(o, l.l_orderkey == o.o_orderkey)
+            .join(c, o.o_custkey == c.c_custkey)
+            .join(s, l.l_suppkey == s.s_suppkey)
+            .select(
+                F.col("c_nationkey").alias("src"),
+                F.col("s_nationkey").alias("dst"),
+            )
+            .distinct()
         )
-        .distinct()
-        .persist()
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    dist = nodes.select(
-        F.col("node").alias("s"), "node", F.lit(0).cast("long").alias("d")
-    ).localCheckpoint(eager=True)
-    for _ in range(5):
-        expanded = (
-            dist.join(e, dist.node == e.src)
-            .select("s", F.col("dst").alias("node"), (F.col("d") + 1).alias("d"))
+        nodes = (
+            e.select(F.col("src").alias("node"))
+            .union(e.select(F.col("dst").alias("node")))
+            .distinct()
         )
-        dist = (
-            dist.unionByName(expanded)
-            .groupBy("s", "node")
-            .agg(F.min("d").alias("d"))
-            .localCheckpoint(eager=True)
-        )
-    e.unpersist()
+        dist = nodes.select(
+            F.col("node").alias("s"), "node", F.lit(0).cast("long").alias("d")
+        ).localCheckpoint(eager=True)
+        for _ in range(5):
+            expanded = (
+                dist.join(e, dist.node == e.src)
+                .select("s", F.col("dst").alias("node"), (F.col("d") + 1).alias("d"))
+            )
+            dist = (
+                dist.unionByName(expanded)
+                .groupBy("s", "node")
+                .agg(F.min("d").alias("d"))
+                .localCheckpoint(eager=True)
+            )
     reached = F.col("d") > 0
     return dist.groupBy(F.col("s").alias("nationkey")).agg(
         F.count(F.when(reached, 1)).alias("n_reached"),
@@ -16755,24 +16662,20 @@ def agg_kruskal_wallis(spark, sf_dir):
     # broadcast"). Same estimate-driven-broadcast class as round 9.
     pin = _gates.pin_shuffle_join_fact(_table_count(spark, sf_dir, "orders"))
     c = _pin(_t(spark, sf_dir, "customer"), pin)
-    pv = (
+    # pv feeds the distinct-value table AND the per-group rank join —
+    # unmaterialized, the orders⋈customer join ran once per consumer
+    # (in-suite 6.4 s at sf0.1 for what is one small join; the plan
+    # showed five fact-join subtrees counting _cum_before's internal
+    # fan-out)
+    pv = materialize(
         o.join(c, o.o_custkey == c.c_custkey)
         .select(
             F.col("o_totalprice").alias("v"),
             F.col("c_mktsegment").alias("g"),
         )
         .groupBy("v", "g")
-        .agg(F.count(F.lit(1)).alias("n_vg"))
-        # fan-out persist (round 13): pv feeds the distinct-value table
-        # AND the per-group rank join — unpersisted, the orders⋈customer
-        # join ran once per consumer (in-suite 6.4 s at sf0.1 for what is
-        # one small join; the plan showed five fact-join subtrees
-        # counting _cum_before's internal fan-out)
-        .persist(
-            StorageLevel.DISK_ONLY
-            if pin
-            else StorageLevel.MEMORY_AND_DISK_DESER
-        )
+        .agg(F.count(F.lit(1)).alias("n_vg")),
+        disk=pin,
     )
     vals = pv.groupBy("v").agg(F.sum("n_vg").alias("tn"))
     # bucket-parallel exclusive cum-count (round 11, ADVICE r10 #1: the
@@ -18761,113 +18664,111 @@ def feature_mrmr_selection(spark, sf_dir):
     per_l = l.groupBy("l_orderkey").agg(
         F.count(F.lit(1)).alias("cnt"), F.sum("l_quantity").alias("qty")
     )
-    per = (
-        o.join(c, o.o_custkey == c.c_custkey)
-        .join(per_l, o.o_orderkey == per_l.l_orderkey)
-        .select(
-            F.col("o_orderkey").alias("okey"),
-            F.col("cnt").cast("string").alias("f_nlines"),
-            F.floor(F.col("qty") / 100).cast("long").cast("string").alias("f_qty"),
-            F.month(F.col("o_orderdate").cast("date"))
-            .cast("string")
-            .alias("f_month"),
-            F.floor(F.col("c_acctbal") / 2000)
-            .cast("long")
-            .cast("string")
-            .alias("f_bal"),
-            F.col("o_orderpriority").alias("f_pri"),
-            F.col("c_mktsegment").alias("f_seg"),
-            (F.col("o_totalprice") >= 150000).alias("hi"),
+    # the (okey, 6 features, label) frame is consumed THREE times —
+    # count, relevance collect, redundancy collect — and its lineage is
+    # the one expensive scan here (orders ⋈ customer ⋈ a full lineitem
+    # rollup). Materialize it so the fact tables are read once — on disk,
+    # not localCheckpoint (round-10 sf100 find): this is a 150M-row
+    # fact-grain frame at sf100, and memory-resident blocks occupy the
+    # unified region's protected storage half, so a later hash aggregate
+    # in the same session can fail UNABLE_TO_ACQUIRE while the identical
+    # plan passes in a fresh session.
+    with cache_scope():
+        per = materialize(
+            o.join(c, o.o_custkey == c.c_custkey)
+            .join(per_l, o.o_orderkey == per_l.l_orderkey)
+            .select(
+                F.col("o_orderkey").alias("okey"),
+                F.col("cnt").cast("string").alias("f_nlines"),
+                F.floor(F.col("qty") / 100).cast("long").cast("string").alias("f_qty"),
+                F.month(F.col("o_orderdate").cast("date"))
+                .cast("string")
+                .alias("f_month"),
+                F.floor(F.col("c_acctbal") / 2000)
+                .cast("long")
+                .cast("string")
+                .alias("f_bal"),
+                F.col("o_orderpriority").alias("f_pri"),
+                F.col("c_mktsegment").alias("f_seg"),
+                (F.col("o_totalprice") >= 150000).alias("hi"),
+            ),
+            disk=True,
         )
-        # the (okey, 6 features, label) frame is consumed THREE times —
-        # count, relevance collect, redundancy collect — and its lineage
-        # is the one expensive scan here (orders ⋈ customer ⋈ a full
-        # lineitem rollup). Pin it so the fact tables are read once —
-        # DISK_ONLY, not localCheckpoint (round-10 sf100 find): this is
-        # a 150M-row fact-grain frame at sf100, and memory-resident
-        # blocks occupy the unified region's protected storage half, so
-        # a later hash aggregate in the same session can fail
-        # UNABLE_TO_ACQUIRE while the identical plan passes in a fresh
-        # session. Disk blocks keep the read-once property without
-        # competing with execution memory; unpersisted before return.
-        .persist(StorageLevel.DISK_ONLY)
-    )
-    lng = per.selectExpr(
-        "okey",
-        "stack(6, 'nlines', f_nlines, 'qty', f_qty, 'month', f_month, "
-        "'bal', f_bal, 'pri', f_pri, 'seg', f_seg) AS (feat, bin)",
-        "hi",
-    )
-    nn = float(per.count())
-    rc = lng.groupBy("feat", "bin", "hi").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    rb = rc.groupBy("feat", "bin").agg(F.sum("c").alias("cb"))
-    rl = rc.groupBy("feat", "hi").agg(F.sum("c").alias("cl"))
-    rel = (
-        rc.join(rb, ["feat", "bin"])
-        .join(rl, ["feat", "hi"])
-        .groupBy("feat")
-        .agg(
-            F.round(
-                F.sum(
-                    (F.col("c") / nn)
-                    * F.log(
-                        (F.col("c") * nn)
-                        / (F.col("cb") * F.col("cl").cast("double"))
-                    )
-                ),
-                6,
-            ).alias("rel")
+        lng = per.selectExpr(
+            "okey",
+            "stack(6, 'nlines', f_nlines, 'qty', f_qty, 'month', f_month, "
+            "'bal', f_bal, 'pri', f_pri, 'seg', f_seg) AS (feat, bin)",
+            "hi",
         )
-    )
-    # pairwise joint contingencies straight off the WIDE frame: one
-    # 15-pair stack projection + a map-side-combined aggregate. Replaces
-    # the original 6x-explode self-join on the order key (round 9 — the
-    # join shuffled 6n rows against themselves to produce the same 15n
-    # pair instances this projection emits for free); row set identical,
-    # fa < fb lexicographic exactly like the old a.feat < b.feat.
-    feat_cols = {
-        "nlines": "f_nlines", "qty": "f_qty", "month": "f_month",
-        "bal": "f_bal", "pri": "f_pri", "seg": "f_seg",
-    }
-    ordered = sorted(feat_cols)
-    stack_args = ", ".join(
-        f"'{fa}', '{fb}', {feat_cols[fa]}, {feat_cols[fb]}"
-        for i, fa in enumerate(ordered)
-        for fb in ordered[i + 1:]
-    )
-    pc = (
-        per.selectExpr(f"stack(15, {stack_args}) AS (fa, fb, ba, bb)")
-        .groupBy("fa", "fb", "ba", "bb")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    pa = pc.groupBy("fa", "fb", "ba").agg(F.sum("c").alias("ca"))
-    pb = pc.groupBy("fa", "fb", "bb").agg(F.sum("c").alias("cb"))
-    red = (
-        pc.join(pa, ["fa", "fb", "ba"])
-        .join(pb, ["fa", "fb", "bb"])
-        .groupBy("fa", "fb")
-        .agg(
-            F.round(
-                F.sum(
-                    (F.col("c") / nn)
-                    * F.log(
-                        (F.col("c") * nn)
-                        / (F.col("ca") * F.col("cb").cast("double"))
-                    )
-                ),
-                6,
-            ).alias("mi")
+        nn = float(per.count())
+        rc = lng.groupBy("feat", "bin", "hi").agg(
+            F.count(F.lit(1)).alias("c")
         )
-    )
-    # bounded model state: 6 relevances + 15 pairwise MIs
-    rel_m = {r.feat: r.rel for r in rel.collect()}
-    mi_m = {}
-    for r in red.collect():
-        mi_m[(r.fa, r.fb)] = r.mi
-        mi_m[(r.fb, r.fa)] = r.mi
-    per.unpersist()  # both consumers have collected; free the disk blocks
+        rb = rc.groupBy("feat", "bin").agg(F.sum("c").alias("cb"))
+        rl = rc.groupBy("feat", "hi").agg(F.sum("c").alias("cl"))
+        rel = (
+            rc.join(rb, ["feat", "bin"])
+            .join(rl, ["feat", "hi"])
+            .groupBy("feat")
+            .agg(
+                F.round(
+                    F.sum(
+                        (F.col("c") / nn)
+                        * F.log(
+                            (F.col("c") * nn)
+                            / (F.col("cb") * F.col("cl").cast("double"))
+                        )
+                    ),
+                    6,
+                ).alias("rel")
+            )
+        )
+        # pairwise joint contingencies straight off the WIDE frame: one
+        # 15-pair stack projection + a map-side-combined aggregate. Replaces
+        # the original 6x-explode self-join on the order key (round 9 — the
+        # join shuffled 6n rows against themselves to produce the same 15n
+        # pair instances this projection emits for free); row set identical,
+        # fa < fb lexicographic exactly like the old a.feat < b.feat.
+        feat_cols = {
+            "nlines": "f_nlines", "qty": "f_qty", "month": "f_month",
+            "bal": "f_bal", "pri": "f_pri", "seg": "f_seg",
+        }
+        ordered = sorted(feat_cols)
+        stack_args = ", ".join(
+            f"'{fa}', '{fb}', {feat_cols[fa]}, {feat_cols[fb]}"
+            for i, fa in enumerate(ordered)
+            for fb in ordered[i + 1:]
+        )
+        pc = (
+            per.selectExpr(f"stack(15, {stack_args}) AS (fa, fb, ba, bb)")
+            .groupBy("fa", "fb", "ba", "bb")
+            .agg(F.count(F.lit(1)).alias("c"))
+        )
+        pa = pc.groupBy("fa", "fb", "ba").agg(F.sum("c").alias("ca"))
+        pb = pc.groupBy("fa", "fb", "bb").agg(F.sum("c").alias("cb"))
+        red = (
+            pc.join(pa, ["fa", "fb", "ba"])
+            .join(pb, ["fa", "fb", "bb"])
+            .groupBy("fa", "fb")
+            .agg(
+                F.round(
+                    F.sum(
+                        (F.col("c") / nn)
+                        * F.log(
+                            (F.col("c") * nn)
+                            / (F.col("ca") * F.col("cb").cast("double"))
+                        )
+                    ),
+                    6,
+                ).alias("mi")
+            )
+        )
+        # bounded model state: 6 relevances + 15 pairwise MIs
+        rel_m = {r.feat: r.rel for r in rel.collect()}
+        mi_m = {}
+        for r in red.collect():
+            mi_m[(r.fa, r.fb)] = r.mi
+            mi_m[(r.fb, r.fa)] = r.mi
     picks = []
     s1 = sorted(rel_m.items(), key=lambda kv: (-kv[1], kv[0]))[0]
     picks.append((1, s1[0], s1[1]))
@@ -19928,19 +19829,16 @@ def agg_conformal_interval(spark, sf_dir):
     l = _t(spark, sf_dir, "lineitem")
     o = _t(spark, sf_dir, "orders")
     per = l.groupBy("l_orderkey").agg(F.sum("l_quantity").alias("qty"))
-    j = per.join(o, per.l_orderkey == o.o_orderkey).select(
-        F.col("qty").cast("double").alias("x"),
-        F.col("o_totalprice").alias("y"),
-        (F.col("o_orderkey") % 2 == 0).alias("is_cal"),
-        # fan-out persist (round 13): j feeds the OLS fit, the
-        # calibration-score branch, and the coverage evaluation —
-        # unpersisted, each re-ran the lineitem rollup + orders join
-        # (three fact passes; DISK_ONLY above the fact gate, the q21
-        # discipline)
-    ).persist(
-        StorageLevel.DISK_ONLY
-        if _table_count(spark, sf_dir, "lineitem") > _gates.PIN_FACT_MIN_ROWS
-        else StorageLevel.MEMORY_AND_DISK_DESER
+    # j feeds the OLS fit, the calibration-score branch, and the coverage
+    # evaluation — unmaterialized, each re-ran the lineitem rollup +
+    # orders join (three fact passes)
+    j = materialize(
+        per.join(o, per.l_orderkey == o.o_orderkey).select(
+            F.col("qty").cast("double").alias("x"),
+            F.col("o_totalprice").alias("y"),
+            (F.col("o_orderkey") % 2 == 0).alias("is_cal"),
+        ),
+        disk=_table_count(spark, sf_dir, "lineitem") > _gates.PIN_FACT_MIN_ROWS,
     )
     fit = j.filter(~F.col("is_cal")).agg(
         F.regr_slope("y", "x").alias("b1"),
@@ -20338,17 +20236,17 @@ def corpus_importance_ess(spark, sf_dir):
     # scoring pipeline (round-12 sorter-pipeline scan: 5 sorters in one
     # region at sf10). `d` also feeds BOTH the per-source max branch and
     # the weight branch: unpersisted, the broadcast side recomputed the
-    # ENTIRE hashed-bigram DSIR pipeline — pin it above the docs gate,
-    # the parts_abc_xyz branch-recompute discipline.
+    # ENTIRE hashed-bigram DSIR pipeline — so it is materialized.
     doc_pin = _gates.pin_shuffle_join(_table_count(spark, sf_dir, "documents"))
-    d = dsir_importance(
-        corpus, target, pin_shuffle_join=doc_pin, carry_cols=("source",)
-    ).select(
-        "doc_id",
-        "source",
-        F.coalesce("dsir_logweight", F.lit(0.0)).alias("lw"),
-    ).persist(
-        StorageLevel.DISK_ONLY if doc_pin else StorageLevel.MEMORY_AND_DISK_DESER
+    d = materialize(
+        dsir_importance(
+            corpus, target, pin_shuffle_join=doc_pin, carry_cols=("source",)
+        ).select(
+            "doc_id",
+            "source",
+            F.coalesce("dsir_logweight", F.lit(0.0)).alias("lw"),
+        ),
+        disk=doc_pin,
     )
     mx = d.groupBy("source").agg(F.max("lw").alias("mlw"))
     w = d.join(F.broadcast(mx), "source").select(
@@ -22530,15 +22428,16 @@ def embedding_hubness_profile(spark, sf_dir):
     # `fullk` feeds the broadcast moment frame AND the central-moment
     # aggregate: unpersisted, the broadcast side recomputed the entire
     # blocked pair pipeline (round-12 sorter-pipeline scan found the
-    # duplicated subtree fusing 4 sorters at sf10) — pin the k-occurrence
-    # vector (one int per embedding) above the measured-count gate.
+    # duplicated subtree fusing 4 sorters at sf10) — so the k-occurrence
+    # vector (one int per embedding) is materialized.
     hub_pin = _gates.pin_shuffle_join(
         _table_count(spark, sf_dir, "embeddings")
     )
-    fullk = e.select("vec_id").join(
-        occ, e.vec_id == occ.nid, "left"
-    ).select(F.coalesce("k_occ", F.lit(0)).alias("k")).persist(
-        StorageLevel.DISK_ONLY if hub_pin else StorageLevel.MEMORY_AND_DISK_DESER
+    fullk = materialize(
+        e.select("vec_id")
+        .join(occ, e.vec_id == occ.nid, "left")
+        .select(F.coalesce("k_occ", F.lit(0)).alias("k")),
+        disk=hub_pin,
     )
     m = fullk.agg(
         F.count(F.lit(1)).alias("n"),
@@ -22678,7 +22577,12 @@ def agg_friedman_test(spark, sf_dir):
     windows over 5-row partitions."""
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
-    m = (
+    # bounded (month, segment) table (~5 rows per month) consumed by BOTH
+    # the complete-blocks spine and the rank join: unmaterialized, the
+    # spine branch re-ran the fact rollup, and the estimate-driven
+    # sort-merge join fused with the rank window's sort into a 4-sorter
+    # region (round-12 scan-all find)
+    m = materialize(
         o.join(c, o.o_custkey == c.c_custkey)
         .groupBy(
             (
@@ -22688,12 +22592,6 @@ def agg_friedman_test(spark, sf_dir):
             F.col("c_mktsegment").alias("seg"),
         )
         .agg(F.round(F.avg("o_totalprice"), 4).alias("v"))
-        # bounded (month, segment) table (~5 rows per month) consumed by
-        # BOTH the complete-blocks spine and the rank join: unpersisted,
-        # the spine branch re-ran the fact rollup, and the estimate-driven
-        # sort-merge join fused with the rank window's sort into a
-        # 4-sorter region (round-12 scan-all find)
-        .persist(StorageLevel.MEMORY_AND_DISK_DESER)
     )
     full_b = (
         m.groupBy("blk")
@@ -23186,19 +23084,19 @@ def corpus_ccnet_buckets(spark, sf_dir):
     # an existing aggregate already holds). `sc` also feeds BOTH the
     # broadcast min/max cut frame and the bucket aggregate —
     # unpersisted, the broadcast side recomputed the entire bigram-LM
-    # pipeline — so pin it above the docs gate, the parts_abc_xyz
-    # discipline.
+    # pipeline — so it is materialized.
     ccnet_pin = _gates.pin_shuffle_join(_table_count(spark, sf_dir, "documents"))
     docs2 = docs.select("doc_id", "text", "source")
-    sc = bigram_lm_score(
-        docs2, pin_shuffle_join=ccnet_pin, carry_cols=("source",)
-    ).filter(F.col("lm_score").isNotNull()).select(
-        "doc_id",
-        "source",
-        (F.col("n_bigrams") + F.lit(1)).cast("long").alias("n_tokens"),
-        F.round("lm_score", 6).alias("s"),
-    ).persist(
-        StorageLevel.DISK_ONLY if ccnet_pin else StorageLevel.MEMORY_AND_DISK_DESER
+    sc = materialize(
+        bigram_lm_score(
+            docs2, pin_shuffle_join=ccnet_pin, carry_cols=("source",)
+        ).filter(F.col("lm_score").isNotNull()).select(
+            "doc_id",
+            "source",
+            (F.col("n_bigrams") + F.lit(1)).cast("long").alias("n_tokens"),
+            F.round("lm_score", 6).alias("s"),
+        ),
+        disk=ccnet_pin,
     )
     mm = sc.agg(F.min("s").alias("s0"), F.max("s").alias("s1"))
     tier = F.least(

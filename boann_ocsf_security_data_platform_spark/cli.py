@@ -88,13 +88,18 @@ def cmd_ingest(args) -> int:
     from pyspark.sql import functions as F
 
     from .plans.landing import land
-    from .sources.ocsf import explode_findings, lacks_uid, split_findings
+    from .sources.ocsf import (
+        explode_findings,
+        lacks_uid,
+        read_ocsf_files,
+        split_findings,
+    )
 
     if not args.input_file.endswith(".ocsf.json"):
         print(f"error: not an .ocsf.json file: {args.input_file}", file=sys.stderr)
         return 1
     spark = _spark(args)
-    findings = spark.read.option("wholetext", True).text(args.input_file).select(
+    findings = read_ocsf_files(spark.read, args.input_file).select(
         split_findings(F.col("value")).alias("_findings")
     )
     # one aggregate over the file verdict, then the write: nothing lands
@@ -273,8 +278,8 @@ def cmd_corpus_clean(args) -> int:
     library operator; the output is the surviving corpus plus a JSON
     accounting line (rows in/out per stage) so a scheduler can alert on
     anomalous shrinkage."""
+    from .operators.cache import cache_scope
     from .operators.dedup import (
-        cache_scope,
         cluster_pairs,
         decontaminate,
         exact_dedup,
@@ -467,15 +472,18 @@ def cmd_query(args) -> int:
             file=_sys.stderr,
         )
         return 2
+    from .operators.cache import cache_scope
+
     spark = _spark(args)
-    df = qs[args.name](spark, args.sf_dir)
-    if args.limit:
-        df = df.limit(args.limit)
-    if args.json:
-        for row in df.toJSON().collect():
-            print(row)
-    else:
-        df.show(n=args.limit or 20, truncate=False)
+    with cache_scope():
+        df = qs[args.name](spark, args.sf_dir)
+        if args.limit:
+            df = df.limit(args.limit)
+        if args.json:
+            for row in df.toJSON().collect():
+                print(row)
+        else:
+            df.show(n=args.limit or 20, truncate=False)
     return 0
 
 

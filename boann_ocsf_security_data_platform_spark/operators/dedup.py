@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hash_fns import hash64, hash64_fast, normalize_text  # noqa: F401
+from .cache import cache_scope, materialize
 
 logger = logging.getLogger(__name__)
 
@@ -39,88 +40,6 @@ def _xor_constant(j: int) -> int:
     """Deterministic 60-bit MinHash permutation constant (same formula the
     DuckDB oracle uses)."""
     return int(hashlib.md5(f"minhash-perm-{j}".encode()).hexdigest()[:15], 16)
-
-
-#: every persisted intermediate any dedup/similarity operator registered and
-#: has not yet released — the process-wide safety net behind the per-result
-#: handles (see :func:`release_all_caches`).
-_LIVE_CACHES: list[DataFrame] = []
-
-
-def _register_caches(result: DataFrame, cached: list[DataFrame]) -> DataFrame:
-    """Attach persisted intermediates to the result so callers own their
-    lifecycle: the returned (lazy) DataFrame still needs them, so they
-    cannot be unpersisted here. Call :func:`release_caches` after the
-    consuming action. Long-lived sessions (the monitor) would otherwise
-    accumulate cached blocks across runs."""
-    result._boann_caches = getattr(result, "_boann_caches", []) + cached
-    _LIVE_CACHES.extend(cached)
-    return result
-
-
-def release_caches(df: DataFrame) -> None:
-    """Blocking-unpersist every intermediate a dedup/similarity operator
-    cached on behalf of ``df``. Idempotent.
-
-    MUST be called on the EXACT DataFrame object the operator returned:
-    the handle rides on that object, so any further transformation
-    (``.filter``/``.select``/…) yields a new object without it and the call
-    becomes a silent no-op. Either release before deriving, keep a
-    reference to the original, or fall back to :func:`release_all_caches`.
-    """
-    for c in getattr(df, "_boann_caches", []):
-        c.unpersist(blocking=True)
-        try:
-            _LIVE_CACHES.remove(c)
-        except ValueError:
-            pass
-    df._boann_caches = []
-
-
-def release_all_caches() -> None:
-    """Unpersist EVERY intermediate any dedup/similarity operator has
-    registered in this process and not yet released — the EMERGENCY valve
-    for when neither a :func:`cache_scope` nor the exact returned object is
-    in hand (unpersist on an already-released plan is a no-op, so this is
-    always safe between pipeline runs). Prefer :func:`cache_scope`."""
-    while _LIVE_CACHES:
-        _LIVE_CACHES.pop().unpersist(blocking=True)
-
-
-class cache_scope:
-    """Scope-based lifecycle for operator-persisted intermediates — the
-    handle that CANNOT silently no-op.
-
-    :func:`release_caches` must be called on the exact DataFrame object an
-    operator returned; any derivation (``.filter``/``.select``) drops the
-    attribute and the release becomes a no-op. This context manager
-    instead releases by REGISTRATION WINDOW: every intermediate persisted
-    by operators invoked inside the ``with`` block is unpersisted on exit,
-    no matter how the results were transformed in between::
-
-        with cache_scope():
-            pairs = minhash_near_dup_pairs(docs)
-            pairs.filter("jaccard > 0.9").count()   # derived — still fine
-        # all intermediates from the block are unpersisted here
-
-    Scopes nest (each releases only its own window); exceptions inside the
-    block still release (``finally`` semantics). ``scope.release()`` frees
-    early without leaving the block. One Spark caveat: the CacheManager
-    dedupes identical plans, so if an inner scope persists the SAME plan an
-    outer scope already holds, the inner release drops the shared entry —
-    the outer result stays correct (it recomputes), it just loses the
-    cache benefit."""
-
-    def __enter__(self) -> "cache_scope":
-        self._mark = len(_LIVE_CACHES)
-        return self
-
-    def release(self) -> None:
-        while len(_LIVE_CACHES) > self._mark:
-            _LIVE_CACHES.pop().unpersist(blocking=True)
-
-    def __exit__(self, *exc) -> None:
-        self.release()
 
 
 def _ensure_parallelism(df: DataFrame) -> DataFrame:
@@ -371,8 +290,8 @@ def lsh_candidate_pairs(
         exploded = exploded.join(
             F.broadcast(big), ["band_idx", "band_hash"], "left_anti"
         )
-    # both sides of the self-join; caller releases via release_caches()
-    exploded = exploded.persist()
+    # both sides of the self-join read it
+    exploded = materialize(exploded)
 
     a = exploded.alias("a")
     b = _corpus_sized(exploded.alias("b"), pin_shuffle_join)
@@ -388,7 +307,7 @@ def lsh_candidate_pairs(
         )
         .distinct()
     )
-    return _register_caches(pairs, [exploded])
+    return pairs
 
 
 def minhash_near_dup_pairs(
@@ -411,13 +330,11 @@ def minhash_near_dup_pairs(
     of the Jaccard verification join, and Spark re-evaluates an unpersisted
     subplan once per use (measured ~50× blowup on the sibling n-gram
     operator). At warehouse scale, materialize shingles as a table instead.
-    Caller releases the cached intermediates with :func:`release_caches`
-    after consuming the result.
+    The caller's :func:`cache_scope` releases the cached intermediates.
     """
-    sh = (
+    sh = materialize(
         with_hashed_shingles(_ensure_parallelism(df), text_col, k, hash_fn=hash_fn)
         .select(id_col, "shingle_hashes")
-        .persist()
     )
     sig = minhash_signature(
         sh, shingle_col="shingle_hashes", n_hashes=n_hashes, pre_hashed=True
@@ -431,7 +348,7 @@ def minhash_near_dup_pairs(
         pin_shuffle_join=pin_shuffle_join,
     )
     if jaccard_threshold is None:
-        return _register_caches(pairs, [sh])
+        return pairs
     sh_a = _corpus_sized(
         sh.select(
             F.col(id_col).alias("id_a"),
@@ -461,7 +378,7 @@ def minhash_near_dup_pairs(
         .filter(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return _register_caches(verified, getattr(pairs, "_boann_caches", []) + [sh])
+    return verified
 
 
 def _unconverged(name: str, max_iter: int, on_max_iter: str) -> None:
@@ -500,41 +417,43 @@ def connected_components(
     alternation (same join shapes, O(log n) rounds).
     """
     e = pairs.select(F.col(id_col_a).alias("a"), F.col(id_col_b).alias("b"))
-    edges = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct().persist()
-    labels = (
-        edges.select("a")
-        .distinct()
-        .select(F.col("a").alias("node"), F.col("a").alias("label"))
-        .localCheckpoint(eager=True)
-    )
-    converged = False
-    for _ in range(max_iter):
-        nbr_min = (
-            edges.join(labels, edges.a == labels.node)
-            .groupBy("b")
-            .agg(F.min("label").alias("nbr_label"))
+    with cache_scope():
+        edges = materialize(
+            e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
         )
-        new_labels = (
-            labels.join(nbr_min, labels.node == nbr_min.b, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_label", F.col("label"))
-                ).alias("label"),
-            )
+        labels = (
+            edges.select("a")
+            .distinct()
+            .select(F.col("a").alias("node"), F.col("a").alias("label"))
             .localCheckpoint(eager=True)
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    edges.unpersist()
+        converged = False
+        for _ in range(max_iter):
+            nbr_min = (
+                edges.join(labels, edges.a == labels.node)
+                .groupBy("b")
+                .agg(F.min("label").alias("nbr_label"))
+            )
+            new_labels = (
+                labels.join(nbr_min, labels.node == nbr_min.b, "left")
+                .select(
+                    "node",
+                    F.least(
+                        F.col("label"), F.coalesce("nbr_label", F.col("label"))
+                    ).alias("label"),
+                )
+                .localCheckpoint(eager=True)
+            )
+            changed = (
+                new_labels.alias("n")
+                .join(labels.alias("o"), "node")
+                .filter(F.col("n.label") != F.col("o.label"))
+                .count()
+            )
+            labels = new_labels
+            if changed == 0:
+                converged = True
+                break
     if not converged:
         _unconverged("connected_components", max_iter, on_max_iter)
     return labels.select("node", F.col("label").alias("cluster_id"))
@@ -644,25 +563,24 @@ def cluster_pairs(
       into hundreds of shuffle rounds.
     """
     if algorithm == "auto":
-        pairs = pairs.persist()
-        n_pairs = pairs.count()
-        algorithm = (
-            "two_phase" if n_pairs > two_phase_pair_threshold else "iterative"
-        )
-        fn = (
-            connected_components_two_phase
-            if algorithm == "two_phase"
-            else connected_components
-        )
-        out = fn(
-            pairs,
-            id_col_a,
-            id_col_b,
-            **({"max_iter": max_iter} if max_iter is not None else {}),
-            on_max_iter=on_max_iter,
-        )
-        pairs.unpersist()
-        return out
+        with cache_scope():
+            pairs = materialize(pairs)
+            n_pairs = pairs.count()
+            algorithm = (
+                "two_phase" if n_pairs > two_phase_pair_threshold else "iterative"
+            )
+            fn = (
+                connected_components_two_phase
+                if algorithm == "two_phase"
+                else connected_components
+            )
+            return fn(
+                pairs,
+                id_col_a,
+                id_col_b,
+                **({"max_iter": max_iter} if max_iter is not None else {}),
+                on_max_iter=on_max_iter,
+            )
     if algorithm == "iterative":
         fn = connected_components
     elif algorithm == "two_phase":
@@ -742,13 +660,12 @@ def containment_pairs(
     set within id_b's; both directions appear when both clear the
     threshold.
     """
-    arr = (
+    # array form: the explode below re-derives cheaply
+    arr = materialize(
         with_hashed_shingles(_ensure_parallelism(df), text_col, k)
         .select(F.col(id_col), "shingle_hashes")
-        .persist()  # array form: the explode below re-derives cheaply
     )
     sh = arr.select(F.col(id_col), F.explode("shingle_hashes").alias("_sh"))
-    cached = [arr]
     # TRUE set sizes — always from the uncapped shingle sets, so the valve
     # below can only shrink the measured intersection, never the
     # denominator: capped containment <= true containment, one-sided loss
@@ -761,8 +678,7 @@ def containment_pairs(
             .select("_sh")
         )
         # the hot set is bounded (few grams exceed a sane cap) — broadcast
-        sh = sh.join(F.broadcast(hot), "_sh", "left_anti").persist()
-        cached.append(sh)
+        sh = materialize(sh.join(F.broadcast(hot), "_sh", "left_anti"))
     a = sh.select(F.col(id_col).alias("id_a"), "_sh")
     b = _corpus_sized(
         sh.select(F.col(id_col).alias("id_b"), "_sh"), pin_shuffle_join
@@ -789,7 +705,7 @@ def containment_pairs(
         .filter(F.col("containment") >= threshold)
         .select("id_a", "id_b", "containment")
     )
-    return _register_caches(out, cached)
+    return out
 
 
 def simhash16(
@@ -843,10 +759,9 @@ def ngram_jaccard_pairs(
     """
     # persisted: reused by the sizes lookup and both join sides (see
     # minhash_near_dup_pairs docstring for the re-evaluation blowup)
-    sh = (
+    sh = materialize(
         with_hashed_shingles(_ensure_parallelism(df), text_col, k, hash_fn=hash_fn)
         .select(block_col, id_col, F.col("shingle_hashes"))
-        .persist()
     )
     sizes = sh.select(id_col, F.size("shingle_hashes").alias("n_sh"))
     # integer shingles end-to-end: same distinct-count semantics
@@ -888,7 +803,7 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return _register_caches(out, [sh])
+    return out
 
 
 def prefix_filter_jaccard_pairs(
@@ -931,7 +846,7 @@ def prefix_filter_jaccard_pairs(
     freq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("freq"))
     # re-aggregate each doc's tokens sorted by (global freq, token): struct
     # ordering makes array_sort give the canonical rarest-first order
-    sorted_docs = (
+    sorted_docs = materialize(
         tok.join(  # freq is vocabulary-sized
             _corpus_sized(freq, pin_shuffle_join), "token"
         )
@@ -955,7 +870,6 @@ def prefix_filter_jaccard_pairs(
                 + 1,
             ),
         )
-        .persist()
     )
     prefixes = sorted_docs.select(
         "id", "sz", F.explode("prefix").alias("token")
@@ -1006,7 +920,7 @@ def prefix_filter_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return _register_caches(out, [sorted_docs])
+    return out
 
 
 def cross_corpus_jaccard_pairs(
@@ -1038,28 +952,23 @@ def cross_corpus_jaccard_pairs(
     (one-sided loss on pairs whose every shared gram is corpus-hot) —
     unset, the result is exact.
     """
-    new_sh = (
+    new_sh = materialize(
         with_hashed_shingles(_ensure_parallelism(new_df), text_col, k, hash_fn=hash_fn)
         .select(F.col(id_col).alias("new_id"), "shingle_hashes")
-        .persist()
     )
-    idx_sh = (
+    idx_sh = materialize(
         with_hashed_shingles(_ensure_parallelism(index_df), text_col, k, hash_fn=hash_fn)
         .select(F.col(id_col).alias("index_id"), "shingle_hashes")
-        .persist()
     )
     new_tok = new_sh.select("new_id", F.explode("shingle_hashes").alias("_sh"))
     idx_tok = idx_sh.select("index_id", F.explode("shingle_hashes").alias("_sh"))
-    cached = [new_sh, idx_sh]
     if max_shingle_df is not None:
-        hot = (
+        hot = materialize(
             idx_tok.groupBy("_sh")
             .agg(F.count(F.lit(1)).alias("_df"))
             .filter(F.col("_df") > max_shingle_df)
             .select("_sh")
-            .persist()
         )
-        cached.append(hot)
         new_tok = new_tok.join(F.broadcast(hot), "_sh", "left_anti")
         idx_tok = idx_tok.join(F.broadcast(hot), "_sh", "left_anti")
     inter = (
@@ -1089,7 +998,7 @@ def cross_corpus_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("new_id", "index_id", "jaccard")
     )
-    return _register_caches(out, cached)
+    return out
 
 
 def weighted_jaccard_pairs(
@@ -1119,12 +1028,11 @@ def weighted_jaccard_pairs(
     input here). |A∪B| weight = W_A + W_B − I, so no union materializes.
     The blocking column bounds join fan-out exactly as in the unweighted
     operator."""
-    sh = (
+    sh = materialize(
         with_hashed_shingles(
             _ensure_parallelism(df), text_col, k, hash_fn=hash_fn
         )
         .select(block_col, id_col, F.col("shingle_hashes"))
-        .persist()
     )
     ex = sh.select(
         block_col, id_col, F.explode("shingle_hashes").alias("shingle")
@@ -1174,7 +1082,7 @@ def weighted_jaccard_pairs(
         .filter(F.col("wjaccard") >= threshold)
         .select("id_a", "id_b", "wjaccard")
     )
-    return _register_caches(out, [sh])
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1240,37 +1148,36 @@ def near_dup_clusters_collapsed(
     proof above) at linear cost in the corpus. ``max_bucket_size`` valves
     the REPRESENTATIVE-level banding (distinct texts), where a hot bucket
     is genuine boilerplate rather than replication."""
-    m = replica_map(df, text_col, id_col).persist()
-    reps = df.join(
-        _corpus_sized(
-            m.filter(F.col(id_col) == F.col("rep_id")).select(id_col)
-        ),
-        id_col,
-    )
-    pairs = minhash_near_dup_pairs(
-        reps,
-        text_col,
-        id_col,
-        k=k,
-        n_hashes=n_hashes,
-        n_bands=n_bands,
-        max_bucket_size=max_bucket_size,
-    )
-    repcl = cluster_pairs(pairs)  # eager (localCheckpoint'd)
-    release_caches(pairs)
-    out = (
-        m.join(
-            _corpus_sized(repcl), m.rep_id == repcl.node, "left"
+    with cache_scope():
+        m = materialize(replica_map(df, text_col, id_col))
+        reps = df.join(
+            _corpus_sized(
+                m.filter(F.col(id_col) == F.col("rep_id")).select(id_col)
+            ),
+            id_col,
         )
-        .where((F.col("n_copies") > 1) | F.col("cluster_id").isNotNull())
-        .select(
-            F.col(id_col).alias("node"),
-            F.coalesce("cluster_id", F.col("rep_id")).alias("cluster_id"),
+        with cache_scope():
+            pairs = minhash_near_dup_pairs(
+                reps,
+                text_col,
+                id_col,
+                k=k,
+                n_hashes=n_hashes,
+                n_bands=n_bands,
+                max_bucket_size=max_bucket_size,
+            )
+            repcl = cluster_pairs(pairs)  # eager (localCheckpoint'd)
+        return (
+            m.join(
+                _corpus_sized(repcl), m.rep_id == repcl.node, "left"
+            )
+            .where((F.col("n_copies") > 1) | F.col("cluster_id").isNotNull())
+            .select(
+                F.col(id_col).alias("node"),
+                F.coalesce("cluster_id", F.col("rep_id")).alias("cluster_id"),
+            )
+            .localCheckpoint(eager=True)  # pin so the mapping cache can go
         )
-        .localCheckpoint(eager=True)  # pin so the mapping cache can go
-    )
-    m.unpersist()
-    return out
 
 
 def near_dup_participants_collapsed(
@@ -1287,35 +1194,34 @@ def near_dup_participants_collapsed(
     ``minhash_near_dup_pairs(df)`` without enumerating replica pairs:
     a doc participates iff its text has >= 2 copies (replica clique) OR
     its representative participates at the representative level."""
-    m = replica_map(df, text_col, id_col).persist()
-    reps = df.join(
-        _corpus_sized(
-            m.filter(F.col(id_col) == F.col("rep_id")).select(id_col)
-        ),
-        id_col,
-    )
-    pairs = minhash_near_dup_pairs(
-        reps,
-        text_col,
-        id_col,
-        k=k,
-        n_hashes=n_hashes,
-        n_bands=n_bands,
-        max_bucket_size=max_bucket_size,
-    )
-    part = (
-        pairs.select(F.col("id_a").alias("rep_id"))
-        .union(pairs.select(F.col("id_b").alias("rep_id")))
-        .distinct()
-        .localCheckpoint(eager=True)  # pin before releasing shingle caches
-    )
-    release_caches(pairs)
-    out = (
-        m.join(_corpus_sized(part), "rep_id", "left_semi")
-        .select(id_col)
-        .union(m.filter(F.col("n_copies") > 1).select(id_col))
-        .distinct()
-        .localCheckpoint(eager=True)  # pin so the mapping cache can go
-    )
-    m.unpersist()
-    return out
+    with cache_scope():
+        m = materialize(replica_map(df, text_col, id_col))
+        reps = df.join(
+            _corpus_sized(
+                m.filter(F.col(id_col) == F.col("rep_id")).select(id_col)
+            ),
+            id_col,
+        )
+        with cache_scope():
+            pairs = minhash_near_dup_pairs(
+                reps,
+                text_col,
+                id_col,
+                k=k,
+                n_hashes=n_hashes,
+                n_bands=n_bands,
+                max_bucket_size=max_bucket_size,
+            )
+            part = (
+                pairs.select(F.col("id_a").alias("rep_id"))
+                .union(pairs.select(F.col("id_b").alias("rep_id")))
+                .distinct()
+                .localCheckpoint(eager=True)  # pin before releasing shingle caches
+            )
+        return (
+            m.join(_corpus_sized(part), "rep_id", "left_semi")
+            .select(id_col)
+            .union(m.filter(F.col("n_copies") > 1).select(id_col))
+            .distinct()
+            .localCheckpoint(eager=True)  # pin so the mapping cache can go
+        )

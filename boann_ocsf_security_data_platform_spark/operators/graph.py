@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _register_caches
+from .cache import cache_scope, materialize
 
 
 def _graph_sized(df: DataFrame, pin: bool = True) -> DataFrame:
@@ -68,53 +68,50 @@ def pagerank(
         .cast("double")
         .alias("w"),
     )
-    e = (
-        e.groupBy("src", "dst")
-        .agg(F.sum("w").alias("w"))
-        .persist()
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()  # bounded scalar: graph order, not data volume
-    outw = e.groupBy("src").agg(F.sum("w").alias("w_out")).persist()
-    ranks = nodes.select(
-        "node", F.round(F.lit(1.0 / n), decimals).alias("r")
-    ).localCheckpoint(eager=True)
-    teleport = (1.0 - damping) / n
-    for _ in range(iters):
-        # the dangling mass rides a broadcast ONE-ROW frame instead of a
-        # driver collect, so each iteration is a single job (the
-        # checkpoint materialization) rather than collect + recompute
-        dangling = (
-            ranks.join(outw, ranks.node == outw.src, "left_anti")
-            .agg(F.coalesce(F.sum("r"), F.lit(0.0)).alias("_dang"))
+    with cache_scope():
+        e = materialize(
+            e.groupBy("src", "dst")
+            .agg(F.sum("w").alias("w"))
         )
-        contrib = (
-            e.join(ranks, e.src == ranks.node)
-            .join(outw, "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("r") * F.col("w") / F.col("w_out")).alias("c"))
+        nodes = materialize(
+            e.select(F.col("src").alias("node"))
+            .union(e.select(F.col("dst").alias("node")))
+            .distinct()
         )
-        ranks = (
-            nodes.join(contrib, nodes.node == contrib.dst, "left")
-            .join(F.broadcast(dangling))
-            .select(
-                "node",
-                F.round(
-                    F.lit(teleport)
-                    + F.lit(damping)
-                    * (F.coalesce("c", F.lit(0.0)) + F.col("_dang") / F.lit(float(n))),
-                    decimals,
-                ).alias("r"),
+        n = nodes.count()  # bounded scalar: graph order, not data volume
+        outw = materialize(e.groupBy("src").agg(F.sum("w").alias("w_out")))
+        ranks = nodes.select(
+            "node", F.round(F.lit(1.0 / n), decimals).alias("r")
+        ).localCheckpoint(eager=True)
+        teleport = (1.0 - damping) / n
+        for _ in range(iters):
+            # the dangling mass rides a broadcast ONE-ROW frame instead of a
+            # driver collect, so each iteration is a single job (the
+            # checkpoint materialization) rather than collect + recompute
+            dangling = (
+                ranks.join(outw, ranks.node == outw.src, "left_anti")
+                .agg(F.coalesce(F.sum("r"), F.lit(0.0)).alias("_dang"))
             )
-            .localCheckpoint(eager=True)
-        )
-    for c in (e, nodes, outw):
-        c.unpersist()
+            contrib = (
+                e.join(ranks, e.src == ranks.node)
+                .join(outw, "src")
+                .groupBy("dst")
+                .agg(F.sum(F.col("r") * F.col("w") / F.col("w_out")).alias("c"))
+            )
+            ranks = (
+                nodes.join(contrib, nodes.node == contrib.dst, "left")
+                .join(F.broadcast(dangling))
+                .select(
+                    "node",
+                    F.round(
+                        F.lit(teleport)
+                        + F.lit(damping)
+                        * (F.coalesce("c", F.lit(0.0)) + F.col("_dang") / F.lit(float(n))),
+                        decimals,
+                    ).alias("r"),
+                )
+                .localCheckpoint(eager=True)
+            )
     return ranks.select("node", F.col("r").alias("pagerank"))
 
 
@@ -145,59 +142,59 @@ def triangle_count(
     formulation — is quadratic in the hottest vertex's degree instead.
     """
     a, b = F.col(src_col), F.col(dst_col)
-    canon = (
-        edges.where(a != b)
-        .select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
-        .distinct()
-        .persist()
-    )
-    deg = (
-        canon.select(F.col("u").alias("node"))
-        .unionAll(canon.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-    )
-    du, dv = deg.alias("du"), deg.alias("dv")
-    ranked = (
-        canon.join(_graph_sized(du, pin_shuffle_join), F.col("u") == F.col("du.node"))
-        .join(_graph_sized(dv, pin_shuffle_join), F.col("v") == F.col("dv.node"))
-        .select(
-            "u",
-            "v",
-            F.struct(
-                F.col("du.deg").alias("d"), F.col("u").alias("x")
-            ).alias("ru"),
-            F.struct(
-                F.col("dv.deg").alias("d"), F.col("v").alias("x")
-            ).alias("rv"),
+    with cache_scope():
+        canon = materialize(
+            edges.where(a != b)
+            .select(F.least(a, b).alias("u"), F.greatest(a, b).alias("v"))
+            .distinct()
         )
-    )
-    # orient low-rank -> high-rank; keep the rank of the head so wedge
-    # legs can be ordered without re-joining degrees
-    oriented = ranked.select(
-        F.when(F.col("ru") < F.col("rv"), F.col("u")).otherwise(F.col("v")).alias("a"),
-        F.when(F.col("ru") < F.col("rv"), F.col("v")).otherwise(F.col("u")).alias("b"),
-        F.when(F.col("ru") < F.col("rv"), F.col("rv")).otherwise(F.col("ru")).alias("rb"),
-    ).persist()
-    e1, e2 = oriented.alias("e1"), oriented.alias("e2")
-    wedges = e1.join(_graph_sized(e2, pin_shuffle_join), F.col("e1.a") == F.col("e2.a")).where(
-        F.col("e1.rb") < F.col("e2.rb")
-    )
-    # the closing edge {b1,b2} is oriented b1->b2 because rank(b1)<rank(b2)
-    closing = oriented.select(
-        F.col("a").alias("cb1"), F.col("b").alias("cb2")
-    )
-    tri = wedges.join(
-        _graph_sized(closing, pin_shuffle_join),
-        (F.col("e1.b") == F.col("cb1")) & (F.col("e2.b") == F.col("cb2")),
-    ).count()
-    n_nodes = deg.count()
-    n_edges = canon.count()
-    result = canon.sparkSession.createDataFrame(
-        [(n_nodes, n_edges, tri)], "n_nodes long, n_edges long, n_triangles long"
-    )
-    canon.unpersist()
-    oriented.unpersist()
+        deg = (
+            canon.select(F.col("u").alias("node"))
+            .unionAll(canon.select(F.col("v").alias("node")))
+            .groupBy("node")
+            .agg(F.count(F.lit(1)).alias("deg"))
+        )
+        du, dv = deg.alias("du"), deg.alias("dv")
+        ranked = (
+            canon.join(_graph_sized(du, pin_shuffle_join), F.col("u") == F.col("du.node"))
+            .join(_graph_sized(dv, pin_shuffle_join), F.col("v") == F.col("dv.node"))
+            .select(
+                "u",
+                "v",
+                F.struct(
+                    F.col("du.deg").alias("d"), F.col("u").alias("x")
+                ).alias("ru"),
+                F.struct(
+                    F.col("dv.deg").alias("d"), F.col("v").alias("x")
+                ).alias("rv"),
+            )
+        )
+        # orient low-rank -> high-rank; keep the rank of the head so wedge
+        # legs can be ordered without re-joining degrees
+        oriented = materialize(
+            ranked.select(
+                F.when(F.col("ru") < F.col("rv"), F.col("u")).otherwise(F.col("v")).alias("a"),
+                F.when(F.col("ru") < F.col("rv"), F.col("v")).otherwise(F.col("u")).alias("b"),
+                F.when(F.col("ru") < F.col("rv"), F.col("rv")).otherwise(F.col("ru")).alias("rb"),
+            )
+        )
+        e1, e2 = oriented.alias("e1"), oriented.alias("e2")
+        wedges = e1.join(_graph_sized(e2, pin_shuffle_join), F.col("e1.a") == F.col("e2.a")).where(
+            F.col("e1.rb") < F.col("e2.rb")
+        )
+        # the closing edge {b1,b2} is oriented b1->b2 because rank(b1)<rank(b2)
+        closing = oriented.select(
+            F.col("a").alias("cb1"), F.col("b").alias("cb2")
+        )
+        tri = wedges.join(
+            _graph_sized(closing, pin_shuffle_join),
+            (F.col("e1.b") == F.col("cb1")) & (F.col("e2.b") == F.col("cb2")),
+        ).count()
+        n_nodes = deg.count()
+        n_edges = canon.count()
+        result = canon.sparkSession.createDataFrame(
+            [(n_nodes, n_edges, tri)], "n_nodes long, n_edges long, n_triangles long"
+        )
     return result
 
 
@@ -323,31 +320,31 @@ def label_propagation(
     ).unionAll(
         edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b"))
     )
-    e = both.distinct().persist()
-    labels = (
-        e.select(F.col("a").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=True)
-    )
-    from pyspark.sql import Window
-
-    for _ in range(iters):
-        counted = (
-            e.join(labels, e.b == labels.node)
-            .groupBy("a", "label")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        w = Window.partitionBy("a").orderBy(
-            F.col("c").desc(), F.col("label").asc()
-        )
+    with cache_scope():
+        e = materialize(both.distinct())
         labels = (
-            counted.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select(F.col("a").alias("node"), "label")
+            e.select(F.col("a").alias("node"))
+            .distinct()
+            .select("node", F.col("node").alias("label"))
             .localCheckpoint(eager=True)
         )
-    e.unpersist()
+        from pyspark.sql import Window
+
+        for _ in range(iters):
+            counted = (
+                e.join(labels, e.b == labels.node)
+                .groupBy("a", "label")
+                .agg(F.count(F.lit(1)).alias("c"))
+            )
+            w = Window.partitionBy("a").orderBy(
+                F.col("c").desc(), F.col("label").asc()
+            )
+            labels = (
+                counted.withColumn("rn", F.row_number().over(w))
+                .where(F.col("rn") == 1)
+                .select(F.col("a").alias("node"), "label")
+                .localCheckpoint(eager=True)
+            )
     return labels
 
 
@@ -428,11 +425,10 @@ def jaccard_link_prediction(
     exactly like triangle counting at 100 TB.
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    sym = (
+    sym = materialize(
         e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .persist()
     )
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     wedges = (
@@ -480,9 +476,8 @@ def jaccard_link_prediction(
     out = scored.orderBy(
         F.desc("jaccard"), F.asc("ua"), F.asc("ub")
     ).limit(k)
-    # caller releases via dedup.release_caches, same contract as the
-    # LSH/banding operators
-    return _register_caches(out, [sym])
+    # the caller's cache_scope releases sym, as for the LSH/banding operators
+    return out
 
 
 def personalized_pagerank(
@@ -515,50 +510,48 @@ def personalized_pagerank(
         .cast("double")
         .alias("w"),
     )
-    e = e.groupBy("src", "dst").agg(F.sum("w").alias("w")).persist()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    outw = e.groupBy("src").agg(F.sum("w").alias("w_out")).persist()
-    p_v = F.when(
-        F.col("node").isin([int(s) for s in seeds]),
-        F.lit(1.0 / len(seeds)),
-    ).otherwise(F.lit(0.0))
-    ranks = nodes.select(
-        "node", F.round(p_v, decimals).alias("r")
-    ).localCheckpoint(eager=True)
-    for _ in range(iters):
-        dangling = ranks.join(outw, ranks.node == outw.src, "left_anti").agg(
-            F.coalesce(F.sum("r"), F.lit(0.0)).alias("_dang")
+    with cache_scope():
+        e = materialize(e.groupBy("src", "dst").agg(F.sum("w").alias("w")))
+        nodes = materialize(
+            e.select(F.col("src").alias("node"))
+            .union(e.select(F.col("dst").alias("node")))
+            .distinct()
         )
-        contrib = (
-            e.join(ranks, e.src == ranks.node)
-            .join(outw, "src")
-            .groupBy("dst")
-            .agg(F.sum(F.col("r") * F.col("w") / F.col("w_out")).alias("c"))
-        )
-        ranks = (
-            nodes.join(contrib, nodes.node == contrib.dst, "left")
-            .join(F.broadcast(dangling))
-            .select(
-                "node",
-                F.round(
-                    F.lit(1.0 - damping) * p_v
-                    + F.lit(damping)
-                    * (
-                        F.coalesce("c", F.lit(0.0))
-                        + F.col("_dang") * p_v
-                    ),
-                    decimals,
-                ).alias("r"),
+        outw = materialize(e.groupBy("src").agg(F.sum("w").alias("w_out")))
+        p_v = F.when(
+            F.col("node").isin([int(s) for s in seeds]),
+            F.lit(1.0 / len(seeds)),
+        ).otherwise(F.lit(0.0))
+        ranks = nodes.select(
+            "node", F.round(p_v, decimals).alias("r")
+        ).localCheckpoint(eager=True)
+        for _ in range(iters):
+            dangling = ranks.join(outw, ranks.node == outw.src, "left_anti").agg(
+                F.coalesce(F.sum("r"), F.lit(0.0)).alias("_dang")
             )
-            .localCheckpoint(eager=True)
-        )
-    for c in (e, nodes, outw):
-        c.unpersist()
+            contrib = (
+                e.join(ranks, e.src == ranks.node)
+                .join(outw, "src")
+                .groupBy("dst")
+                .agg(F.sum(F.col("r") * F.col("w") / F.col("w_out")).alias("c"))
+            )
+            ranks = (
+                nodes.join(contrib, nodes.node == contrib.dst, "left")
+                .join(F.broadcast(dangling))
+                .select(
+                    "node",
+                    F.round(
+                        F.lit(1.0 - damping) * p_v
+                        + F.lit(damping)
+                        * (
+                            F.coalesce("c", F.lit(0.0))
+                            + F.col("_dang") * p_v
+                        ),
+                        decimals,
+                    ).alias("r"),
+                )
+                .localCheckpoint(eager=True)
+            )
     return ranks.select("node", F.col("r").alias("ppr"))
 
 
@@ -592,58 +585,56 @@ def hits(
         .cast("double")
         .alias("w"),
     )
-    e = e.groupBy("src", "dst").agg(F.sum("w").alias("w")).persist()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n_nodes = nodes.count()
-    hubs = nodes.select(
-        "node", F.round(F.lit(1.0 / n_nodes), decimals).alias("h")
-    ).localCheckpoint(eager=True)
-    auths = None
-    for _ in range(iters):
-        raw_a = (
-            e.join(hubs, e.src == hubs.node)
-            .groupBy("dst")
-            .agg(F.sum(F.col("w") * F.col("h")).alias("ra"))
+    with cache_scope():
+        e = materialize(e.groupBy("src", "dst").agg(F.sum("w").alias("w")))
+        nodes = materialize(
+            e.select(F.col("src").alias("node"))
+            .union(e.select(F.col("dst").alias("node")))
+            .distinct()
         )
-        norm_a = raw_a.agg(F.sum("ra").alias("_na"))
-        auths = (
-            nodes.join(raw_a, nodes.node == raw_a.dst, "left")
-            .join(F.broadcast(norm_a))
-            .select(
-                "node",
-                F.round(
-                    F.coalesce("ra", F.lit(0.0)) / F.col("_na"), decimals
-                ).alias("a"),
+        n_nodes = nodes.count()
+        hubs = nodes.select(
+            "node", F.round(F.lit(1.0 / n_nodes), decimals).alias("h")
+        ).localCheckpoint(eager=True)
+        auths = None
+        for _ in range(iters):
+            raw_a = (
+                e.join(hubs, e.src == hubs.node)
+                .groupBy("dst")
+                .agg(F.sum(F.col("w") * F.col("h")).alias("ra"))
             )
-            .localCheckpoint(eager=True)
-        )
-        raw_h = (
-            e.join(auths, e.dst == auths.node)
-            .groupBy("src")
-            .agg(F.sum(F.col("w") * F.col("a")).alias("rh"))
-        )
-        norm_h = raw_h.agg(F.sum("rh").alias("_nh"))
-        hubs = (
-            nodes.join(raw_h, nodes.node == raw_h.src, "left")
-            .join(F.broadcast(norm_h))
-            .select(
-                "node",
-                F.round(
-                    F.coalesce("rh", F.lit(0.0)) / F.col("_nh"), decimals
-                ).alias("h"),
+            norm_a = raw_a.agg(F.sum("ra").alias("_na"))
+            auths = (
+                nodes.join(raw_a, nodes.node == raw_a.dst, "left")
+                .join(F.broadcast(norm_a))
+                .select(
+                    "node",
+                    F.round(
+                        F.coalesce("ra", F.lit(0.0)) / F.col("_na"), decimals
+                    ).alias("a"),
+                )
+                .localCheckpoint(eager=True)
             )
-            .localCheckpoint(eager=True)
+            raw_h = (
+                e.join(auths, e.dst == auths.node)
+                .groupBy("src")
+                .agg(F.sum(F.col("w") * F.col("a")).alias("rh"))
+            )
+            norm_h = raw_h.agg(F.sum("rh").alias("_nh"))
+            hubs = (
+                nodes.join(raw_h, nodes.node == raw_h.src, "left")
+                .join(F.broadcast(norm_h))
+                .select(
+                    "node",
+                    F.round(
+                        F.coalesce("rh", F.lit(0.0)) / F.col("_nh"), decimals
+                    ).alias("h"),
+                )
+                .localCheckpoint(eager=True)
+            )
+        out = hubs.join(auths, "node").select(
+            "node", F.col("h").alias("hub"), F.col("a").alias("authority")
         )
-    out = hubs.join(auths, "node").select(
-        "node", F.col("h").alias("hub"), F.col("a").alias("authority")
-    )
-    for c in (e, nodes):
-        c.unpersist()
     return out
 
 
@@ -677,41 +668,43 @@ def bellman_ford_sssp(
     small distance side moves), so cost is O(iters · |E|) — never
     materializing paths.
     """
-    e = edges.select(
-        F.col(src_col).alias("src"),
-        F.col(dst_col).alias("dst"),
-        F.col(weight_col).cast("double").alias("w"),
-    ).persist()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    dist = nodes.select(
-        "node",
-        F.when(F.col("node") == source, F.lit(0.0)).alias("d"),
-    ).localCheckpoint(eager=True)
-    for _ in range(iters):
-        relaxed = (
-            e.join(dist, e.src == dist.node)
-            .filter(F.col("d").isNotNull())
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min(F.col("d") + F.col("w")).alias("cand"))
-        )
-        dist = (
-            dist.join(relaxed, "node", "left")
-            .select(
-                "node",
-                # explicit NULL ladder (unreached / no-candidate) — engine
-                # least() NULL semantics differ, so never feed it a NULL
-                F.round(
-                    F.when(F.col("d").isNull(), F.col("cand"))
-                    .when(F.col("cand").isNull(), F.col("d"))
-                    .otherwise(F.least("d", "cand")),
-                    decimals,
-                ).alias("d"),
+    with cache_scope():
+        e = materialize(
+            edges.select(
+                F.col(src_col).alias("src"),
+                F.col(dst_col).alias("dst"),
+                F.col(weight_col).cast("double").alias("w"),
             )
-            .localCheckpoint(eager=True)
         )
-    e.unpersist()
+        nodes = (
+            e.select(F.col("src").alias("node"))
+            .union(e.select(F.col("dst").alias("node")))
+            .distinct()
+        )
+        dist = nodes.select(
+            "node",
+            F.when(F.col("node") == source, F.lit(0.0)).alias("d"),
+        ).localCheckpoint(eager=True)
+        for _ in range(iters):
+            relaxed = (
+                e.join(dist, e.src == dist.node)
+                .filter(F.col("d").isNotNull())
+                .groupBy(F.col("dst").alias("node"))
+                .agg(F.min(F.col("d") + F.col("w")).alias("cand"))
+            )
+            dist = (
+                dist.join(relaxed, "node", "left")
+                .select(
+                    "node",
+                    # explicit NULL ladder (unreached / no-candidate) — engine
+                    # least() NULL semantics differ, so never feed it a NULL
+                    F.round(
+                        F.when(F.col("d").isNull(), F.col("cand"))
+                        .when(F.col("cand").isNull(), F.col("d"))
+                        .otherwise(F.least("d", "cand")),
+                        decimals,
+                    ).alias("d"),
+                )
+                .localCheckpoint(eager=True)
+            )
     return dist.select("node", F.col("d").alias("distance"))

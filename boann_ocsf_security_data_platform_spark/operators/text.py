@@ -11,6 +11,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.hash_fns import hash64, normalize_text
+from .cache import materialize
 
 # Tiny deterministic stopword lists per language for the n-gram/stopword
 # language-ID heuristic. Order matters: ties break toward the first listed.
@@ -508,23 +509,17 @@ def bigram_lm_score(
 
     Returns ``(id_col, n_bigrams, lm_score)``.
     """
-    from pyspark import StorageLevel
-
-    dg = (
+    dg = materialize(
         _with_word_ngrams(df, text_col, 2, "_grams")
         .select(F.col(id_col), F.explode("_grams").alias("bigram"))
         .groupBy(id_col, "bigram")
-        .agg(F.count(F.lit(1)).alias("n"))
-    ).persist(
-        StorageLevel.DISK_ONLY
-        if pin_shuffle_join
-        else StorageLevel.MEMORY_AND_DISK_DESER
+        .agg(F.count(F.lit(1)).alias("n")),
+        disk=pin_shuffle_join,
     )
-    cbi = (
+    cbi = materialize(
         dg.groupBy("bigram")
         .agg(F.sum("n").alias("c_bi"))
         .withColumn("w1", F.split_part(F.col("bigram"), F.lit(" "), F.lit(1)))
-        .persist(StorageLevel.MEMORY_AND_DISK_DESER)  # gram-space
     )
     ctx = cbi.groupBy("w1").agg(F.sum("c_bi").alias("c_ctx"))
     vocab = df.select(F.explode(tokens(F.col(text_col))).alias("tok")).agg(
@@ -628,14 +623,13 @@ def dsir_importance(
     # n_tgt) — Catalyst planned every branch as its own scan because the
     # scalar totals re-derived the bucket counts from scratch. Now the
     # corpus collapses ONCE to the per-(doc, bucket) multiplicity frame
-    # ``fg`` (persisted; disk-only above the pin where it is fact-sized),
-    # raw_c derives from fg, and the two bucket-count tables (≤ n_buckets
-    # rows each) persist so the scalar totals are sums over ≤1024 cached
-    # rows, not corpus re-scans. c_raw/c_tgt/n_feats are exact integer
-    # sums either way; dsir_logweight becomes Σ m·logratio instead of
-    # logratio summed m times — algebraically identical, same 6-dp round
-    # that already absorbs cross-engine accumulation order.
-    from pyspark import StorageLevel
+    # ``fg`` (materialized), raw_c derives from fg, and the two
+    # bucket-count tables (≤ n_buckets rows each) are materialized so the
+    # scalar totals are sums over ≤1024 cached rows, not corpus re-scans.
+    # c_raw/c_tgt/n_feats are exact integer sums either way;
+    # dsir_logweight becomes Σ m·logratio instead of logratio summed m
+    # times — algebraically identical, same 6-dp round that already
+    # absorbs cross-engine accumulation order.
 
     # (A repartition(id_col) that would let fg's aggregate and the final
     # per-doc aggregate share one exchange was measured and rejected: an
@@ -643,28 +637,17 @@ def dsir_importance(
     # partitioning, so the downstream aggregate re-exchanges anyway and
     # the repartition only fattens the shuffle from post-partial-agg
     # rows to raw instances.)
-    fg = (
+    fg = materialize(
         feats(corpus)
         .groupBy(id_col, "bucket")
-        .agg(F.count(F.lit(1)).alias("m"))
-        .persist(
-            StorageLevel.DISK_ONLY
-            if pin_shuffle_join
-            else StorageLevel.MEMORY_AND_DISK_DESER
-        )
+        .agg(F.count(F.lit(1)).alias("m")),
+        disk=pin_shuffle_join,
     )
     # full-outer join of the two bucket-count tables: buckets unseen in one
     # distribution still carry their smoothed floor via coalesce(count, 0)
-    raw_c = (
-        fg.groupBy("bucket")
-        .agg(F.sum("m").alias("c_raw"))
-        .persist(StorageLevel.MEMORY_AND_DISK_DESER)
-    )
-    tgt_c = (
-        feats(target)
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("c_tgt"))
-        .persist(StorageLevel.MEMORY_AND_DISK_DESER)
+    raw_c = materialize(fg.groupBy("bucket").agg(F.sum("m").alias("c_raw")))
+    tgt_c = materialize(
+        feats(target).groupBy("bucket").agg(F.count(F.lit(1)).alias("c_tgt"))
     )
     n_raw = raw_c.agg(F.sum("c_raw").alias("n_raw"))
     n_tgt = tgt_c.agg(F.sum("c_tgt").alias("n_tgt"))
@@ -1221,10 +1204,10 @@ def duplicate_span_stats(
     span_key = (
         F.xxhash64(F.col("_span")) if hash_keys else F.col("_span")
     )
-    g = (
+    # the span stream feeds three consumers
+    g = materialize(
         grams.select(id_col, F.explode("_grams").alias("_span"))
         .select(id_col, span_key.alias("span"))
-        .persist()
     )
     dup = (
         g.groupBy("span")
@@ -1238,9 +1221,7 @@ def duplicate_span_stats(
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_dup_spans"))
     )
-    from .dedup import _register_caches
-
-    out = (
+    return (
         totals.join(dups, id_col, "left")
         .select(
             id_col,
@@ -1251,9 +1232,6 @@ def duplicate_span_stats(
             ).alias("dup_frac"),
         )
     )
-    # the span stream feeds three consumers; release via
-    # dedup.release_caches(out) / cache_scope once the result is consumed
-    return _register_caches(out, [g])
 
 
 def rake_keywords(
@@ -1510,19 +1488,14 @@ def bm25_topk(
     deterministic across engines."""
     from pyspark.sql import Window
 
-    from .dedup import _register_caches
-
     toks = df.select(
         F.col(id_col), F.explode(tokens(F.col(text_col))).alias("term")
     )
-    # the token explode is the dominant cost at 100 TB — persist the
+    # the token explode is the dominant cost at 100 TB — materialize the
     # reduced (doc, term) frame so tf, dl, and avgdl all read ONE explode
-    # pass instead of re-deriving it per reference (registered in the
-    # shared cache registry; release with release_caches after the action)
-    tf = (
-        toks.groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
+    # pass instead of re-deriving it per reference
+    tf = materialize(
+        toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     )
     dl = tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))
     q_terms = queries.select(
@@ -1561,7 +1534,7 @@ def bm25_topk(
     win = Window.partitionBy(query_id_col).orderBy(
         F.desc("score"), F.asc(id_col)
     )
-    out = (
+    return (
         scored.withColumn("rank", F.row_number().over(win))
         .filter(F.col("rank") <= k)
         .select(
@@ -1571,4 +1544,3 @@ def bm25_topk(
             F.col("rank").cast("long").alias("rank"),
         )
     )
-    return _register_caches(out, [tf])

@@ -23,6 +23,19 @@ from pyspark.sql import functions as F
 from ..session import session_memo
 
 
+def read_ocsf_files(reader, paths) -> DataFrame:
+    """One row per ``*.ocsf.json`` file: its whole text as ``value`` plus
+    ``_source_file``. ``reader`` is ``spark.read`` or ``spark.readStream``
+    with any other options already set; ``paths`` is what its ``.text()``
+    takes. ``wholetext`` goes to ``.text()`` itself because that keyword's
+    default (False) overrides an earlier ``.option("wholetext", True)`` —
+    a pretty-printed array then reads one row per line and every line
+    fails to parse."""
+    return reader.text(paths, wholetext=True).withColumn(
+        "_source_file", F.input_file_name()
+    )
+
+
 def split_findings(whole_text: F.Column) -> F.Column:
     """Split one JSON-array document into per-finding raw JSON strings.
 

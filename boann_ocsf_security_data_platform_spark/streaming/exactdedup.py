@@ -33,6 +33,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from boann_ocsf_security_data_platform_spark.operators.cache import (
+    cache_scope,
+    materialize,
+)
 from boann_ocsf_security_data_platform_spark.operators.dedup import normalize_text
 
 
@@ -82,17 +86,17 @@ def start_exact_dedup_stream(
     id_type = stream_df.schema[id_col].dataType
 
     def _dedup(batch_df: DataFrame, batch_id: int) -> None:
-        winners = (
-            batch_df.select(
-                F.md5(normalize_text(F.col(text_col))).alias(
-                    "content_hash"
-                ),
-                F.col(id_col),
+        with cache_scope():
+            winners = materialize(
+                batch_df.select(
+                    F.md5(normalize_text(F.col(text_col))).alias(
+                        "content_hash"
+                    ),
+                    F.col(id_col),
+                )
+                .groupBy("content_hash")
+                .agg(F.min(id_col).alias(id_col))
             )
-            .groupBy("content_hash")
-            .agg(F.min(id_col).alias(id_col))
-        ).persist()
-        try:
             prev = _read_store(spark, store_dir, id_col, id_type).select(
                 "content_hash"
             )
@@ -118,8 +122,6 @@ def start_exact_dedup_stream(
                 .partitionBy("_batch_id")
                 .parquet(store_dir)
             )
-        finally:
-            winners.unpersist()
 
     writer = stream_df.writeStream.foreachBatch(_dedup).option(
         "checkpointLocation", checkpoint_dir

@@ -34,7 +34,12 @@ from pyspark.sql import functions as F
 
 from ..plans.landing import land
 from ..session import session_memo
-from ..sources.ocsf import explode_findings, findings_ok, split_findings
+from ..sources.ocsf import (
+    explode_findings,
+    findings_ok,
+    read_ocsf_files,
+    split_findings,
+)
 
 logger = logging.getLogger(__name__)
 
@@ -114,11 +119,7 @@ def process_directory(
 
     candidates = [f for f in files if f not in failed]
     if candidates:
-        whole = (
-            spark.read.option("wholetext", True)
-            .text(candidates)
-            .withColumn("_source_file", F.input_file_name())
-        )
+        whole = read_ocsf_files(spark.read, candidates)
         # invariant: a bad file never lands — the landing job drops it by
         # the verdict in its own row; the returned (capped) list only
         # drives disposition, never what lands
@@ -292,17 +293,12 @@ def start_monitor_stream(
     reference's ``--batch`` sweep, resumable where ``process_directory``
     is not.
     """
-    reader = (
-        spark.readStream.option("wholetext", True)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-    )
+    reader = spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
     if archive_dir is not None:
         reader = reader.option("cleanSource", "archive").option(
             "sourceArchiveDir", archive_dir
         )
-    stream = reader.text(f"{source_dir}/*.ocsf.json").withColumn(
-        "_source_file", F.input_file_name()
-    )
+    stream = read_ocsf_files(reader, f"{source_dir}/*.ocsf.json")
 
     def _land_batch(batch_df: DataFrame, batch_id: int) -> None:
         # batch_id-keyed dynamic overwrite: micro-batch replays after a

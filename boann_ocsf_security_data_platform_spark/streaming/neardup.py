@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.cache import cache_scope, materialize
 from ..operators.dedup import (
     lsh_band_keys,
     minhash_signature,
@@ -124,10 +125,12 @@ def start_near_dup_stream(
     id_type = stream_df.schema[id_col].dataType
 
     def _detect(batch_df: DataFrame, batch_id: int) -> None:
-        bands = _band_keys_for_batch(
-            batch_df, text_col, id_col, k, n_hashes, n_bands
-        ).persist()
-        try:
+        with cache_scope():
+            bands = materialize(
+                _band_keys_for_batch(
+                    batch_df, text_col, id_col, k, n_hashes, n_bands
+                )
+            )
             prev = _read_store(spark, store_dir, id_col, id_type).select(
                 F.col(id_col).alias("_prev_id"), "band_idx", "band_hash"
             )
@@ -164,8 +167,6 @@ def start_near_dup_stream(
                 .partitionBy("_batch_id")
                 .parquet(store_dir)
             )
-        finally:
-            bands.unpersist()
 
     writer = stream_df.writeStream.foreachBatch(_detect).option(
         "checkpointLocation", checkpoint_dir

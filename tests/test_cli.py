@@ -188,6 +188,21 @@ def test_ingest_rejects_malformed_and_null_uid(spark, tmp_path):
     assert read_landing(spark, str(tmp_path / "landing")).count() == 1
 
 
+def test_convert_ingest_stage_pretty_printed(spark, fixtures_dir, tmp_path):
+    """The paper's CLI flow on its own output: `convert` writes an
+    indent=2 array, and `ingest` must land every finding of it (one
+    whole-text row per file, not one row per line) for `stage` to load
+    the fixture's 6 findings."""
+    sarif = os.path.join(fixtures_dir, "sample.sarif")
+    ocsf = str(tmp_path / "sample.ocsf.json")
+    landing, staging = str(tmp_path / "landing"), str(tmp_path / "staging")
+    assert _main(["convert", sarif, ocsf]) == 0
+    assert "\n  " in open(ocsf).read()  # really pretty-printed
+    assert _main(["ingest", "--input-file", ocsf, "--landing-path", landing]) == 0
+    assert _main(["stage", "--landing-path", landing, "--staging-path", staging]) == 0
+    assert spark.read.parquet(staging).count() == 6
+
+
 def test_audit_verb_end_to_end(spark, tmp_path, capsys):
     """ingest -> stage -> audit green; then land an extra batch WITHOUT
     re-staging and audit must flag the reconciliation gap non-zero."""

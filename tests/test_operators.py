@@ -265,39 +265,6 @@ def test_lsh_bucket_cap_drops_degenerate_bucket(spark, sf_smoke):
     assert len(capped_set) >= 0.8 * len(baseline_set)  # bounded recall loss
 
 
-def test_release_caches_frees_persisted_intermediates(spark, sf_smoke):
-    """Dedup operators persist reused subplans (shingles, LSH buckets) and
-    hand lifecycle to the caller: after release_caches() the session holds
-    no more cached blocks than before the run (long-lived monitor sessions
-    must not accumulate)."""
-    from boann_ocsf_security_data_platform_spark.operators import release_caches
-    from boann_ocsf_security_data_platform_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-    )
-
-    def n_cached():
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
-
-    # identical plans share CacheManager entries; drop any cache leaked by
-    # earlier tests so the before/after accounting is exact
-    spark.catalog.clearCache()
-    before = n_cached()
-    docs = load_table(spark, sf_smoke, "documents")
-
-    pairs = minhash_near_dup_pairs(docs, jaccard_threshold=0.5)
-    pairs.count()
-    assert n_cached() > before  # intermediates really were cached
-    release_caches(pairs)
-    assert n_cached() == before
-
-    ng = ngram_jaccard_pairs(docs, threshold=0.5)
-    ng.count()
-    release_caches(ng)
-    assert n_cached() == before
-    release_caches(ng)  # idempotent
-    assert n_cached() == before
-
-
 def test_connected_components_known_graph(spark):
     """Path a-b-c plus pair d-e: two clusters labeled by their min id;
     path shape needs >1 propagation round (transitivity, not just direct
@@ -385,7 +352,7 @@ def test_minhash_fast_hash_path(spark, sf_smoke):
     from boann_ocsf_security_data_platform_spark.functions.hash_fns import (
         hash64_fast,
     )
-    from boann_ocsf_security_data_platform_spark.operators import release_caches
+    from boann_ocsf_security_data_platform_spark.operators import cache_scope
 
     base_docs = load_table(spark, sf_smoke, "documents").select("doc_id", "text")
     # inject exact duplicates: copies of three docs under fresh ids
@@ -408,14 +375,16 @@ def test_minhash_fast_hash_path(spark, sf_smoke):
     }
     assert len(dup_pairs) >= 3
 
-    fast = minhash_near_dup_pairs(docs, hash_fn=hash64_fast, jaccard_threshold=0.99)
-    got_fast = {(r.id_a, r.id_b) for r in fast.collect()}
-    release_caches(fast)
+    with cache_scope():
+        fast = minhash_near_dup_pairs(
+            docs, hash_fn=hash64_fast, jaccard_threshold=0.99
+        )
+        got_fast = {(r.id_a, r.id_b) for r in fast.collect()}
     assert dup_pairs <= got_fast
 
-    base = minhash_near_dup_pairs(docs, jaccard_threshold=0.99)
-    got_base = {(r.id_a, r.id_b) for r in base.collect()}
-    release_caches(base)
+    with cache_scope():
+        base = minhash_near_dup_pairs(docs, jaccard_threshold=0.99)
+        got_base = {(r.id_a, r.id_b) for r in base.collect()}
     assert dup_pairs <= got_base
 
 
@@ -547,84 +516,72 @@ def test_deterministic_shuffle_reproducible_and_seed_sensitive(spark):
     assert sorted(e0a) == sorted(e1) == list(range(200))  # a permutation
 
 
-def test_release_all_caches_safety_valve(spark, sf_smoke):
-    """When the exact returned object is gone (derived frames drop the
-    cache handle), release_all_caches() still frees every registered
-    intermediate. Asserts on the registry and the registered frames'
-    storage levels, NOT the JVM-global persistent-RDD count — leftover
-    localCheckpoint RDDs from other files in a test shard plus the async
-    ContextCleaner unpersisting between two global counts made the
-    count-equality version the suite's only flake (r5 VERDICT)."""
-    from boann_ocsf_security_data_platform_spark.operators.dedup import (
-        _LIVE_CACHES,
-        release_all_caches,
-    )
-
-    def is_persisted(df):
-        lvl = df.storageLevel
-        return lvl.useMemory or lvl.useDisk
-
-    release_all_caches()  # drain anything earlier tests leaked
-    assert _LIVE_CACHES == []
-    docs = load_table(spark, sf_smoke, "documents")
-    derived = minhash_near_dup_pairs(docs).filter("id_a >= 0")  # handle lost
-    derived.count()
-    live = list(_LIVE_CACHES)
-    assert live and all(is_persisted(c) for c in live)
-    release_all_caches()
-    assert _LIVE_CACHES == []  # registry drained…
-    assert all(not is_persisted(c) for c in live)  # …and actually freed
-
-
 def test_cache_scope_releases_even_for_derived_frames(spark, sf_smoke):
-    """cache_scope releases by registration window, so deriving from the
-    operator's result (which drops the per-object handle) cannot leak:
-    everything persisted inside the block is freed on exit, including on
-    exception. Asserts on the registry and the registered frames' storage
-    levels (global persistent-RDD counts are racy when other tests in the
-    session unpersist non-blockingly)."""
+    """cache_scope releases everything materialized inside it, so deriving
+    from an operator's result cannot leak: both dedup families' caches go
+    on exit, including on exception; nested scopes free only their own
+    frames; a frame another thread materializes is that thread's and
+    survives. Asserts on the CacheManager and the frames' storage levels,
+    not the JVM-global persistent-RDD count (localCheckpoint blocks and
+    the async ContextCleaner make that count racy)."""
+    import threading
+
     import pytest
-    from boann_ocsf_security_data_platform_spark.operators import cache_scope
-    from boann_ocsf_security_data_platform_spark.operators.dedup import (
-        _LIVE_CACHES,
-        release_all_caches,
+    from boann_ocsf_security_data_platform_spark.operators import (
+        cache_scope,
+        materialize,
     )
+    from boann_ocsf_security_data_platform_spark.operators.dedup import (
+        ngram_jaccard_pairs,
+    )
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
 
     def is_persisted(df):
         lvl = df.storageLevel
         return lvl.useMemory or lvl.useDisk
 
-    release_all_caches()
+    spark.catalog.clearCache()  # drop anything earlier tests left
     docs = load_table(spark, sf_smoke, "documents")
     with cache_scope():
-        derived = minhash_near_dup_pairs(docs).filter("id_a >= 0")
-        derived.count()
-        live = list(_LIVE_CACHES)
-        assert live and all(is_persisted(c) for c in live)
-    assert _LIVE_CACHES == []  # released despite the handle-less derive
-    assert all(not is_persisted(c) for c in live)
+        minhash_near_dup_pairs(docs, jaccard_threshold=0.5).filter(
+            "id_a >= 0"
+        ).count()
+        ngram_jaccard_pairs(docs, threshold=0.5).count()
+        assert not cm.isEmpty()  # intermediates really were cached
+    assert cm.isEmpty()  # released despite the derived frame
 
     # exception path still releases
     with pytest.raises(RuntimeError, match="boom"):
         with cache_scope():
             minhash_near_dup_pairs(docs).count()
-            live = list(_LIVE_CACHES)
+            assert not cm.isEmpty()
             raise RuntimeError("boom")
-    assert _LIVE_CACHES == []
-    assert all(not is_persisted(c) for c in live)
+    assert cm.isEmpty()
 
-    # nesting: the inner scope only frees its own window (distinct plans —
-    # identical plans would share CacheManager entries, see the docstring)
+    # nesting: the inner scope only frees its own frames (distinct plans —
+    # identical plans share one CacheManager entry)
     with cache_scope():
-        minhash_near_dup_pairs(docs).count()
-        outer_live = list(_LIVE_CACHES)
+        outer = materialize(docs.select("doc_id"))
         with cache_scope():
-            minhash_near_dup_pairs(docs.filter("doc_id % 2 = 0")).count()
-            assert len(_LIVE_CACHES) > len(outer_live)
-        assert list(_LIVE_CACHES) == outer_live  # inner freed only its window
-        assert all(is_persisted(c) for c in outer_live)
-    assert _LIVE_CACHES == []
-    assert all(not is_persisted(c) for c in outer_live)
+            inner = materialize(docs.select("text"))
+            assert is_persisted(inner)
+        assert not is_persisted(inner) and is_persisted(outer)
+    assert not is_persisted(outer)
+
+    # per thread: a frame another thread materializes (a foreachBatch
+    # thread, say) is not released by this thread's scope
+    other = []
+    with cache_scope():
+        t = threading.Thread(
+            target=lambda: other.append(materialize(docs.select("source")))
+        )
+        t.start()
+        t.join(timeout=120)
+        assert not t.is_alive()
+    assert is_persisted(other[0])
+    other[0].unpersist(blocking=True)
+    assert cm.isEmpty()
 
 
 def test_auto_n_planes_holds_bucket_size_across_decades(spark):
@@ -691,9 +648,9 @@ def test_containment_pairs_matches_bruteforce(spark):
     """Directional containment from the shingle equi-join must equal the
     brute-force |A∩B|/|A| over word-3-gram shingle sets at every
     threshold; the stop-gram valve may only LOSE pairs, never invent."""
+    from boann_ocsf_security_data_platform_spark.operators import cache_scope
     from boann_ocsf_security_data_platform_spark.operators.dedup import (
         containment_pairs,
-        release_caches,
     )
 
     docs = [
@@ -723,15 +680,15 @@ def test_containment_pairs_matches_bruteforce(spark):
         return out
 
     for t in (0.5, 0.8, 1.0):
-        res = containment_pairs(df, threshold=t)
-        got = {(r.id_a, r.id_b): r.containment for r in res.collect()}
-        release_caches(res)
+        with cache_scope():
+            res = containment_pairs(df, threshold=t)
+            got = {(r.id_a, r.id_b): r.containment for r in res.collect()}
         assert got == brute(t), f"threshold {t}"
 
     # valve: capping shingle document-frequency can only drop pairs
-    res = containment_pairs(df, threshold=0.5, max_shingle_df=2)
-    capped = {(r.id_a, r.id_b) for r in res.collect()}
-    release_caches(res)
+    with cache_scope():
+        res = containment_pairs(df, threshold=0.5, max_shingle_df=2)
+        capped = {(r.id_a, r.id_b) for r in res.collect()}
     assert capped <= set(brute(0.5))
 
 
@@ -1242,9 +1199,9 @@ def test_ngram_counts_known_answers(spark):
 
 
 def test_prefix_filter_jaccard_matches_bruteforce(spark):
+    from boann_ocsf_security_data_platform_spark.operators import cache_scope
     from boann_ocsf_security_data_platform_spark.operators.dedup import (
         prefix_filter_jaccard_pairs,
-        release_caches,
     )
 
     docs = [
@@ -1271,9 +1228,9 @@ def test_prefix_filter_jaccard_matches_bruteforce(spark):
         return out
 
     for t in (0.5, 0.66, 0.75, 1.0):
-        res = prefix_filter_jaccard_pairs(df, threshold=t)
-        got = {(r.id_a, r.id_b): r.jaccard for r in res.collect()}
-        release_caches(res)
+        with cache_scope():
+            res = prefix_filter_jaccard_pairs(df, threshold=t)
+            got = {(r.id_a, r.id_b): r.jaccard for r in res.collect()}
         assert got == brute(t), f"threshold {t}"
 
 

@@ -4,6 +4,7 @@ oracle at sf0.001 (the driver runs the same comparison at sf0.01)."""
 import pytest
 
 import __spark_entry__ as entrymod
+from boann_ocsf_security_data_platform_spark.operators.cache import cache_scope
 from tools.oracle_check import compare_one, duck_connect
 
 QS = entrymod.queries()
@@ -17,15 +18,29 @@ def duck(sf_smoke):
     con.close()
 
 
+@pytest.fixture()
+def cache_manager(spark):
+    """The session's CacheManager, emptied first: each entry must leave it
+    empty once its action's ``cache_scope`` closes (no cached plan leaks
+    into the next entry). Checked on the CacheManager, not
+    ``getPersistentRDDs``, which also counts localCheckpoint blocks the
+    ContextCleaner frees asynchronously."""
+    spark.catalog.clearCache()
+    return spark._jsparkSession.sharedState().cacheManager()
+
+
 @pytest.mark.parametrize("name", sorted(ORACLES))
-def test_oracle_match(spark, duck, sf_smoke, name):
+def test_oracle_match(spark, duck, sf_smoke, cache_manager, name):
     ok, issues = compare_one(spark, duck, name, QS[name], ORACLES[name], sf_smoke)
     assert ok, issues
+    assert cache_manager.isEmpty(), f"{name} leaked cached plans"
 
 
 @pytest.mark.parametrize("name", sorted(set(QS) - set(ORACLES)))
-def test_rows_only_queries_run(spark, sf_smoke, name):
-    assert QS[name](spark, sf_smoke).count() >= 0
+def test_rows_only_queries_run(spark, sf_smoke, cache_manager, name):
+    with cache_scope():
+        assert QS[name](spark, sf_smoke).count() >= 0
+    assert cache_manager.isEmpty(), f"{name} leaked cached plans"
 
 
 def test_entry_contract(spark):

@@ -90,8 +90,8 @@ def test_identical_docs_always_lsh_candidates(spark, texts, dup_idx):
     collides): recall 1.0 on true duplicates, for arbitrary text."""
     from boann_ocsf_security_data_platform_spark.operators.dedup import (
         minhash_near_dup_pairs,
-        release_caches,
     )
+    from boann_ocsf_security_data_platform_spark.operators import cache_scope
 
     base = texts[dup_idx % len(texts)]
     if not base.strip():
@@ -100,9 +100,9 @@ def test_identical_docs_always_lsh_candidates(spark, texts, dup_idx):
     a_id, b_id = 1000, 1001
     rows += [(a_id, base), (b_id, base)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    pairs = minhash_near_dup_pairs(df)
-    got = {(r.id_a, r.id_b) for r in pairs.collect()}
-    release_caches(pairs)
+    with cache_scope():
+        pairs = minhash_near_dup_pairs(df)
+        got = {(r.id_a, r.id_b) for r in pairs.collect()}
     assert (a_id, b_id) in got
 
 
@@ -399,8 +399,8 @@ def test_weighted_jaccard_bounds_and_exact_dup(spark, texts):
     """0 < wjaccard <= 1 on every emitted pair, and an exact duplicate
     document always scores 1.0 (identical shingle sets => I = W_A = W_B)
     — for arbitrary text, which the fixture-corpus oracle can't reach."""
+    from boann_ocsf_security_data_platform_spark.operators import cache_scope
     from boann_ocsf_security_data_platform_spark.operators.dedup import (
-        release_all_caches,
         weighted_jaccard_pairs,
     )
 
@@ -409,11 +409,11 @@ def test_weighted_jaccard_bounds_and_exact_dup(spark, texts):
     dup = "alpha beta gamma delta epsilon"
     rows += [(1000, dup, "s"), (1001, dup, "s")]
     df = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    got = {
-        (r.id_a, r.id_b): r.wjaccard
-        for r in weighted_jaccard_pairs(df, threshold=0.0).collect()
-    }
-    release_all_caches()
+    with cache_scope():
+        got = {
+            (r.id_a, r.id_b): r.wjaccard
+            for r in weighted_jaccard_pairs(df, threshold=0.0).collect()
+        }
     assert got[(1000, 1001)] == 1.0
     assert all(0.0 < v <= 1.0 for v in got.values())
 

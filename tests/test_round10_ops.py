@@ -82,18 +82,19 @@ def test_duplicate_span_stats_scale_arm_identity(spark):
     """hash_keys + pin_shuffle_join are plan choices, not semantics: on a
     collision-free corpus the hashed-key sort-merge arm returns the same
     per-document rows as the verbatim-string arm."""
-    from boann_ocsf_security_data_platform_spark.operators.dedup import release_caches
+    from boann_ocsf_security_data_platform_spark.operators import cache_scope
     from boann_ocsf_security_data_platform_spark.operators.text import (
         duplicate_span_stats,
     )
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    want_df = duplicate_span_stats(docs, n=8)
-    want = sorted(tuple(r) for r in want_df.collect())
-    release_caches(want_df)
-    got_df = duplicate_span_stats(docs, n=8, hash_keys=True, pin_shuffle_join=True)
-    got = sorted(tuple(r) for r in got_df.collect())
-    release_caches(got_df)
+    with cache_scope():
+        want = sorted(tuple(r) for r in duplicate_span_stats(docs, n=8).collect())
+    with cache_scope():
+        got_df = duplicate_span_stats(
+            docs, n=8, hash_keys=True, pin_shuffle_join=True
+        )
+        got = sorted(tuple(r) for r in got_df.collect())
     assert want and got == want
 
 

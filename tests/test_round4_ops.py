@@ -8,8 +8,8 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from boann_ocsf_security_data_platform_spark.operators.cache import cache_scope
 from boann_ocsf_security_data_platform_spark.operators.dedup import (
-    cache_scope,
     cross_corpus_jaccard_pairs,
 )
 from boann_ocsf_security_data_platform_spark.operators.graph import pagerank

@@ -142,9 +142,7 @@ def test_jaccard_link_prediction_hand_graph(spark):
     """Path graph 1-2-3-4: the only common-neighbor non-edges are (1,3)
     via 2, (2,4) via 3, and... (1,4)? no shared neighbor. J(1,3) =
     1/|{2} u {2,4}| = 1/2; J(2,4) = 1/|{1,3} u {3}| = 1/2."""
-    from boann_ocsf_security_data_platform_spark.operators.dedup import (
-        release_caches,
-    )
+    from boann_ocsf_security_data_platform_spark.operators import cache_scope
     from boann_ocsf_security_data_platform_spark.operators.graph import (
         jaccard_link_prediction,
     )
@@ -152,9 +150,9 @@ def test_jaccard_link_prediction_hand_graph(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4)], "a long, b long"
     )
-    out = jaccard_link_prediction(edges, k=10)
-    rows = {(r.ua, r.ub): r for r in out.collect()}
-    release_caches(out)
+    with cache_scope():
+        out = jaccard_link_prediction(edges, k=10)
+        rows = {(r.ua, r.ub): r for r in out.collect()}
     assert set(rows) == {(1, 3), (2, 4)}
     assert rows[(1, 3)].n_common == 1 and abs(rows[(1, 3)].jaccard - 0.5) < 1e-9
     assert rows[(2, 4)].n_common == 1 and abs(rows[(2, 4)].jaccard - 0.5) < 1e-9

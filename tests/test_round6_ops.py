@@ -247,31 +247,24 @@ def test_ewma_single_event_equals_value(spark):
 
 
 def test_bm25_releases_its_cache(spark, sf_smoke):
-    """bm25_topk persists the (doc, term) frame; the registered-cache
-    valve must free it after the consuming action."""
-    from boann_ocsf_security_data_platform_spark.operators.dedup import (
-        _LIVE_CACHES,
-        release_all_caches,
-    )
+    """bm25_topk materializes the (doc, term) frame; the caller's
+    cache_scope must free it after the consuming action."""
+    from boann_ocsf_security_data_platform_spark.operators import cache_scope
     from boann_ocsf_security_data_platform_spark.operators.text import (
         bm25_topk,
     )
     from boann_ocsf_security_data_platform_spark.sources import load_table
 
-    release_all_caches()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
     queries = spark.createDataFrame(
         [(1, "hash join table")], "query_id int, qtext string"
     )
-    out = bm25_topk(load_table(spark, sf_smoke, "documents"), queries, k=3)
-    assert out.count() > 0
-    live = list(_LIVE_CACHES)
-    assert live  # the tf cache is registered, not leaked anonymously
-    release_all_caches()
-    assert _LIVE_CACHES == []
-    assert all(
-        not (c.storageLevel.useMemory or c.storageLevel.useDisk)
-        for c in live
-    )
+    with cache_scope():
+        out = bm25_topk(load_table(spark, sf_smoke, "documents"), queries, k=3)
+        assert out.count() > 0
+        assert not cm.isEmpty()  # the tf frame really was cached
+    assert cm.isEmpty()
 
 
 def test_mmr_diversifies_vs_plain_topk(spark, sf_smoke):

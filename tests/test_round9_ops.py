@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
+from boann_ocsf_security_data_platform_spark.operators import cache_scope
 
 QS = entrymod.queries()
 
@@ -227,15 +228,14 @@ def test_near_dup_clusters_collapsed_identity(spark):
         cluster_pairs,
         minhash_near_dup_pairs,
         near_dup_clusters_collapsed,
-        release_caches,
     )
 
     df = _replicated_corpus(spark)
-    pairs = minhash_near_dup_pairs(df)
-    full = sorted(
-        (r.node, r.cluster_id) for r in cluster_pairs(pairs).collect()
-    )
-    release_caches(pairs)
+    with cache_scope():
+        pairs = minhash_near_dup_pairs(df)
+        full = sorted(
+            (r.node, r.cluster_id) for r in cluster_pairs(pairs).collect()
+        )
     fast = sorted(
         (r.node, r.cluster_id)
         for r in near_dup_clusters_collapsed(df).collect()
@@ -247,20 +247,19 @@ def test_near_dup_participants_collapsed_identity(spark):
     from boann_ocsf_security_data_platform_spark.operators.dedup import (
         minhash_near_dup_pairs,
         near_dup_participants_collapsed,
-        release_caches,
     )
     from pyspark.sql import functions as F
 
     df = _replicated_corpus(spark)
-    pairs = minhash_near_dup_pairs(df)
-    full = sorted(
-        r.doc_id
-        for r in pairs.select(F.col("id_a").alias("doc_id"))
-        .union(pairs.select(F.col("id_b").alias("doc_id")))
-        .distinct()
-        .collect()
-    )
-    release_caches(pairs)
+    with cache_scope():
+        pairs = minhash_near_dup_pairs(df)
+        full = sorted(
+            r.doc_id
+            for r in pairs.select(F.col("id_a").alias("doc_id"))
+            .union(pairs.select(F.col("id_b").alias("doc_id")))
+            .distinct()
+            .collect()
+        )
     fast = sorted(
         r.doc_id for r in near_dup_participants_collapsed(df).collect()
     )
@@ -320,18 +319,17 @@ def test_pin_shuffle_join_controls_join_strategy(spark):
     either way."""
     from boann_ocsf_security_data_platform_spark.operators.dedup import (
         ngram_jaccard_pairs,
-        release_all_caches,
     )
 
     from pyspark.sql import functions as F
 
     df = _replicated_corpus(spark).withColumn("source", F.lit("s0"))
-    pinned = ngram_jaccard_pairs(df, threshold=0.5, pin_shuffle_join=True)
-    p_pin = pinned._jdf.queryExecution().sparkPlan().toString()
-    assert "SortMergeJoin" in p_pin
-    rows_pin = sorted(tuple(r) for r in pinned.collect())
-    release_all_caches()
-    free = ngram_jaccard_pairs(df, threshold=0.5, pin_shuffle_join=False)
-    rows_free = sorted(tuple(r) for r in free.collect())
-    release_all_caches()
+    with cache_scope():
+        pinned = ngram_jaccard_pairs(df, threshold=0.5, pin_shuffle_join=True)
+        p_pin = pinned._jdf.queryExecution().sparkPlan().toString()
+        assert "SortMergeJoin" in p_pin
+        rows_pin = sorted(tuple(r) for r in pinned.collect())
+    with cache_scope():
+        free = ngram_jaccard_pairs(df, threshold=0.5, pin_shuffle_join=False)
+        rows_free = sorted(tuple(r) for r in free.collect())
     assert rows_pin == rows_free and len(rows_pin) > 0

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from boann_ocsf_security_data_platform_spark.plans.landing import read_landing
+from boann_ocsf_security_data_platform_spark.sources.ocsf import read_ocsf_files
 from boann_ocsf_security_data_platform_spark.streaming import (
     process_directory,
     start_monitor_stream,
@@ -24,9 +25,9 @@ FINDING = {
 }
 
 
-def _write_ocsf(d, name, findings):
+def _write_ocsf(d, name, findings, indent=None, newline="\n"):
     p = d / name
-    p.write_text(json.dumps(findings))
+    p.write_text(json.dumps(findings, indent=indent).replace("\n", newline))
     return str(p)
 
 
@@ -51,6 +52,9 @@ def test_batch_sweep_disposition(spark, monitor_dirs, tmp_path):
     bad = d["src"] / "c.ocsf.json"
     bad.write_text("{definitely not json")
     (d["src"] / "ignored.txt").write_text("not an ocsf file")
+    # pretty-printed files (what `cli convert` writes), LF and CRLF
+    _write_ocsf(d["src"], "d.ocsf.json", [FINDING], indent=2)
+    _write_ocsf(d["src"], "e.ocsf.json", [FINDING, FINDING], indent=2, newline="\r\n")
 
     res = process_directory(
         spark, str(d["src"]), d["landing"], d["processed"], d["failed"]
@@ -58,16 +62,23 @@ def test_batch_sweep_disposition(spark, monitor_dirs, tmp_path):
     assert [p.rsplit("/", 1)[-1] for p in res["processed"]] == [
         "a.ocsf.json",
         "b.ocsf.json",
+        "d.ocsf.json",
+        "e.ocsf.json",
     ]
     assert [p.rsplit("/", 1)[-1] for p in res["failed"]] == ["c.ocsf.json"]
 
     landed = read_landing(spark, d["landing"])
-    assert landed.count() == 3
+    assert landed.count() == 6
     assert landed.select("finding_uid").distinct().collect()[0][0] == "boann:sast:t:hash:abc"
     # disposition on disk
     import os
 
-    assert sorted(os.listdir(d["processed"])) == ["a.ocsf.json", "b.ocsf.json"]
+    assert sorted(os.listdir(d["processed"])) == [
+        "a.ocsf.json",
+        "b.ocsf.json",
+        "d.ocsf.json",
+        "e.ocsf.json",
+    ]
     assert os.listdir(d["failed"]) == ["c.ocsf.json"]
     assert os.listdir(d["src"]) == ["ignored.txt"]  # non-matching left alone
 
@@ -136,11 +147,7 @@ def test_batch_sweep_bad_file_cap(spark, monitor_dirs, monkeypatch):
 
 
 def _whole_text(spark, src):
-    return (
-        spark.read.option("wholetext", True)
-        .text(str(src))
-        .withColumn("_source_file", F.input_file_name())
-    )
+    return read_ocsf_files(spark.read, str(src))
 
 
 def test_land_ocsf_files_one_job_per_batch(spark, monitor_dirs, spark_jobs):
@@ -624,19 +631,22 @@ def test_streaming_drain_available_now(spark, monitor_dirs):
     d = monitor_dirs
     _write_ocsf(d["src"], "d1.ocsf.json", [FINDING])
     _write_ocsf(d["src"], "d2.ocsf.json", [FINDING, FINDING])
+    # pretty-printed files (what `cli convert` writes), LF and CRLF
+    _write_ocsf(d["src"], "d4.ocsf.json", [FINDING], indent=2)
+    _write_ocsf(d["src"], "d5.ocsf.json", [FINDING, FINDING], indent=2, newline="\r\n")
     q = start_monitor_stream(
         spark, str(d["src"]), d["landing"], d["checkpoint"], available_now=True
     )
     q.awaitTermination(120)
     assert not q.isActive
-    assert read_landing(spark, d["landing"]).count() == 3
+    assert read_landing(spark, d["landing"]).count() == 6
 
     _write_ocsf(d["src"], "d3.ocsf.json", [FINDING])
     q2 = start_monitor_stream(
         spark, str(d["src"]), d["landing"], d["checkpoint"], available_now=True
     )
     q2.awaitTermination(120)
-    assert read_landing(spark, d["landing"]).count() == 4
+    assert read_landing(spark, d["landing"]).count() == 7
 
 
 def test_streaming_corpus_quality_dedup_pipeline(spark, tmp_path):
@@ -740,8 +750,8 @@ def test_streaming_near_dup_matches_batch(spark, tmp_path):
     (operators/dedup.py:lsh_band_keys)."""
     from boann_ocsf_security_data_platform_spark.operators.dedup import (
         minhash_near_dup_pairs,
-        release_caches,
     )
+    from boann_ocsf_security_data_platform_spark.operators import cache_scope
     from boann_ocsf_security_data_platform_spark.streaming import (
         read_near_dup_pairs,
         start_near_dup_stream,
@@ -793,9 +803,9 @@ def test_streaming_near_dup_matches_batch(spark, tmp_path):
     batch_df = spark.createDataFrame(
         [(d["doc_id"], d["text"]) for d in docs], "doc_id long, text string"
     )
-    expected_df = minhash_near_dup_pairs(batch_df)
-    expected = {(r.id_a, r.id_b) for r in expected_df.collect()}
-    release_caches(expected_df)
+    with cache_scope():
+        expected_df = minhash_near_dup_pairs(batch_df)
+        expected = {(r.id_a, r.id_b) for r in expected_df.collect()}
     assert (1, 3) in expected and (1, 7) in expected  # cross-batch dups real
     assert streamed == expected
 

@@ -24,6 +24,10 @@ import pandas as pd
 
 sys.path.insert(0, ".")
 
+from boann_ocsf_security_data_platform_spark.operators.cache import (  # noqa: E402
+    cache_scope,
+)
+
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
@@ -64,7 +68,8 @@ def frame_key(df: pd.DataFrame) -> list[tuple]:
 
 
 def compare_one(spark, con, name: str, fn, sql: str, sf_dir: str):
-    sdf = fn(spark, sf_dir).toPandas()
+    with cache_scope():
+        sdf = fn(spark, sf_dir).toPandas()
     ddf = con.execute(sql).fetchdf()
     issues = []
     if sorted(sdf.columns) != sorted(ddf.columns):
@@ -129,7 +134,8 @@ def main():
         if shard and zlib.crc32(name.encode()) % shard[1] != shard[0]:
             continue
         if name not in oracles:
-            n = fn(spark, sf_dir).count()
+            with cache_scope():
+                n = fn(spark, sf_dir).count()
             print(f"  ~ {name}: no oracle (rows-only check), {n} rows")
             skipped += 1
             continue

@@ -524,11 +524,7 @@ def audit(spark, sf_dir: str) -> list[tuple[str, bool, str]]:
         "WindowGroupLimit" in pbm and "SortMergeJoin" not in pbm,
         "",
     )
-    from boann_ocsf_security_data_platform_spark.operators.dedup import (
-        release_all_caches,
-    )
-
-    release_all_caches()
+    spark.catalog.clearCache()
     pfz = plan_of(qs["join_fuzzy_entity_resolution"](spark, sf_dir))
     check(
         "fuzzy ER joins on the blocking key only (no cartesian)",
@@ -573,11 +569,7 @@ def audit(spark, sf_dir: str) -> list[tuple[str, bool, str]]:
         and ("InMemoryTableScan" in ph or "InMemoryRelation" in ph),
         "first-occurrence rewrite + one reduced frame feeds both sides",
     )
-    from boann_ocsf_security_data_platform_spark.operators.dedup import (
-        release_all_caches as _rel,
-    )
-
-    _rel()
+    spark.catalog.clearCache()
 
     # round-7 waves 81-92
     # Scale-aware (round-11 verdict, What's wrong #4): below ~10k baskets
@@ -884,16 +876,13 @@ def audit(spark, sf_dir: str) -> list[tuple[str, bool, str]]:
         "embedding_threshold_sweep": (0, 2),  # 4-row threshold frame
     }
     from boann_ocsf_security_data_platform_spark.operators import gates as _g
-    from boann_ocsf_security_data_platform_spark.operators.dedup import (
-        release_all_caches as _rel2,
-    )
 
     over_budget = []
     _old_valve_min = _g.LSH_VALVE_MIN_ROWS
     _g.LSH_VALVE_MIN_ROWS = -1  # force valve + sort-merge pin everywhere
     try:
         for qname, (max_bhj, max_bnlj) in PAIR_BCAST_BUDGET.items():
-            _rel2()
+            spark.catalog.clearCache()
             p = plan_of(qs[qname](spark, sf_dir))
             bhj = p.count("BroadcastHashJoin")
             bnlj = p.count("BroadcastNestedLoopJoin")
@@ -903,7 +892,7 @@ def audit(spark, sf_dir: str) -> list[tuple[str, bool, str]]:
                 )
     finally:
         _g.LSH_VALVE_MIN_ROWS = _old_valve_min
-        _rel2()
+        spark.catalog.clearCache()
     check(
         "pair-entry broadcast budget: only explicit bounded broadcasts",
         not over_budget,

@@ -327,29 +327,37 @@ def main() -> int:
         survivors.filter(F.col("doc_id") == 899_999_999).count() == 0
     ), "crashed-attempt sink rows must be gone"
 
-    from pyspark.storagelevel import StorageLevel
+    from boann_ocsf_security_data_platform_spark.operators.cache import (
+        materialize,
+    )
 
     full = docs.select("doc_id", "text")
-    s1 = full.join(
-        exact_dedup(full).select(F.col("keep_id").alias("doc_id")), "doc_id"
-    ).persist(StorageLevel.DISK_ONLY)
+    s1 = materialize(
+        full.join(
+            exact_dedup(full).select(F.col("keep_id").alias("doc_id")), "doc_id"
+        ),
+        disk=True,
+    )
     pairs = minhash_near_dup_pairs(s1)
-    # DISK_ONLY persists: the parity asserts below drive ~8 actions
+    # on-disk materializations: the parity asserts below drive ~8 actions
     # (counts, two exceptAll sides, the fresh index build) and each
     # would otherwise re-run the full banding/pair lineage over 2M docs
     # — the first 2M run spent 3266 s of its 3526 s total re-computing
     # these frames.
-    s2 = s1.join(
-        pairs.select(F.col("id_b").alias("doc_id")).distinct(),
-        "doc_id", "left_anti",
-    ).persist(StorageLevel.DISK_ONLY)
+    s2 = materialize(
+        s1.join(
+            pairs.select(F.col("id_b").alias("doc_id")).distinct(),
+            "doc_id", "left_anti",
+        ),
+        disk=True,
+    )
     s3 = (
         text_quality(s2)
         .where((F.col("quality_score") >= 0.75) & (F.col("n_tokens") >= 10))
         .select("doc_id", "text")
     )
     s4 = decontaminate(s3, benchmark)
-    batch_ids = s4.select("doc_id").persist(StorageLevel.DISK_ONLY)
+    batch_ids = materialize(s4.select("doc_id"), disk=True)
     assert _same_rows(survivors, batch_ids), "survivor sets diverge"
 
     n_exact, n_s2, n_s3, n_s4 = (

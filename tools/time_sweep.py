@@ -133,9 +133,7 @@ def aggregate_and_check(sf_dir: str, shard_n: int) -> int:
             best = float("inf")
             for _ in range(2):
                 t0 = time.perf_counter()
-                qs[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
+                _run_noop(qs[name], spark, sf_dir)
                 best = min(best, time.perf_counter() - t0)
             merged[name] = round(best, 2)
             print(f"  retimed isolated: {name} {best:.2f}s")
@@ -205,12 +203,24 @@ def launch(sf_dir: str, shard_n: int) -> int:
     return aggregate_and_check(sf_dir, shard_n)
 
 
+def _run_noop(fn, spark, sf_dir: str) -> None:
+    """Run one entry to the noop sink inside a ``cache_scope``, so every
+    intermediate it materialized is released when the action ends."""
+    from boann_ocsf_security_data_platform_spark.operators.cache import (
+        cache_scope,
+    )
+
+    with cache_scope():
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+
 def _release_session_state(spark) -> None:
     """Between-entry hygiene: drop lingering cached frames and kick both
     collectors so one entry's persisted/localCheckpointed blocks are gone
-    before the next entry is timed. Entries release their own named
-    caches (dedup.release_caches), but localCheckpoint blocks free only
-    when the Python references die and the JVM ContextCleaner runs — at
+    before the next entry is timed. :func:`_run_noop`'s scope releases
+    what an entry materialized (``operators/cache.py``), but
+    localCheckpoint blocks free only when the Python references die and
+    the JVM ContextCleaner runs — at
     sf100 block sizes, 30+ entries of lag was enough to push a later
     aggregation into UNABLE_TO_ACQUIRE_MEMORY inside the full sweep
     while the same entry passed isolated (round-10 finding: fleiss/mrmr
@@ -294,9 +304,7 @@ def run_only(
         try:
             for _ in range(best_of):
                 t0 = time.perf_counter()
-                qs[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
+                _run_noop(qs[name], spark, sf_dir)
                 best = min(best, time.perf_counter() - t0)
             out[name] = round(best, 2)
             print(f"  {best:8.2f}  {name}", flush=True)
@@ -361,9 +369,7 @@ def main() -> int:
             continue
         t0 = time.perf_counter()
         try:
-            fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            _run_noop(fn, spark, sf_dir)
             out[name] = round(time.perf_counter() - t0, 2)
         except Exception as e:  # noqa: BLE001 - record, keep sweeping
             out[name] = f"ERR {type(e).__name__}"
