@@ -265,6 +265,63 @@ def test_lsh_bucket_cap_drops_degenerate_bucket(spark, sf_smoke):
     assert len(capped_set) >= 0.8 * len(baseline_set)  # bounded recall loss
 
 
+def test_release_caches_frees_persisted_intermediates(spark, sf_smoke):
+    """Dedup operators materialize reused subplans (shingles, LSH buckets)
+    and leave their lifecycle to the caller's cache_scope: once the scope
+    closes the CacheManager holds nothing (long-lived monitor sessions
+    must not accumulate), and an empty scope afterwards is a no-op."""
+    from boann_ocsf_security_data_platform_spark.operators import cache_scope
+    from boann_ocsf_security_data_platform_spark.operators.dedup import (
+        ngram_jaccard_pairs,
+    )
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()  # drop anything earlier tests left
+    docs = load_table(spark, sf_smoke, "documents")
+
+    with cache_scope():
+        minhash_near_dup_pairs(docs, jaccard_threshold=0.5).count()
+        assert not cm.isEmpty()  # intermediates really were cached
+    assert cm.isEmpty()
+
+    with cache_scope():
+        ngram_jaccard_pairs(docs, threshold=0.5).count()
+        assert not cm.isEmpty()
+    assert cm.isEmpty()
+    with cache_scope():
+        pass
+    assert cm.isEmpty()
+
+
+def test_release_all_caches_safety_valve(spark, sf_smoke):
+    """With no scope open, materialize is a plain persist the caller owns:
+    a later scope does not free it (nothing is kept in a process-wide
+    list), and spark.catalog.clearCache(), perfbench's per-entry valve,
+    frees it, derived frames whose intermediates have no handle too."""
+    from boann_ocsf_security_data_platform_spark.operators import (
+        cache_scope,
+        materialize,
+    )
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+
+    def is_persisted(df):
+        lvl = df.storageLevel
+        return lvl.useMemory or lvl.useDisk
+
+    spark.catalog.clearCache()
+    docs = load_table(spark, sf_smoke, "documents")
+    minhash_near_dup_pairs(docs).filter("id_a >= 0").count()  # handle lost
+    assert not cm.isEmpty()
+    own = materialize(docs.select("doc_id"))
+    with cache_scope():
+        pass  # a scope frees only what was materialized inside it
+    assert is_persisted(own)
+    spark.catalog.clearCache()
+    assert cm.isEmpty()
+    assert not is_persisted(own)
+
+
 def test_connected_components_known_graph(spark):
     """Path a-b-c plus pair d-e: two clusters labeled by their min id;
     path shape needs >1 propagation round (transitivity, not just direct
@@ -518,8 +575,8 @@ def test_deterministic_shuffle_reproducible_and_seed_sensitive(spark):
 
 def test_cache_scope_releases_even_for_derived_frames(spark, sf_smoke):
     """cache_scope releases everything materialized inside it, so deriving
-    from an operator's result cannot leak: both dedup families' caches go
-    on exit, including on exception; nested scopes free only their own
+    from an operator's result cannot leak: its caches go on exit,
+    including on exception; nested scopes free only their own
     frames; a frame another thread materializes is that thread's and
     survives. Asserts on the CacheManager and the frames' storage levels,
     not the JVM-global persistent-RDD count (localCheckpoint blocks and
@@ -530,9 +587,6 @@ def test_cache_scope_releases_even_for_derived_frames(spark, sf_smoke):
     from boann_ocsf_security_data_platform_spark.operators import (
         cache_scope,
         materialize,
-    )
-    from boann_ocsf_security_data_platform_spark.operators.dedup import (
-        ngram_jaccard_pairs,
     )
 
     cm = spark._jsparkSession.sharedState().cacheManager()
@@ -547,7 +601,6 @@ def test_cache_scope_releases_even_for_derived_frames(spark, sf_smoke):
         minhash_near_dup_pairs(docs, jaccard_threshold=0.5).filter(
             "id_a >= 0"
         ).count()
-        ngram_jaccard_pairs(docs, threshold=0.5).count()
         assert not cm.isEmpty()  # intermediates really were cached
     assert cm.isEmpty()  # released despite the derived frame
 
