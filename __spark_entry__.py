@@ -29,7 +29,10 @@ from boann_ocsf_security_data_platform_spark.operators.cache import (
     cache_scope,
     materialize,
 )
-from boann_ocsf_security_data_platform_spark.operators.gates import size_gated
+from boann_ocsf_security_data_platform_spark.operators.gates import (
+    merge_pinned,
+    size_gated,
+)
 from boann_ocsf_security_data_platform_spark.operators.dedup import (
     _xor_constant,
     minhash_near_dup_pairs,
@@ -87,40 +90,19 @@ def _collapse_exact_docs(dd: DataFrame, n: int) -> DataFrame:
     return dd.join(keep.hint("merge"), "doc_id")
 
 
-def _pin(df: DataFrame, pin: bool) -> DataFrame:
-    """Conditional sort-merge pin for a corpus-scaling join input —
-    ``hint("merge")`` when ``pin`` (derived from a MEASURED table count,
-    never an estimate), planner freedom otherwise. See
-    operators.dedup._corpus_sized for the defect class this guards."""
-    return df.hint("merge") if pin else df
-
-
-# Per-sort-task row target for sized fact shuffles: ~4M narrow fact rows
-# ≈ 130 MB unsafe sort memory — spills rarely, and a spilled merge holds
-# few enough files that the per-reader read-ahead buffers (unmanaged
-# heap, ~2 MB each) stay bounded. The round-12 q8 find: at the session
-# default of 32 shuffle partitions a FULL-fact sort-merge join sorts
-# 19M rows per task, and 32 concurrent tasks × two sides × dozens of
-# spill readers OOM'd the default 8g heap in the merge phase — the
-# filtered TPC-H siblings (q3/q5/q7) survive only because their date
-# predicates cut the sorted volume first.
-_FACT_SORT_TARGET_ROWS = 4_000_000
-
-
 def _widen_fact_shuffle(df: DataFrame, key: str, n_rows: int) -> DataFrame:
     """Spill-aware shuffle sizing for an UNFILTERED fact join side:
     above the fact gate, hash-repartition on the join key to a measured
-    partition count (~_FACT_SORT_TARGET_ROWS rows per sort task) instead
+    partition count (~gates.FACT_SORT_TARGET_ROWS rows per sort task) instead
     of riding the session-wide 32. Both join sides must be widened with
     the SAME n_rows so the partition counts match and the sort-merge
     join reuses the partitioning (no extra exchange — this IS the
     join's shuffle, just sized). Below the gate: planner freedom, the
     default partitioning is measured-safe and small-scale plans keep
     their broadcast forms."""
-    if n_rows <= _gates.PIN_FACT_MIN_ROWS:
-        return df
-    parts = min(2048, max(32, n_rows // _FACT_SORT_TARGET_ROWS + 1))
-    return df.repartition(parts, F.col(key))
+    if _gates.over("fact", n_rows):
+        return _gates.sized_shuffle(df, key, n_rows)
+    return df
 
 
 def _order_buckets(
@@ -401,9 +383,7 @@ def _percentiles_by_group(
     concern (both arms are bit-identical). Inherits
     :func:`_grouped_percentile_cont`'s non-null-per-group
     precondition."""
-    if _gates.distribute_exact_percentile(
-        _table_count(spark, sf_dir, count_table)
-    ):
+    if _gates.over("fact", _table_count(spark, sf_dir, count_table)):
         return _grouped_percentile_cont(df, part_col, value_col, ps)
     return df.groupBy(part_col).agg(
         *[
@@ -433,19 +413,16 @@ def _table_count(spark, sf_dir: str, name: str) -> int:
 def _docs_gated_with_pin(spark, sf_dir):
     """(docs', lsh_valve, pin_shuffle_join) for the minhash-family
     entries: ONE corpus count drives all three size-based plan choices —
-    the exact-dedup-first collapse (above HUBNESS_EXACT_MAX_ROWS), the
+    the exact-dedup-first collapse (above THRESHOLDS["pairwise_exact"]), the
     LSH bucket valve, and whether the pair operators pin their
-    corpus-scaling join inputs to sort-merge (above LSH_VALVE_MIN_ROWS;
+    corpus-scaling join inputs to sort-merge (above THRESHOLDS["docs"];
     below it the frames provably fit a broadcast build and the static
     broadcast is ~2x on the bench-scale path)."""
     docs = _t(spark, sf_dir, "documents")
     n = _table_count(spark, sf_dir, "documents")
-    if n > HUBNESS_EXACT_MAX_ROWS:
+    if _gates.over("pairwise_exact", n):
         docs = _collapse_exact_docs(docs, n)
-    valve = (
-        _gates.MAX_LSH_BUCKET if n > _gates.LSH_VALVE_MIN_ROWS else None
-    )
-    return docs, valve, _gates.pin_shuffle_join(n)
+    return docs, _gates.lsh_valve(n), _gates.over("docs", n)
 
 
 def _near_dup_clusters_gated(spark, sf_dir: str) -> DataFrame:
@@ -466,15 +443,13 @@ def _near_dup_clusters_gated(spark, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     n = _table_count(spark, sf_dir, "documents")
-    valve = (
-        _gates.MAX_LSH_BUCKET if n > _gates.LSH_VALVE_MIN_ROWS else None
-    )
-    if n <= HUBNESS_EXACT_MAX_ROWS:
+    valve = _gates.lsh_valve(n)
+    if not _gates.over("pairwise_exact", n):
         with cache_scope():
             pairs = minhash_near_dup_pairs(
                 docs,
                 max_bucket_size=valve,
-                pin_shuffle_join=_gates.pin_shuffle_join(n),
+                pin_shuffle_join=_gates.over("docs", n),
             )
             return cluster_pairs(pairs)  # eager: result is checkpointed
     return near_dup_clusters_collapsed(docs, max_bucket_size=valve)
@@ -492,15 +467,13 @@ def _near_dup_participants_gated(spark, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     n = _table_count(spark, sf_dir, "documents")
-    valve = (
-        _gates.MAX_LSH_BUCKET if n > _gates.LSH_VALVE_MIN_ROWS else None
-    )
-    if n <= HUBNESS_EXACT_MAX_ROWS:
+    valve = _gates.lsh_valve(n)
+    if not _gates.over("pairwise_exact", n):
         with cache_scope():
             pairs = minhash_near_dup_pairs(
                 docs,
                 max_bucket_size=valve,
-                pin_shuffle_join=_gates.pin_shuffle_join(n),
+                pin_shuffle_join=_gates.over("docs", n),
             )
             return (
                 pairs.select(F.col("id_a").alias("doc_id"))
@@ -719,7 +692,7 @@ def q5_local_supplier_volume(spark, sf_dir):
     """TPC-H Q5. Below the measured dim gate the r11 bench shape is kept
     verbatim: every dim broadcasts, lineitem streams through five
     broadcast hash joins without ever shuffling. Above the gate
-    (customer > PIN_DIM_MIN_ROWS — the scale where customer stops
+    (customer > THRESHOLDS["dim"] — the scale where customer stops
     broadcasting and the old syntactic order planned an UNFILTERED
     lineitem⋈orders SMJ, 600 M × 150 M rows at sf100, before the ASIA
     filter cut anything) the join order is rewritten to push the region
@@ -741,9 +714,7 @@ def q5_local_supplier_volume(spark, sf_dir):
     s = _t(spark, sf_dir, "supplier")
     n = _t(spark, sf_dir, "nation")
     r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    if not _gates.pin_shuffle_join_dim(
-        _table_count(spark, sf_dir, "customer")
-    ):
+    if not _gates.over("dim", _table_count(spark, sf_dir, "customer")):
         return (
             l.join(o, l.l_orderkey == o.o_orderkey)
             .join(c, o.o_custkey == c.c_custkey)
@@ -791,9 +762,9 @@ def q5_local_supplier_volume(spark, sf_dir):
         F.col("s_nationkey") == F.col("_snk"),
     ).select("s_suppkey", "s_nationkey")
     s_side = (
-        F.broadcast(s_asia)
-        if _table_count(spark, sf_dir, "supplier") <= 10_000_000
-        else _pin(s_asia, True)
+        merge_pinned(s_asia)
+        if _gates.over("fact", _table_count(spark, sf_dir, "supplier"))
+        else F.broadcast(s_asia)
     )
     return (
         _widen_fact_shuffle(
@@ -942,14 +913,12 @@ def join_theta_inequality(spark, sf_dir):
     pairs through one broadcast join + partial count. Below the gate the
     literal form runs (the plan the bench had through round 11); above
     it the pair stream is the hazard (~24 B pairs at sf100) and the
-    domain form engages — the distribute_exact_percentile discipline.
+    domain form engages — the grouped-percentile dispatch's discipline.
     Both arms produce identical counts (forced-gate identity test)."""
     c = _t(spark, sf_dir, "customer")
     s = _t(spark, sf_dir, "supplier")
     n = _t(spark, sf_dir, "nation")
-    if not _gates.count_pairs_order_stats(
-        _table_count(spark, sf_dir, "customer")
-    ):
+    if not _gates.over("dim", _table_count(spark, sf_dir, "customer")):
         return (
             c.join(
                 s,
@@ -1456,7 +1425,7 @@ def text_levenshtein_fuzzy(spark, sf_dir):
     whose per-block pair count grew quadratically with data because the
     blocking key had fixed cardinality.
 
-    SIZE-GATED (the containment discipline): above HUBNESS_EXACT_MAX_ROWS
+    SIZE-GATED (the containment discipline): above THRESHOLDS["pairwise_exact"]
     documents, exact duplicates collapse to one representative first —
     replica candidate pairs are edit-distance-0 TRUE OUTPUT growing with
     copies² and belong to exact dedup's report; fuzzy matches among
@@ -1932,7 +1901,7 @@ def dedup_filtered_corpus(spark, sf_dir):
     clusters = _near_dup_clusters_gated(spark, sf_dir)
     losers = clusters.filter(F.col("node") != F.col("cluster_id"))
     return docs.join(
-        _pin(losers, _gates.pin_shuffle_join(_table_count(spark, sf_dir, "documents"))),
+        merge_pinned(losers, _gates.over("docs", _table_count(spark, sf_dir, "documents"))),
         docs.doc_id == losers.node,
         "left_anti",
     ).select("doc_id", "n_chars")
@@ -1984,7 +1953,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
     """Exact source-blocked n-gram Jaccard pairs ≥ 0.5.
 
     SIZE-GATED (the containment discipline, round 9): above
-    HUBNESS_EXACT_MAX_ROWS documents, exact duplicates collapse to one
+    THRESHOLDS["pairwise_exact"] documents, exact duplicates collapse to one
     representative per content hash before the shingle self-join —
     replica pairs are jaccard-1.0 TRUE OUTPUT growing with copies² (the
     sf10 sweep measured 85x wall on the 100-copy corpus) and belong to
@@ -2063,7 +2032,7 @@ def embedding_near_dup(spark, sf_dir):
     block (fixed cardinality → quadratic per-block growth).
 
     SIZE-GATED (round 8): n_planes stays the oracle-pinned 4 at or below
-    HUBNESS_EXACT_MAX_ROWS rows; above it auto_n_planes holds the
+    THRESHOLDS["pairwise_exact"] rows; above it auto_n_planes holds the
     expected bucket at ~64 vectors (4 fixed planes = 16 buckets measured
     111.7 s at sf1 — exactly the fixed-plane degradation this entry's
     own docstring describes) AND identical vectors collapse to one
@@ -2094,10 +2063,10 @@ def embedding_near_dup(spark, sf_dir):
         # documents). semantic_dedup sizes from reps.count() for the same
         # reason; round-9 ADVICE item.
         e = exact_vector_dedup(e)
-        return e, auto_n_planes(e.count(), _HUBNESS_LSH_TARGET_BUCKET)
+        return e, auto_n_planes(e.count(), _gates.LSH_TARGET_BUCKET)
 
     emb, planes = size_gated(
-        _t(spark, sf_dir, "embeddings"), _exact, _scale, HUBNESS_EXACT_MAX_ROWS
+        _t(spark, sf_dir, "embeddings"), _exact, _scale, "pairwise_exact"
     )
     emb = emb.withColumn(
         "_blk", lsh_bucket(F.col("embedding"), n_planes=planes, dim=64)
@@ -2106,7 +2075,7 @@ def embedding_near_dup(spark, sf_dir):
         emb,
         block_col="_blk",
         threshold=0.3,
-        pin_shuffle_join=_gates.pin_shuffle_join(_table_count(spark, sf_dir, "embeddings")),
+        pin_shuffle_join=_gates.over("docs", _table_count(spark, sf_dir, "embeddings")),
     )
 
 
@@ -2533,9 +2502,7 @@ def agg_median_countif_bool(spark, sf_dir):
     and joins back on the 5-row priority grain — identical doubles
     either way (raw-equality pin)."""
     o = _t(spark, sf_dir, "orders")
-    if not _gates.distribute_exact_percentile(
-        _table_count(spark, sf_dir, "orders")
-    ):
+    if not _gates.over("fact", _table_count(spark, sf_dir, "orders")):
         return o.groupBy("o_orderpriority").agg(
             F.round(F.median("o_totalprice"), 2).alias("med_price"),
             F.count_if(F.col("o_totalprice") > 100000).alias("n_big"),
@@ -3387,8 +3354,7 @@ def q18_large_volume_customers(spark, sf_dir):
         .filter(F.col("_q") > 300)
         .select(F.col("l_orderkey").alias("_bk"))
     )
-    # one long per qualifying order: 5M keys ≈ 40 MB broadcast build
-    big_side = F.broadcast(big) if big.count() <= 5_000_000 else big
+    big_side = big if _gates.over("key_set", big.count()) else F.broadcast(big)
     return (
         c.join(o, F.col("c_custkey") == F.col("o_custkey"))
         .join(l, F.col("o_orderkey") == F.col("l_orderkey"))
@@ -3450,7 +3416,7 @@ def q21_waiting_suppliers(spark, sf_dir):
     o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     l = _t(spark, sf_dir, "lineitem")
     late_cut = F.col("o_orderdate") + F.expr("INTERVAL 365 DAYS")
-    pin = _gates.pin_shuffle_join_fact(_table_count(spark, sf_dir, "lineitem"))
+    pin = _gates.over("fact", _table_count(spark, sf_dir, "lineitem"))
     lines = materialize(
         l.select("l_orderkey", "l_suppkey", "l_shipdate")
         .join(o, F.col("o_orderkey") == F.col("l_orderkey"))
@@ -3788,7 +3754,7 @@ def text_tfidf_top_terms(spark, sf_dir):
     out = tfidf_top_terms(
         _t(spark, sf_dir, "documents"),
         k=5,
-        pin_shuffle_join=_gates.pin_shuffle_join(_table_count(spark, sf_dir, "documents")),
+        pin_shuffle_join=_gates.over("docs", _table_count(spark, sf_dir, "documents")),
     )
     return out.withColumn("rank", F.col("rank").cast("long"))
 
@@ -3822,7 +3788,7 @@ def semantic_dedup_survivors(spark, sf_dir):
     connected components → keep the min-id representative per group. The
     full embedding-space analogue of dedup_filtered_corpus.
 
-    SIZE-GATED (round 8): at or below HUBNESS_EXACT_MAX_ROWS rows,
+    SIZE-GATED (round 8): at or below THRESHOLDS["pairwise_exact"] rows,
     n_planes is pinned to 4 so the DuckDB oracle (which inlines the same
     4 hyperplanes) stays bit-identical — the hash-verified arm at
     sf0.01/sf0.1. Above it the operator's auto_n_planes tuning takes
@@ -3853,15 +3819,15 @@ def semantic_dedup_survivors(spark, sf_dir):
         # reps feeds the pair pipeline AND the final anti-join: both
         # consumers re-ran the replica collapse, and the two vec_id
         # joins fused into one 5-sorter region (round-12 scan-all find).
-        # The scale arm only runs above HUBNESS_EXACT_MAX_ROWS, so it is
+        # The scale arm only runs above THRESHOLDS["pairwise_exact"], so it is
         # fact-sized by construction (vectors are wide).
         reps = materialize(exact_vector_dedup(e), disk=True)
         return semantic_dedup(
-            reps, threshold=0.3, target_bucket_size=_HUBNESS_LSH_TARGET_BUCKET
+            reps, threshold=0.3, target_bucket_size=_gates.LSH_TARGET_BUCKET
         )
 
     emb = _t(spark, sf_dir, "embeddings")
-    return size_gated(emb, _exact, _scale, HUBNESS_EXACT_MAX_ROWS).select(
+    return size_gated(emb, _exact, _scale, "pairwise_exact").select(
         "vec_id", "label"
     )
 
@@ -4508,7 +4474,7 @@ def dedup_prefix_filter_jaccard(spark, sf_dir):
     output provably identical to the oracle's O(n²) loop (which the oracle
     runs; the operator does not).
 
-    SIZE-GATED (round 8): above HUBNESS_EXACT_MAX_ROWS documents, exact
+    SIZE-GATED (round 8): above THRESHOLDS["pairwise_exact"] documents, exact
     duplicates are collapsed to one representative per content hash
     BEFORE the similarity join, and pairs are emitted among DISTINCT
     texts only. On a duplication-heavy corpus the jaccard=1.0 replica
@@ -4854,7 +4820,7 @@ def text_bigram_lm_score(spark, sf_dir):
 
     return bigram_lm_score(
         _t(spark, sf_dir, "documents"),
-        pin_shuffle_join=_gates.pin_shuffle_join(_table_count(spark, sf_dir, "documents")),
+        pin_shuffle_join=_gates.over("docs", _table_count(spark, sf_dir, "documents")),
     )
 
 
@@ -4883,7 +4849,7 @@ def dedup_containment_pairs(spark, sf_dir):
     max_shingle_df stop-gram valve is the 100 TB skew control.
 
     SIZE-GATED (round 8, the prefix-filter discipline): above
-    HUBNESS_EXACT_MAX_ROWS documents, exact duplicates collapse to one
+    THRESHOLDS["pairwise_exact"] documents, exact duplicates collapse to one
     representative per content hash BEFORE the shingle join — replica
     pairs are containment-1.0 TRUE OUTPUT growing with copies² (the r4
     note's 42 s uncapped at sf1; 94.6 s in the round-8 registry sweep)
@@ -4951,7 +4917,7 @@ def corpus_dsir_weights(spark, sf_dir):
     corpus = docs.filter(F.col("source") != _DECON_BENCH)
     target = docs.filter(F.col("source") == _DECON_BENCH)
     return dsir_importance(
-        corpus, target, pin_shuffle_join=_gates.pin_shuffle_join(_table_count(spark, sf_dir, "documents"))
+        corpus, target, pin_shuffle_join=_gates.over("docs", _table_count(spark, sf_dir, "documents"))
     )
 
 
@@ -4996,7 +4962,7 @@ def text_segment_dedup(spark, sf_dir):
     return segment_dedup(
         _t(spark, sf_dir, "documents"),
         seg_words=10,
-        pin_shuffle_join=_gates.pin_shuffle_join(_table_count(spark, sf_dir, "documents")),
+        pin_shuffle_join=_gates.over("docs", _table_count(spark, sf_dir, "documents")),
     )
 
 
@@ -5031,7 +4997,7 @@ def dedup_cross_corpus(spark, sf_dir):
     persisted artifact, bucketed by shingle for a co-located join.
 
     SIZE-GATED (the containment/prefix-filter discipline): above
-    HUBNESS_EXACT_MAX_ROWS documents, exact duplicates collapse to one
+    THRESHOLDS["pairwise_exact"] documents, exact duplicates collapse to one
     representative per content hash WITHIN EACH SIDE before the shingle
     join. Within-side replicas are jaccard-1.0 TRUE OUTPUT growing with
     copies² (the r4 scale note measured exactly 100.0x pairs at 10x data;
@@ -5048,7 +5014,7 @@ def dedup_cross_corpus(spark, sf_dir):
     new_df = docs.filter(F.col("doc_id") % 5 == 0)
     idx_df = docs.filter(F.col("doc_id") % 5 != 0)
     n = _table_count(spark, sf_dir, "documents")
-    if n > HUBNESS_EXACT_MAX_ROWS:
+    if _gates.over("pairwise_exact", n):
         new_df = _collapse_exact_docs(new_df, 0)
         idx_df = _collapse_exact_docs(idx_df, 0)
     return cross_corpus_jaccard_pairs(
@@ -5056,7 +5022,7 @@ def dedup_cross_corpus(spark, sf_dir):
         idx_df,
         threshold=0.5,
         max_shingle_df=_gates.MAX_SHINGLE_DF,
-        pin_shuffle_join=_gates.pin_shuffle_join(n),
+        pin_shuffle_join=_gates.over("docs", n),
     )
 
 
@@ -5741,7 +5707,7 @@ def dedup_duplicate_spans(spark, sf_dir):
     # (the dominant exchange at 450M spans) and the duplicated-span set
     # pins sort-merge; below it, verbatim strings = the oracle-hashed arm
     n_docs = _table_count(spark, sf_dir, "documents")
-    gated = n_docs > _gates.LSH_VALVE_MIN_ROWS
+    gated = _gates.over("docs", n_docs)
     with cache_scope():
         res = duplicate_span_stats(
             _t(spark, sf_dir, "documents"),
@@ -5792,7 +5758,7 @@ def graph_triangle_count(spark, sf_dir):
         .select(F.col("a.pk").alias("src"), F.col("b.pk").alias("dst"))
         .distinct()
     )
-    return triangle_count(edges, pin_shuffle_join=_gates.pin_shuffle_join_fact(_table_count(spark, sf_dir, "lineitem")))
+    return triangle_count(edges, pin_shuffle_join=_gates.over("fact", _table_count(spark, sf_dir, "lineitem")))
 
 
 @_q(
@@ -6545,7 +6511,7 @@ def agg_pareto_abc(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
     c = materialize(
         o.groupBy("o_custkey").agg(F.sum("o_totalprice").alias("rev")),
-        disk=_table_count(spark, sf_dir, "orders") > _gates.PIN_FACT_MIN_ROWS,
+        disk=_gates.over("fact", _table_count(spark, sf_dir, "orders")),
     )
     tot = c.agg(F.sum("rev").alias("tot"))
     b = _order_buckets(c, "rev", ascending=False)
@@ -6635,7 +6601,7 @@ def dedup_minhash_eval(spark, sf_dir):
     the whole evaluation is three counts over their joined outputs.
 
     SIZE-GATED (the containment/cross-corpus discipline): above
-    HUBNESS_EXACT_MAX_ROWS documents, exact duplicates collapse to one
+    THRESHOLDS["pairwise_exact"] documents, exact duplicates collapse to one
     representative before BOTH the detector and the truth run. Replica
     pairs are trivially-caught jaccard-1.0 output growing with copies²
     (the exact-Jaccard truth side hit the same inherent blowup as
@@ -7073,7 +7039,7 @@ def agg_gini_coefficient(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
     c = materialize(
         o.groupBy("o_custkey").agg(F.sum("o_totalprice").alias("rev")),
-        disk=_table_count(spark, sf_dir, "orders") > _gates.PIN_FACT_MIN_ROWS,
+        disk=_gates.over("fact", _table_count(spark, sf_dir, "orders")),
     )
     nt = c.agg(
         F.count(F.lit(1)).alias("n"), F.sum("rev").alias("tot")
@@ -7404,10 +7370,10 @@ def orders_basket_lift(spark, sf_dir):
     # all three join inputs below are DERIVED fact-scaling frames (the
     # distinct basket stream and the per-item support table) — pin
     # sort-merge so a low estimate can't broadcast them (the
-    # dedup._corpus_sized discipline); the one-row n_orders scalar keeps
+    # gates.merge_pinned discipline); the one-row n_orders scalar keeps
     # its explicit broadcast
-    _fpin = _gates.pin_shuffle_join_fact(_table_count(spark, sf_dir, "lineitem"))
-    a, b = li.alias("a"), _pin(li.alias("b"), _fpin)
+    _fpin = _gates.over("fact", _table_count(spark, sf_dir, "lineitem"))
+    a, b = li.alias("a"), merge_pinned(li.alias("b"), _fpin)
     pair = (
         a.join(b, "ok")
         .where(F.col("a.pk") < F.col("b.pk"))
@@ -7418,8 +7384,8 @@ def orders_basket_lift(spark, sf_dir):
     ia = item.select(F.col("pk").alias("pk_a"), F.col("n_pk").alias("n_a"))
     ib = item.select(F.col("pk").alias("pk_b"), F.col("n_pk").alias("n_b"))
     return (
-        pair.join(_pin(ia, _fpin), "pk_a")
-        .join(_pin(ib, _fpin), "pk_b")
+        pair.join(merge_pinned(ia, _fpin), "pk_a")
+        .join(merge_pinned(ib, _fpin), "pk_b")
         .crossJoin(F.broadcast(n))
         .select(
             "pk_a",
@@ -7748,8 +7714,8 @@ def text_ngram_novelty(spark, sf_dir):
     return (
         # first-occurrence table is gram-count-sized (corpus-scaling) —
         # pinned sort-merge above the measured-count threshold (the
-        # dedup._corpus_sized discipline)
-        g.join(_pin(m, _gates.pin_shuffle_join(_table_count(spark, sf_dir, "documents"))), "gram")
+        # gates.merge_pinned discipline)
+        g.join(merge_pinned(m, _gates.over("docs", _table_count(spark, sf_dir, "documents"))), "gram")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_distinct_grams"),
@@ -7888,11 +7854,11 @@ def embedding_threshold_sweep(spark, sf_dir):
     4-row broadcast joined by inequality).
 
     SIZE-GATED DISPATCH (round 8, closing the documented 99x fixed-block
-    caveat): at or below HUBNESS_EXACT_MAX_ROWS rows the blocking is the
+    caveat): at or below THRESHOLDS["pairwise_exact"] rows the blocking is the
     oracle-pinned 4 fixed hyperplanes (the hash-verified path at
     sf0.01/sf0.1); above it, plane count comes from auto_n_planes (held
     expected bucket size) AND each block's rows are capped
-    deterministically at _HUBNESS_MAX_BLOCK_CAND (xxhash64 order) — the
+    deterministically at gates.MAX_BLOCK_CANDIDATES (xxhash64 order) — the
     same replica-proof valve as the hubness profile, because exact
     duplicates share every bucket at any plane count. Above the gate the
     sweep is therefore a CALIBRATION SAMPLE (per-block bounded pair
@@ -7909,7 +7875,7 @@ def embedding_threshold_sweep(spark, sf_dir):
         )
 
     def _scale(e, n):
-        planes = auto_n_planes(n, _HUBNESS_LSH_TARGET_BUCKET)
+        planes = auto_n_planes(n, _gates.LSH_TARGET_BUCKET)
         e = e.withColumn(
             "_blk", lsh_bucket(F.col("embedding"), n_planes=planes, dim=64)
         )
@@ -7918,18 +7884,18 @@ def embedding_threshold_sweep(spark, sf_dir):
         )
         return (
             e.withColumn("_crn", F.row_number().over(wb))
-            .filter(F.col("_crn") <= _HUBNESS_MAX_BLOCK_CAND)
+            .filter(F.col("_crn") <= _gates.MAX_BLOCK_CANDIDATES)
             .drop("_crn")
         )
 
     emb = size_gated(
-        _t(spark, sf_dir, "embeddings"), _exact, _scale, HUBNESS_EXACT_MAX_ROWS
+        _t(spark, sf_dir, "embeddings"), _exact, _scale, "pairwise_exact"
     )
     pairs = embedding_near_dup_pairs(
         emb,
         block_col="_blk",
         threshold=0.3,
-        pin_shuffle_join=_gates.pin_shuffle_join(_table_count(spark, sf_dir, "embeddings")),
+        pin_shuffle_join=_gates.over("docs", _table_count(spark, sf_dir, "embeddings")),
     )
     th = spark.createDataFrame(
         [(0.3,), (0.5,), (0.7,), (0.9,)], "threshold double"
@@ -8183,7 +8149,7 @@ def text_jsd_divergence(spark, sf_dir):
     )
     # per-source token distributions are vocabulary-scaling (derived
     # aggregates) — pinned sort-merge above the measured-count threshold
-    both = a.join(_pin(b, _gates.pin_shuffle_join(_table_count(spark, sf_dir, "documents"))), "token").where(
+    both = a.join(merge_pinned(b, _gates.over("docs", _table_count(spark, sf_dir, "documents"))), "token").where(
         F.col("src_a") < F.col("src_b")
     )
     shared = both.groupBy("src_a", "src_b").agg(
@@ -8737,7 +8703,7 @@ def graph_link_prediction(spark, sf_dir):
     )
     with cache_scope():
         scored = jaccard_link_prediction(
-            edges, k=50, pin_shuffle_join=_gates.pin_shuffle_join_fact(_table_count(spark, sf_dir, "lineitem"))
+            edges, k=50, pin_shuffle_join=_gates.over("fact", _table_count(spark, sf_dir, "lineitem"))
         )
         return scored.localCheckpoint(eager=True)  # so the caches can go
 
@@ -8877,8 +8843,8 @@ def agg_mann_whitney_u(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
     # measured-count sort-merge pin — same estimate-driven-broadcast
     # hazard as agg_kruskal_wallis (see comment there)
-    pin = _gates.pin_shuffle_join_fact(_table_count(spark, sf_dir, "orders"))
-    c = _pin(_t(spark, sf_dir, "customer"), pin)
+    pin = _gates.over("fact", _table_count(spark, sf_dir, "orders"))
+    c = merge_pinned(_t(spark, sf_dir, "customer"), pin)
     pv = (
         o.join(c, o.o_custkey == c.c_custkey)
         .filter(F.col("c_mktsegment").isin(["BUILDING", "AUTOMOBILE"]))
@@ -9017,8 +8983,8 @@ def feature_loo_target_encoding(spark, sf_dir):
     # customer SCALES with the corpus but its pruned scan estimates tiny
     # (replicated text compresses ~100:1) — left to estimates Catalyst
     # broadcast-built 15M rows at sf100 and OOM'd. Measured-count pin.
-    c = _pin(
-        c, _gates.pin_shuffle_join_dim(_table_count(spark, sf_dir, "customer"))
+    c = merge_pinned(
+        c, _gates.over("dim", _table_count(spark, sf_dir, "customer"))
     )
     j = o.join(c, o.o_custkey == c.c_custkey).select(
         F.col("o_orderkey"),
@@ -9893,12 +9859,8 @@ def corpus_dedup_report(spark, sf_dir):
         F.count(F.lit(1)).alias("g"),
         F.coalesce(F.sum(F.col("n_copies") - 1), F.lit(0)).alias("l"),
     ).collect()[0]
-    valve = (
-        _gates.MAX_LSH_BUCKET
-        if n_docs > _gates.LSH_VALVE_MIN_ROWS
-        else None
-    )
-    if n_docs <= HUBNESS_EXACT_MAX_ROWS:
+    valve = _gates.lsh_valve(n_docs)
+    if not _gates.over("pairwise_exact", n_docs):
         with cache_scope():
             pairs = minhash_near_dup_pairs(docs, max_bucket_size=valve)
             n_pairs = pairs.count()  # while the shingle caches are live
@@ -10394,8 +10356,8 @@ def text_zipf_fit(spark, sf_dir):
     )
 
 
-FUZZY_EXACT_MAX_ROWS = _gates.FUZZY_EXACT_MAX_ROWS
-# Size gate for join_fuzzy_entity_resolution: the first-name-token
+# Size gate for join_fuzzy_entity_resolution (gates.THRESHOLDS key
+# "fuzzy_exact"): the first-name-token
 # blocking key has FIXED cardinality (the synthetic generator uses only
 # ~8 color words; real TPC-H ~92), so blocks grow linearly with the
 # catalog and candidates (probes x block) grow QUADRATICALLY — the same
@@ -10406,7 +10368,8 @@ FUZZY_EXACT_MAX_ROWS = _gates.FUZZY_EXACT_MAX_ROWS
 #   1. the block key widens to the first TWO tokens (multi-token
 #      blocking — helps in proportion to vocabulary size), and
 #   2. the catalog side of each block is CAPPED at
-#      FUZZY_MAX_BLOCK_CAND rows deterministically (xxhash64 order) —
+#      gates.MAX_FUZZY_BLOCK_CANDIDATES rows deterministically
+#      (xxhash64 order) —
 #      the max_bucket_size discipline, because on a SATURATED
 #      vocabulary (measured: 64 two-token blocks at sf1, avg 3125
 #      rows) no token scheme bounds block size; the cap turns pair
@@ -10415,8 +10378,6 @@ FUZZY_EXACT_MAX_ROWS = _gates.FUZZY_EXACT_MAX_ROWS
 # approximation (each probe ranks a deterministic ~cap-row panel per
 # block, top-3 of the panel); on realistic large-vocabulary name data
 # the cap rarely binds and results are complete.
-FUZZY_MAX_BLOCK_CAND = _gates.MAX_FUZZY_BLOCK_CANDIDATES
-
 
 
 @_q(
@@ -10452,7 +10413,7 @@ def join_fuzzy_entity_resolution(spark, sf_dir):
     (dist ≤ 4 forces |len(a) − len(b)| ≤ 4 — a cheap int compare that
     never changes results) prunes pairs before the O(len²) Levenshtein,
     Levenshtein runs JVM-side (built-in, no UDF), the top-3 plans as
-    WindowGroupLimit, and above FUZZY_EXACT_MAX_ROWS the block key
+    WindowGroupLimit, and above THRESHOLDS["fuzzy_exact"] the block key
     widens to two tokens so block sizes stay flat as the catalog grows
     (see the gate comment)."""
     def _exact(pp, n):
@@ -10471,17 +10432,17 @@ def join_fuzzy_entity_resolution(spark, sf_dir):
         # with the candidate join, so unpersisted they FUSE into one
         # 4-sorter region (round-12 scan-all find) — and the probe side
         # would re-run the cap. The scale arm only runs above
-        # FUZZY_EXACT_MAX_ROWS, so it is fact-sized by construction.
+        # THRESHOLDS["fuzzy_exact"], so it is fact-sized by construction.
         capped = materialize(
             pp.withColumn("_crn", F.row_number().over(wb))
-            .filter(F.col("_crn") <= FUZZY_MAX_BLOCK_CAND)
+            .filter(F.col("_crn") <= _gates.MAX_FUZZY_BLOCK_CANDIDATES)
             .drop("_crn"),
             disk=True,
         )
         return pp, capped
 
     p, catalog = size_gated(
-        _t(spark, sf_dir, "part"), _exact, _scale, FUZZY_EXACT_MAX_ROWS
+        _t(spark, sf_dir, "part"), _exact, _scale, "fuzzy_exact"
     )
     probes = p.filter(F.col("p_partkey") % 100 == 0).select(
         F.col("p_partkey").alias("probe_key"),
@@ -10492,9 +10453,9 @@ def join_fuzzy_entity_resolution(spark, sf_dir):
         # the catalog side is the full (or block-capped) part table —
         # catalog-scaling; pinned above the measured-count threshold
         probes.join(
-            _pin(
+            merge_pinned(
                 catalog,
-                _gates.pin_shuffle_join(_table_count(spark, sf_dir, "part")),
+                _gates.over("docs", _table_count(spark, sf_dir, "part")),
             ),
             "blk",
         )
@@ -10993,7 +10954,7 @@ def dedup_weighted_jaccard(spark, sf_dir):
     |A∪B| weight as W_A + W_B − I so no union materializes.
     operators/dedup.py:weighted_jaccard_pairs.
 
-    SIZE-GATED like dedup_ngram_jaccard: above HUBNESS_EXACT_MAX_ROWS,
+    SIZE-GATED like dedup_ngram_jaccard: above THRESHOLDS["pairwise_exact"],
     exact duplicates collapse first — replica pairs (weighted jaccard
     1.0 by definition) grow with copies² (81x wall in the sf10 sweep)
     and belong to exact dedup's report; the oracle arm below the gate is
@@ -11330,8 +11291,8 @@ def text_kneser_ney_bigrams(spark, sf_dir):
         # scaling (derived aggregates over the bigram table) — pinned
         # above the measured-count threshold; the one-row total keeps
         # its broadcast
-        bc.join(_pin(uc, _gates.pin_shuffle_join(_table_count(spark, sf_dir, "documents"))), "w1")
-        .join(_pin(cont, _gates.pin_shuffle_join(_table_count(spark, sf_dir, "documents"))), "w2")
+        bc.join(merge_pinned(uc, _gates.over("docs", _table_count(spark, sf_dir, "documents"))), "w1")
+        .join(merge_pinned(cont, _gates.over("docs", _table_count(spark, sf_dir, "documents"))), "w2")
         .join(F.broadcast(tot))
         .select(
             "w1",
@@ -11570,7 +11531,7 @@ def parts_abc_xyz_classification(spark, sf_dir):
     # expensive double rollup of the lineitem fact — materialize it so
     # the fact is read once (isolated sf100: 365 s of recomputes -> one
     # rollup).
-    pin = _gates.pin_shuffle_join_fact(_table_count(spark, sf_dir, "lineitem"))
+    pin = _gates.over("fact", _table_count(spark, sf_dir, "lineitem"))
     per_part = materialize(
         pm.groupBy("pk").agg(
             F.sum("rev").alias("rev"),
@@ -12006,7 +11967,7 @@ def knn_hard_negatives(spark, sf_dir):
             spark, path, probes, k=5, n_probe=4, max_cosine=0.9
         )
 
-    return size_gated(emb, _exact, _scale, HUBNESS_EXACT_MAX_ROWS).withColumn(
+    return size_gated(emb, _exact, _scale, "pairwise_exact").withColumn(
         "rank", F.col("rank").cast("long")
     )
 
@@ -12414,7 +12375,7 @@ def graph_degree_assortativity(spark, sf_dir):
     # persist (hundreds of millions of pairs) plus TWO estimate-driven
     # broadcast builds of the derived degree table. Above the fact gate
     # the edge cache goes DISK_ONLY and the degree joins pin sort-merge.
-    pin = _gates.pin_shuffle_join_fact(_table_count(spark, sf_dir, "lineitem"))
+    pin = _gates.over("fact", _table_count(spark, sf_dir, "lineitem"))
     ec = materialize(
         a.join(b, "ok")
         .where(F.col("a.pk") < F.col("b.pk"))
@@ -12428,8 +12389,8 @@ def graph_degree_assortativity(spark, sf_dir):
     deg = e2.groupBy("x").agg(F.count(F.lit(1)).cast("double").alias("d"))
     n_edges = ec.count()
     n_nodes = deg.count()
-    da = _pin(deg.select(F.col("x").alias("_a"), F.col("d").alias("da")), pin)
-    db = _pin(deg.select(F.col("x").alias("_b"), F.col("d").alias("db")), pin)
+    da = merge_pinned(deg.select(F.col("x").alias("_a"), F.col("d").alias("da")), pin)
+    db = merge_pinned(deg.select(F.col("x").alias("_b"), F.col("d").alias("db")), pin)
     return (
         e2.join(da, e2.x == da._a)
         .join(db, e2.y == db._b)
@@ -12979,7 +12940,7 @@ def text_char_entropy_profile(spark, sf_dir):
     ent = (
         # per-doc totals are doc-grain (corpus-scaling) — pinned
         # sort-merge above the measured-count threshold
-        cnt.join(_pin(tot, _gates.pin_shuffle_join(_table_count(spark, sf_dir, "documents"))), "doc_id")
+        cnt.join(merge_pinned(tot, _gates.over("docs", _table_count(spark, sf_dir, "documents"))), "doc_id")
         .groupBy("source", "doc_id")
         .agg(
             (-F.sum((F.col("n") / F.col("t")) * F.log(F.col("n") / F.col("t"))))
@@ -13043,9 +13004,7 @@ def agg_spearman_rank_corr(spark, sf_dir):
     continuous domains where the value-domain rank maps themselves
     would scale with the data."""
     l = _t(spark, sf_dir, "lineitem")
-    if not _gates.pin_shuffle_join_fact(
-        _table_count(spark, sf_dir, "lineitem")
-    ):
+    if not _gates.over("fact", _table_count(spark, sf_dir, "lineitem")):
         wq = Window.partitionBy("l_returnflag").orderBy("l_quantity")
         wp = Window.partitionBy("l_returnflag").orderBy("l_extendedprice")
         tq = Window.partitionBy("l_returnflag", "l_quantity")
@@ -13578,8 +13537,8 @@ def agg_cramers_v(spark, sf_dir):
     # same estimate-forced dim-broadcast hazard as loo_target_encoding:
     # the 2-column customer projection estimates under the threshold at
     # sf100 while really holding 15M rows. Measured-count pin.
-    c = _pin(
-        c, _gates.pin_shuffle_join_dim(_table_count(spark, sf_dir, "customer"))
+    c = merge_pinned(
+        c, _gates.over("dim", _table_count(spark, sf_dir, "customer"))
     )
     j = o.join(c, o.o_custkey == c.c_custkey).select(
         F.col("c_mktsegment").alias("seg"),
@@ -13985,7 +13944,7 @@ def text_vocab_jaccard_sources(spark, sf_dir):
     a = v.alias("a")
     # per-source vocabularies are vocabulary-scaling — pinned above the
     # measured-count threshold
-    b = _pin(v.alias("b"), _gates.pin_shuffle_join(_table_count(spark, sf_dir, "documents")))
+    b = merge_pinned(v.alias("b"), _gates.over("docs", _table_count(spark, sf_dir, "documents")))
     inter = (
         a.join(
             b,
@@ -15763,7 +15722,7 @@ def text_bigram_entropy_rate(spark, sf_dir):
     return (
         # the (source, w1) context table is vocabulary-scaling — pinned
         # above the measured-count threshold
-        pair.join(_pin(uni, _gates.pin_shuffle_join(_table_count(spark, sf_dir, "documents"))), ["source", "w1"])
+        pair.join(merge_pinned(uni, _gates.over("docs", _table_count(spark, sf_dir, "documents"))), ["source", "w1"])
         .join(F.broadcast(tot), "source")
         .groupBy("source")
         .agg(
@@ -15947,7 +15906,7 @@ def agg_anderson_darling_normality(spark, sf_dir):
             )
         )
 
-    if _gates.pin_shuffle_join_fact(_table_count(spark, sf_dir, "lineitem")):
+    if _gates.over("fact", _table_count(spark, sf_dir, "lineitem")):
         # Contingency arm (round-10 sf100 find: the row-level rank window
         # funnels the fact through 3 partitions — same defect class as
         # agg_spearman_rank_corr). ln PHI is constant within a tie run of
@@ -16660,8 +16619,8 @@ def agg_kruskal_wallis(spark, sf_dir):
     # then slips under the broadcast threshold — Spark tried to build a
     # 15M-row hashed relation at sf100 ("Not enough memory to build and
     # broadcast"). Same estimate-driven-broadcast class as round 9.
-    pin = _gates.pin_shuffle_join_fact(_table_count(spark, sf_dir, "orders"))
-    c = _pin(_t(spark, sf_dir, "customer"), pin)
+    pin = _gates.over("fact", _table_count(spark, sf_dir, "orders"))
+    c = merge_pinned(_t(spark, sf_dir, "customer"), pin)
     # pv feeds the distinct-value table AND the per-group rank join —
     # unmaterialized, the orders⋈customer join ran once per consumer
     # (in-suite 6.4 s at sf0.1 for what is one small join; the plan
@@ -17550,7 +17509,7 @@ def graph_clustering_coefficient(spark, sf_dir):
         .select(F.col("a.pk").alias("src"), F.col("b.pk").alias("dst"))
     )
     out = local_clustering_coefficient(
-        edges, pin_shuffle_join=_gates.pin_shuffle_join_fact(_table_count(spark, sf_dir, "lineitem"))
+        edges, pin_shuffle_join=_gates.over("fact", _table_count(spark, sf_dir, "lineitem"))
     )
     return (
         out.select(
@@ -18405,7 +18364,7 @@ def corpus_quality_dedup_interaction(spark, sf_dir):
         "is_dup_m", F.lit(True)
     )
     flags = docs.select("doc_id").join(
-        _pin(dup_ids, _gates.pin_shuffle_join(_table_count(spark, sf_dir, "documents"))), "doc_id", "left"
+        merge_pinned(dup_ids, _gates.over("docs", _table_count(spark, sf_dir, "documents"))), "doc_id", "left"
     ).select(
         "doc_id", F.coalesce("is_dup_m", F.lit(False)).alias("is_dup")
     )
@@ -19546,7 +19505,7 @@ def corpus_quality_roc_auc(spark, sf_dir):
         .select("doc_id", F.col("quality_score").alias("s"))
         # dup_ids is corpus-scaling (on duplication-heavy data it is MOST
         # of the corpus) — pinned above the measured-count threshold
-        .join(_pin(dup_ids, _gates.pin_shuffle_join(_table_count(spark, sf_dir, "documents"))), "doc_id", "left")
+        .join(merge_pinned(dup_ids, _gates.over("docs", _table_count(spark, sf_dir, "documents"))), "doc_id", "left")
         .select(
             "s", F.coalesce("pos_m", F.lit(False)).alias("pos")
         )
@@ -19838,7 +19797,7 @@ def agg_conformal_interval(spark, sf_dir):
             F.col("o_totalprice").alias("y"),
             (F.col("o_orderkey") % 2 == 0).alias("is_cal"),
         ),
-        disk=_table_count(spark, sf_dir, "lineitem") > _gates.PIN_FACT_MIN_ROWS,
+        disk=_gates.over("fact", _table_count(spark, sf_dir, "lineitem")),
     )
     fit = j.filter(~F.col("is_cal")).agg(
         F.regr_slope("y", "x").alias("b1"),
@@ -20237,7 +20196,7 @@ def corpus_importance_ess(spark, sf_dir):
     # region at sf10). `d` also feeds BOTH the per-source max branch and
     # the weight branch: unpersisted, the broadcast side recomputed the
     # ENTIRE hashed-bigram DSIR pipeline — so it is materialized.
-    doc_pin = _gates.pin_shuffle_join(_table_count(spark, sf_dir, "documents"))
+    doc_pin = _gates.over("docs", _table_count(spark, sf_dir, "documents"))
     d = materialize(
         dsir_importance(
             corpus, target, pin_shuffle_join=doc_pin, carry_cols=("source",)
@@ -22087,7 +22046,7 @@ def agg_fleiss_kappa(spark, sf_dir):
     # estimate under the 64MB threshold, in-memory hash relation ~1GB);
     # pinned above the measured fact-count threshold
     j = per.join(
-        _pin(o, _gates.pin_shuffle_join_fact(_table_count(spark, sf_dir, "lineitem"))),
+        merge_pinned(o, _gates.over("fact", _table_count(spark, sf_dir, "lineitem"))),
         per.l_orderkey == o.o_orderkey,
     ).select(
         F.col("o_orderkey").alias("okey"),
@@ -22252,31 +22211,33 @@ def events_records_test(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-HUBNESS_EXACT_MAX_ROWS = _gates.PAIRWISE_EXACT_MAX_ROWS
-# Size gate for embedding_hubness_profile: below this row count, neighbor
-# lists are exact within label blocks (with 10 labels that is <=1k rows and
-# <=1M pairs per block — fine, and it is the oracle-hashed path at
-# sf0.01/sf0.1); above it, exact within-label pairs grow QUADRATICALLY with
-# block size (fixed label cardinality -> ~100x more pairs per data decade),
-# so the query dispatches to LSH-bucketed blocks whose expected size is held
-# constant by auto_n_planes — pair work then scales ~linearly with rows.
+# Size gate for embedding_hubness_profile (gates.THRESHOLDS key
+# "pairwise_exact"): below this row count, neighbor lists are exact within
+# label blocks (with 10 labels that is <=1k rows and <=1M pairs per block —
+# fine, and it is the oracle-hashed path at sf0.01/sf0.1); above it, exact
+# within-label pairs grow QUADRATICALLY with block size (fixed label
+# cardinality -> ~100x more pairs per data decade), so the query dispatches
+# to LSH-bucketed blocks whose expected size is held constant by
+# auto_n_planes — pair work then scales ~linearly with rows.
+#
+# Expected (label, bucket) block size on the LSH arm
+# (gates.LSH_TARGET_BUCKET): 64 candidates per point is ample for a top-3
+# neighbor list, and it bounds pair work at ~64 dot products per point —
+# constant per point, linear total. (Measured at sf1/20k rows: target 512
+# -> 10M pairs, 202 s; target 64 -> ~1.2M pairs — same profile output on
+# the key-offset-replicated data.)
+#
+# Hard candidate-side cap per (label, bucket) block
+# (gates.MAX_BLOCK_CANDIDATES) — the skew valve the dedup family calls
+# max_bucket_size. LSH cannot split EXACT-replica groups (identical vectors
+# share every bucket), so a duplication-heavy corpus grows block sizes with
+# the copy count no matter the plane count (measured on the
+# key-offset-replicated sf10: blocks ~100 rows = one 100-copy group, 20M
+# pairs, 21.8x per decade — super-linear). Capping the CANDIDATE side at 64
+# deterministically (xxhash64 order) bounds pair work at n x 64 — strictly
+# linear in rows; every point still queries (k_occ votes just come from a
+# bounded candidate panel).
 _HUBNESS_EMB_DIM = 64
-_HUBNESS_LSH_TARGET_BUCKET = _gates.LSH_TARGET_BUCKET
-# Expected (label, bucket) block size on the LSH arm. 64 candidates per
-# point is ample for a top-3 neighbor list, and it bounds pair work at
-# ~64 dot products per point — constant per point, linear total.
-# (Measured at sf1/20k rows: target 512 -> 10M pairs, 202 s; target 64 ->
-# ~1.2M pairs — same profile output on the key-offset-replicated data.)
-_HUBNESS_MAX_BLOCK_CAND = _gates.MAX_BLOCK_CANDIDATES
-# Hard candidate-side cap per (label, bucket) block — the skew valve the
-# dedup family calls max_bucket_size. LSH cannot split EXACT-replica
-# groups (identical vectors share every bucket), so a duplication-heavy
-# corpus grows block sizes with the copy count no matter the plane count
-# (measured on the key-offset-replicated sf10: blocks ~100 rows = one
-# 100-copy group, 20M pairs, 21.8x per decade — super-linear). Capping
-# the CANDIDATE side at 64 deterministically (xxhash64 order) bounds
-# pair work at n x 64 — strictly linear in rows; every point still
-# queries (k_occ votes just come from a bounded candidate panel).
 
 
 def _hubness_pairs(e, extra_block_cols=()):
@@ -22371,7 +22332,7 @@ def embedding_hubness_profile(spark, sf_dir):
     retrieval and recall collapses off-hub; it decides between raw
     cosine and hubness-corrected scoring before any index is built).
     SIZE-GATED DISPATCH (the r7-verdict fix): at or below
-    HUBNESS_EXACT_MAX_ROWS rows, neighbor lists are exact WITHIN label
+    THRESHOLDS["pairwise_exact"] rows, neighbor lists are exact WITHIN label
     blocks — the oracle-hashed path at sf0.01/sf0.1; above it, each
     label block is further split by a random-hyperplane LSH bucket
     (operators/similarity.lsh_bucket, plane count from auto_n_planes so
@@ -22397,12 +22358,12 @@ def embedding_hubness_profile(spark, sf_dir):
             F.countDistinct("label").alias("nl")
         ).collect()[0][0]
         planes = auto_n_planes(
-            n // max(1, n_labels), _HUBNESS_LSH_TARGET_BUCKET
+            n // max(1, n_labels), _gates.LSH_TARGET_BUCKET
         )
         eb = eb.withColumn(
             "_hb", lsh_bucket(F.col("v"), planes, _HUBNESS_EMB_DIM)
         )
-        # candidate-side skew valve (see _HUBNESS_MAX_BLOCK_CAND): exact
+        # candidate-side skew valve (see gates.MAX_BLOCK_CANDIDATES): exact
         # replicas defeat any plane count, so bound each block's candidate
         # panel deterministically — pair work becomes n x cap, linear
         wb = Window.partitionBy("label", "_hb").orderBy(
@@ -22410,13 +22371,13 @@ def embedding_hubness_profile(spark, sf_dir):
         )
         cand = (
             eb.withColumn("_crn", F.row_number().over(wb))
-            .filter(F.col("_crn") <= _HUBNESS_MAX_BLOCK_CAND)
+            .filter(F.col("_crn") <= _gates.MAX_BLOCK_CANDIDATES)
             .drop("_crn")
         )
         return _hubness_pairs_asym(eb, cand, ("_hb",))
 
     p = size_gated(
-        e, lambda eb, n: _hubness_pairs(eb), _scale, HUBNESS_EXACT_MAX_ROWS
+        e, lambda eb, n: _hubness_pairs(eb), _scale, "pairwise_exact"
     )
     wr = Window.partitionBy("qid").orderBy(F.col("cos").desc(), "nid")
     occ = (
@@ -22430,9 +22391,7 @@ def embedding_hubness_profile(spark, sf_dir):
     # blocked pair pipeline (round-12 sorter-pipeline scan found the
     # duplicated subtree fusing 4 sorters at sf10) — so the k-occurrence
     # vector (one int per embedding) is materialized.
-    hub_pin = _gates.pin_shuffle_join(
-        _table_count(spark, sf_dir, "embeddings")
-    )
+    hub_pin = _gates.over("docs", _table_count(spark, sf_dir, "embeddings"))
     fullk = materialize(
         e.select("vec_id")
         .join(occ, e.vec_id == occ.nid, "left")
@@ -23085,7 +23044,7 @@ def corpus_ccnet_buckets(spark, sf_dir):
     # broadcast min/max cut frame and the bucket aggregate —
     # unpersisted, the broadcast side recomputed the entire bigram-LM
     # pipeline — so it is materialized.
-    ccnet_pin = _gates.pin_shuffle_join(_table_count(spark, sf_dir, "documents"))
+    ccnet_pin = _gates.over("docs", _table_count(spark, sf_dir, "documents"))
     docs2 = docs.select("doc_id", "text", "source")
     sc = materialize(
         bigram_lm_score(
@@ -23945,7 +23904,7 @@ def agg_simpson_paradox_probe(spark, sf_dir):
         # 10x-sweep driver-memory OOM); pinned above the measured
         # fact-count threshold
         per.join(
-            _pin(o, _gates.pin_shuffle_join_fact(_table_count(spark, sf_dir, "lineitem"))),
+            merge_pinned(o, _gates.over("fact", _table_count(spark, sf_dir, "lineitem"))),
             per.l_orderkey == o.o_orderkey,
         )
         .join(c, o.o_custkey == c.c_custkey)

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hash_fns import hash64, hash64_fast, normalize_text  # noqa: F401
 from .cache import cache_scope, materialize
+from .gates import merge_pinned
 
 logger = logging.getLogger(__name__)
 
@@ -64,31 +65,6 @@ def _ensure_parallelism(df: DataFrame) -> DataFrame:
     if n_splits < target:
         return df.repartition(target)
     return df
-
-
-def _corpus_sized(df: DataFrame, pin: bool = True) -> DataFrame:
-    """Mark a join input that scales WITH the corpus (exploded shingles,
-    banded signatures, per-doc shingle-set/size tables) so the planner
-    can never broadcast it: ``hint("merge")`` pins the join to sort-merge.
-
-    Why a pin and not trust in the optimizer: Catalyst's size estimate for
-    these frames propagates through explode/aggregate and lands far BELOW
-    ``autoBroadcastJoinThreshold`` even when the true size is gigabytes —
-    at a 10x test scale the planner chose BroadcastHashJoin with the
-    50M-row exploded shingle frame as the build side and died in
-    BroadcastExchange ("Not enough memory to build and broadcast"); at
-    100 TB the same misestimate is guaranteed. The deliberate broadcasts
-    in this module (stop-gram lists, oversized-bucket lists) are bounded
-    by construction and stay explicit ``F.broadcast`` calls.
-
-    ``pin=False`` keeps planner freedom — the pair operators thread it
-    from a MEASURED corpus count (``gates.pin_shuffle_join``): below
-    LSH_VALVE_MIN_ROWS documents every frame here provably fits a
-    broadcast build, and the static broadcast saves two shuffles on the
-    bench-scale path (measured 2x on the minhash/ngram core entries). A
-    plan choice made from a known bounded count is the size-gate
-    discipline; only estimate-driven broadcasts are the hazard."""
-    return df.hint("merge") if pin else df
 
 
 def exact_dedup(
@@ -294,7 +270,7 @@ def lsh_candidate_pairs(
     exploded = materialize(exploded)
 
     a = exploded.alias("a")
-    b = _corpus_sized(exploded.alias("b"), pin_shuffle_join)
+    b = merge_pinned(exploded.alias("b"), pin_shuffle_join)
     pairs = (
         a.join(
             b,
@@ -349,7 +325,7 @@ def minhash_near_dup_pairs(
     )
     if jaccard_threshold is None:
         return pairs
-    sh_a = _corpus_sized(
+    sh_a = merge_pinned(
         sh.select(
             F.col(id_col).alias("id_a"),
             F.col("shingle_hashes").alias("sh_a"),
@@ -357,7 +333,7 @@ def minhash_near_dup_pairs(
         ),
         pin_shuffle_join,
     )
-    sh_b = _corpus_sized(
+    sh_b = merge_pinned(
         sh.select(
             F.col(id_col).alias("id_b"),
             F.col("shingle_hashes").alias("sh_b"),
@@ -627,7 +603,7 @@ def decontaminate(
     )
     # the contaminated-id set scales with the corpus (worst case: all of
     # it) — never let the planner broadcast it into the anti-join
-    return corpus.join(_corpus_sized(contaminated), id_col, "left_anti")
+    return corpus.join(merge_pinned(contaminated), id_col, "left_anti")
 
 
 def containment_pairs(
@@ -680,7 +656,7 @@ def containment_pairs(
         # the hot set is bounded (few grams exceed a sane cap) — broadcast
         sh = materialize(sh.join(F.broadcast(hot), "_sh", "left_anti"))
     a = sh.select(F.col(id_col).alias("id_a"), "_sh")
-    b = _corpus_sized(
+    b = merge_pinned(
         sh.select(F.col(id_col).alias("id_b"), "_sh"), pin_shuffle_join
     )
     inter = (
@@ -691,7 +667,7 @@ def containment_pairs(
     )
     out = (
         inter.join(
-            _corpus_sized(
+            merge_pinned(
                 sizes.select(
                     F.col(id_col).alias("id_a"), F.col("_sz").alias("_sz_a")
                 ),
@@ -770,7 +746,7 @@ def ngram_jaccard_pairs(
         block_col, id_col, F.explode("shingle_hashes").alias("shingle")
     )
     a = tokensr.alias("a")
-    b = _corpus_sized(tokensr.alias("b"), pin_shuffle_join)
+    b = merge_pinned(tokensr.alias("b"), pin_shuffle_join)
     inter = (
         a.join(
             b,
@@ -783,11 +759,11 @@ def ngram_jaccard_pairs(
         )
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    sa = _corpus_sized(
+    sa = merge_pinned(
         sizes.select(F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a")),
         pin_shuffle_join,
     )
-    sb = _corpus_sized(
+    sb = merge_pinned(
         sizes.select(F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b")),
         pin_shuffle_join,
     )
@@ -848,7 +824,7 @@ def prefix_filter_jaccard_pairs(
     # ordering makes array_sort give the canonical rarest-first order
     sorted_docs = materialize(
         tok.join(  # freq is vocabulary-sized
-            _corpus_sized(freq, pin_shuffle_join), "token"
+            merge_pinned(freq, pin_shuffle_join), "token"
         )
         .groupBy("id")
         .agg(
@@ -875,7 +851,7 @@ def prefix_filter_jaccard_pairs(
         "id", "sz", F.explode("prefix").alias("token")
     )
     pa = prefixes.alias("pa")
-    pb = _corpus_sized(prefixes.alias("pb"), pin_shuffle_join)
+    pb = merge_pinned(prefixes.alias("pb"), pin_shuffle_join)
     candidates = (
         pa.join(
             pb,
@@ -897,13 +873,13 @@ def prefix_filter_jaccard_pairs(
         )
         .distinct()
     )
-    ta = _corpus_sized(
+    ta = merge_pinned(
         sorted_docs.select(
             F.col("id").alias("id_a"), F.col("toks").alias("toks_a"), F.col("sz").alias("sz_a")
         ),
         pin_shuffle_join,
     )
-    tb = _corpus_sized(
+    tb = merge_pinned(
         sorted_docs.select(
             F.col("id").alias("id_b"), F.col("toks").alias("toks_b"), F.col("sz").alias("sz_b")
         ),
@@ -972,15 +948,15 @@ def cross_corpus_jaccard_pairs(
         new_tok = new_tok.join(F.broadcast(hot), "_sh", "left_anti")
         idx_tok = idx_tok.join(F.broadcast(hot), "_sh", "left_anti")
     inter = (
-        new_tok.join(_corpus_sized(idx_tok, pin_shuffle_join), "_sh")
+        new_tok.join(merge_pinned(idx_tok, pin_shuffle_join), "_sh")
         .groupBy("new_id", "index_id")
         .agg(F.count(F.lit(1)).alias("_inter"))
     )
-    n_sz = _corpus_sized(
+    n_sz = merge_pinned(
         new_sh.select("new_id", F.size("shingle_hashes").alias("_n_a")),
         pin_shuffle_join,
     )
-    i_sz = _corpus_sized(
+    i_sz = merge_pinned(
         idx_sh.select("index_id", F.size("shingle_hashes").alias("_n_b")),
         pin_shuffle_join,
     )
@@ -1043,10 +1019,10 @@ def weighted_jaccard_pairs(
         dft.join(F.broadcast(n_docs))
         .select("shingle", F.log(F.col("_n") / F.col("df_t")).alias("idf"))
     )
-    exw = ex.join(_corpus_sized(idf, pin_shuffle_join), "shingle")
+    exw = ex.join(merge_pinned(idf, pin_shuffle_join), "shingle")
     wd = exw.groupBy(id_col).agg(F.sum("idf").alias("w"))
     a = exw.alias("a")
-    b = _corpus_sized(exw.alias("b"), pin_shuffle_join)
+    b = merge_pinned(exw.alias("b"), pin_shuffle_join)
     inter = (
         a.join(
             b,
@@ -1060,11 +1036,11 @@ def weighted_jaccard_pairs(
         )
         .agg(F.sum("a.idf").alias("i_w"))
     )
-    wa = _corpus_sized(
+    wa = merge_pinned(
         wd.select(F.col(id_col).alias("id_a"), F.col("w").alias("w_a")),
         pin_shuffle_join,
     )
-    wb = _corpus_sized(
+    wb = merge_pinned(
         wd.select(F.col(id_col).alias("id_b"), F.col("w").alias("w_b")),
         pin_shuffle_join,
     )
@@ -1128,7 +1104,7 @@ def replica_map(
         F.min(id_col).alias("rep_id"),
         F.count(F.lit(1)).alias("n_copies"),
     )
-    return keyed.join(_corpus_sized(groups), "_ch").select(
+    return keyed.join(merge_pinned(groups), "_ch").select(
         id_col, "rep_id", "n_copies"
     )
 
@@ -1151,7 +1127,7 @@ def near_dup_clusters_collapsed(
     with cache_scope():
         m = materialize(replica_map(df, text_col, id_col))
         reps = df.join(
-            _corpus_sized(
+            merge_pinned(
                 m.filter(F.col(id_col) == F.col("rep_id")).select(id_col)
             ),
             id_col,
@@ -1169,7 +1145,7 @@ def near_dup_clusters_collapsed(
             repcl = cluster_pairs(pairs)  # eager (localCheckpoint'd)
         return (
             m.join(
-                _corpus_sized(repcl), m.rep_id == repcl.node, "left"
+                merge_pinned(repcl), m.rep_id == repcl.node, "left"
             )
             .where((F.col("n_copies") > 1) | F.col("cluster_id").isNotNull())
             .select(
@@ -1197,7 +1173,7 @@ def near_dup_participants_collapsed(
     with cache_scope():
         m = materialize(replica_map(df, text_col, id_col))
         reps = df.join(
-            _corpus_sized(
+            merge_pinned(
                 m.filter(F.col(id_col) == F.col("rep_id")).select(id_col)
             ),
             id_col,
@@ -1219,7 +1195,7 @@ def near_dup_participants_collapsed(
                 .localCheckpoint(eager=True)  # pin before releasing shingle caches
             )
         return (
-            m.join(_corpus_sized(part), "rep_id", "left_semi")
+            m.join(merge_pinned(part), "rep_id", "left_semi")
             .select(id_col)
             .union(m.filter(F.col("n_copies") > 1).select(id_col))
             .distinct()

@@ -16,20 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .cache import cache_scope, materialize
-
-
-def _graph_sized(df: DataFrame, pin: bool = True) -> DataFrame:
-    """Pin a graph-scaling join input (edge lists, degree tables, wedge
-    frames — all DERIVED via union/distinct/aggregate, whose Catalyst
-    size estimate can land under the broadcast threshold while the true
-    size is edge-count-sized) to sort-merge. Leaf-table joins keep
-    planner freedom: their parquet-stat estimates are accurate, so the
-    planner only broadcasts them when they really are small (see
-    operators.dedup._corpus_sized for the sweep that motivated this).
-    ``pin=False`` keeps planner freedom — callers thread it from a
-    MEASURED edge-source row count (gates.pin_shuffle_join_fact), the
-    same count-not-estimate discipline as the dedup family."""
-    return df.hint("merge") if pin else df
+from .gates import merge_pinned
 
 
 def pagerank(
@@ -156,8 +143,8 @@ def triangle_count(
         )
         du, dv = deg.alias("du"), deg.alias("dv")
         ranked = (
-            canon.join(_graph_sized(du, pin_shuffle_join), F.col("u") == F.col("du.node"))
-            .join(_graph_sized(dv, pin_shuffle_join), F.col("v") == F.col("dv.node"))
+            canon.join(merge_pinned(du, pin_shuffle_join), F.col("u") == F.col("du.node"))
+            .join(merge_pinned(dv, pin_shuffle_join), F.col("v") == F.col("dv.node"))
             .select(
                 "u",
                 "v",
@@ -179,7 +166,7 @@ def triangle_count(
             )
         )
         e1, e2 = oriented.alias("e1"), oriented.alias("e2")
-        wedges = e1.join(_graph_sized(e2, pin_shuffle_join), F.col("e1.a") == F.col("e2.a")).where(
+        wedges = e1.join(merge_pinned(e2, pin_shuffle_join), F.col("e1.a") == F.col("e2.a")).where(
             F.col("e1.rb") < F.col("e2.rb")
         )
         # the closing edge {b1,b2} is oriented b1->b2 because rank(b1)<rank(b2)
@@ -187,7 +174,7 @@ def triangle_count(
             F.col("a").alias("cb1"), F.col("b").alias("cb2")
         )
         tri = wedges.join(
-            _graph_sized(closing, pin_shuffle_join),
+            merge_pinned(closing, pin_shuffle_join),
             (F.col("e1.b") == F.col("cb1")) & (F.col("e2.b") == F.col("cb2")),
         ).count()
         n_nodes = deg.count()
@@ -236,8 +223,8 @@ def local_clustering_coefficient(
     )
     du, dv = deg.alias("du"), deg.alias("dv")
     ranked = (
-        canon.join(_graph_sized(du, pin_shuffle_join), F.col("u") == F.col("du.node"))
-        .join(_graph_sized(dv, pin_shuffle_join), F.col("v") == F.col("dv.node"))
+        canon.join(merge_pinned(du, pin_shuffle_join), F.col("u") == F.col("du.node"))
+        .join(merge_pinned(dv, pin_shuffle_join), F.col("v") == F.col("dv.node"))
         .select(
             "u",
             "v",
@@ -255,14 +242,14 @@ def local_clustering_coefficient(
         F.when(F.col("ru") < F.col("rv"), F.col("rv")).otherwise(F.col("ru")).alias("rb"),
     )
     e1, e2 = oriented.alias("e1"), oriented.alias("e2")
-    wedges = e1.join(_graph_sized(e2, pin_shuffle_join), F.col("e1.a") == F.col("e2.a")).where(
+    wedges = e1.join(merge_pinned(e2, pin_shuffle_join), F.col("e1.a") == F.col("e2.a")).where(
         F.col("e1.rb") < F.col("e2.rb")
     )
     closing = oriented.select(
         F.col("a").alias("cb1"), F.col("b").alias("cb2")
     )
     tris = wedges.join(
-        _graph_sized(closing, pin_shuffle_join),
+        merge_pinned(closing, pin_shuffle_join),
         (F.col("e1.b") == F.col("cb1")) & (F.col("e2.b") == F.col("cb2")),
     ).select(
         F.col("e1.a").alias("c0"),
@@ -275,7 +262,7 @@ def local_clustering_coefficient(
         .agg(F.count(F.lit(1)).alias("triangles"))
     )
     out = (
-        deg.join(_graph_sized(per_node, pin_shuffle_join), "node", "left")
+        deg.join(merge_pinned(per_node, pin_shuffle_join), "node", "left")
         .select(
             "node",
             "deg",
@@ -433,14 +420,14 @@ def jaccard_link_prediction(
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
     wedges = (
         sym.alias("x")
-        .join(_graph_sized(sym.alias("y"), pin_shuffle_join), F.col("x.v") == F.col("y.v"))
+        .join(merge_pinned(sym.alias("y"), pin_shuffle_join), F.col("x.v") == F.col("y.v"))
         .filter(F.col("x.u") < F.col("y.u"))
         .groupBy(F.col("x.u").alias("ua"), F.col("y.u").alias("ub"))
         .agg(F.count(F.lit(1)).alias("n_common"))
         .filter(F.col("n_common") >= min_common)
     )
     non_adj = wedges.join(
-        _graph_sized(
+        merge_pinned(
             sym.select(F.col("u").alias("ua"), F.col("v").alias("ub")),
             pin_shuffle_join,
         ),
@@ -449,14 +436,14 @@ def jaccard_link_prediction(
     )
     scored = (
         non_adj.join(
-            _graph_sized(
+            merge_pinned(
                 deg.select(F.col("u").alias("ua"), F.col("deg").alias("da")),
                 pin_shuffle_join,
             ),
             "ua",
         )
         .join(
-            _graph_sized(
+            merge_pinned(
                 deg.select(F.col("u").alias("ub"), F.col("deg").alias("db")),
                 pin_shuffle_join,
             ),

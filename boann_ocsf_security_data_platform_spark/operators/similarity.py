@@ -18,17 +18,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _corpus_sized(df: DataFrame, pin: bool = True) -> DataFrame:
-    """Pin a corpus-scaling join input (blocked vector frames, dedup
-    survivor/loser id sets) to sort-merge — Catalyst's size estimate for
-    these frames underestimates through explode/aggregate and can pick a
-    broadcast build that OOMs at scale (see operators.dedup._corpus_sized,
-    where the 10x sweep caught exactly that). Bounded model tables
-    (centroids, query panels, codebooks) stay explicit ``F.broadcast``.
-    ``pin=False`` keeps planner freedom — callers thread it from a
-    MEASURED vector count (gates.pin_shuffle_join)."""
-    return df.hint("merge") if pin else df
+from .gates import merge_pinned
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -533,7 +523,7 @@ def semantic_dedup(
         threshold=threshold,
     )
     clusters = cluster_pairs(pairs)
-    losers = _corpus_sized(
+    losers = merge_pinned(
         clusters.filter(F.col("node") != F.col("cluster_id")).select("node")
     )
     return df.join(losers, df[id_col] == losers.node, "left_anti")
@@ -576,7 +566,7 @@ def embedding_near_dup_pairs(
         _dot(F.col("v_a"), F.col("v_b")) / (F.col("_na") * F.col("_nb")), 6
     )
     return (
-        a.join(_corpus_sized(b, pin_shuffle_join), "blk")
+        a.join(merge_pinned(b, pin_shuffle_join), "blk")
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", sim.alias("cosine"))
         .filter(F.col("cosine") >= threshold)
@@ -860,7 +850,7 @@ def exact_vector_dedup(
         .agg(F.min(id_col).alias(id_col))
         .select(id_col)
     )
-    return df.join(_corpus_sized(keep), id_col)
+    return df.join(merge_pinned(keep), id_col)
 
 
 def ivf_index_is_complete(spark, path: str) -> bool:

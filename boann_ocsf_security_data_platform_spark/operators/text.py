@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hash_fns import hash64, normalize_text
 from .cache import materialize
+from .gates import merge_pinned, sized_shuffle
 
 # Tiny deterministic stopword lists per language for the n-gram/stopword
 # language-ID heuristic. Order matters: ties break toward the first listed.
@@ -23,19 +24,6 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 
 STOPWORDS_EN = LANG_STOPWORDS["en"] + ("this", "with", "as", "on", "be", "are")
-
-
-def _corpus_sized(df: DataFrame, pin: bool = True) -> DataFrame:
-    """Pin a corpus/vocabulary-scaling join input (per-doc rollups,
-    bigram/segment/gram aggregates) to sort-merge — Catalyst's size
-    estimate underestimates through explode/aggregate and can pick a
-    broadcast build that OOMs at scale (operators.dedup._corpus_sized
-    documents the sweep that caught this). Bounded frames (one-row vocab
-    scalars, MG candidate lists, ≤1024-bucket models) keep their explicit
-    ``F.broadcast`` calls. ``pin=False`` keeps planner freedom — callers
-    thread it from a MEASURED corpus count (gates.pin_shuffle_join), the
-    same count-not-estimate discipline as the dedup family."""
-    return df.hint("merge") if pin else df
 
 
 def tokens(col: Column | str) -> Column:
@@ -413,7 +401,7 @@ def tfidf_top_terms(
     idf = F.log((F.col("_n_docs") + F.lit(1.0)) / (F.col("df_t") + F.lit(1.0))) + 1.0
     scored = (
         tf.join(  # df table is vocabulary-sized
-            _corpus_sized(dft, pin_shuffle_join), "term"
+            merge_pinned(dft, pin_shuffle_join), "term"
         )
         .join(F.broadcast(n_docs))
         .withColumn("score", F.round(F.col("tf") * idf, 6))
@@ -531,7 +519,7 @@ def bigram_lm_score(
     # (doc, bigram) stream, shuffling the fact-sized frame by w1 a second
     # time for values derivable from the gram table).
     model = (
-        cbi.join(_corpus_sized(ctx, pin_shuffle_join), "w1")
+        cbi.join(merge_pinned(ctx, pin_shuffle_join), "w1")
         .join(F.broadcast(vocab))
         .select(
             "bigram",
@@ -553,12 +541,12 @@ def bigram_lm_score(
     # round, both at 23 and 260 window partitions). Below the pin the
     # model broadcasts and dg never reshuffles.
     if pin_shuffle_join:
-        parts = min(2048, max(32, dg.count() // 4_000_000 + 1))
-        joined = dg.repartition(parts, F.col("bigram")).join(
-            model.repartition(parts, F.col("bigram")), "bigram"
+        n_dg = dg.count()
+        joined = sized_shuffle(dg, "bigram", n_dg).join(
+            sized_shuffle(model, "bigram", n_dg), "bigram"
         )
     else:
-        joined = dg.join(_corpus_sized(model, pin_shuffle_join), "bigram")
+        joined = dg.join(merge_pinned(model, pin_shuffle_join), "bigram")
     scored = joined.groupBy(id_col).agg(
         F.sum("n").alias("n_bigrams"),
         F.round(
@@ -571,7 +559,7 @@ def bigram_lm_score(
     # find on corpus_ccnet_buckets).
     return (
         df.select(id_col, *carry_cols)
-        .join(_corpus_sized(scored, pin_shuffle_join), id_col, "left")
+        .join(merge_pinned(scored, pin_shuffle_join), id_col, "left")
         .withColumn("n_bigrams", F.coalesce("n_bigrams", F.lit(0)))
     )
 
@@ -687,7 +675,7 @@ def dsir_importance(
     return (
         corpus.select(id_col, *carry_cols)
         .join(  # doc-grain scores
-            _corpus_sized(scored, pin_shuffle_join), id_col, "left"
+            merge_pinned(scored, pin_shuffle_join), id_col, "left"
         )
         .withColumn("n_feats", F.coalesce("n_feats", F.lit(0)))
     )
@@ -944,7 +932,7 @@ def segment_dedup(
         F.min(F.struct(F.col(id_col), F.col("seg_idx"))).alias("_w")
     )
     kept = (
-        segs.join(_corpus_sized(winners, pin_shuffle_join), "seg")
+        segs.join(merge_pinned(winners, pin_shuffle_join), "seg")
         .filter(
             (F.col(id_col) == F.col("_w")[id_col])
             & (F.col("seg_idx") == F.col("_w.seg_idx"))
@@ -963,7 +951,7 @@ def segment_dedup(
     )
     return (
         toked.select(F.col(id_col), n_total.alias("n_seg_total"))
-        .join(_corpus_sized(reassembled, pin_shuffle_join), id_col, "left")
+        .join(merge_pinned(reassembled, pin_shuffle_join), id_col, "left")
         .select(
             id_col,
             F.coalesce("text_deduped", F.lit("")).alias("text_deduped"),
@@ -1217,7 +1205,7 @@ def duplicate_span_stats(
     )
     totals = g.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_spans"))
     dups = (
-        g.join(_corpus_sized(dup, pin_shuffle_join), "span")
+        g.join(merge_pinned(dup, pin_shuffle_join), "span")
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_dup_spans"))
     )

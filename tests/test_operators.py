@@ -15,6 +15,7 @@ from boann_ocsf_security_data_platform_spark.operators import (
     text_quality,
     topk_per_group,
 )
+from boann_ocsf_security_data_platform_spark.operators import gates
 from boann_ocsf_security_data_platform_spark.operators.dedup import (
     minhash_near_dup_pairs,
 )
@@ -1627,3 +1628,10 @@ def test_quantile_bins_equi_depth(spark):
     # assignment respects boundaries: v=1 in bin 1, v=100 in bin 4
     vals = {r.v: r.bin for r in out.collect()}
     assert vals[1.0] == 1 and vals[100.0] == 4 and vals[50.0] == 1 + (50.0 > 25.75)
+
+
+@pytest.mark.parametrize("name", sorted(gates.THRESHOLDS))
+def test_gate_engages_strictly_above_threshold(name):
+    bound = gates.THRESHOLDS[name]
+    assert not gates.over(name, bound)
+    assert gates.over(name, bound + 1)

@@ -22,6 +22,7 @@ Three defects surfaced sweeping the heavy tail at /tmp/sf100 (5M docs =
 from pyspark.sql import functions as F
 
 import __spark_entry__ as em
+from boann_ocsf_security_data_platform_spark.operators import gates
 
 QS = em.queries()
 SF = "/root/testdata/sf0.001"
@@ -44,7 +45,7 @@ def test_minhash_lsh_gate_noop_on_distinct_corpus(spark, monkeypatch):
     )
     base = sorted(tuple(r) for r in QS["dedup_minhash_lsh"](spark, SF).collect())
     assert base, "fixture must produce near-dup pairs"
-    monkeypatch.setattr(em, "HUBNESS_EXACT_MAX_ROWS", 1)
+    monkeypatch.setitem(gates.THRESHOLDS, "pairwise_exact", 1)
     gated = sorted(
         tuple(r) for r in QS["dedup_minhash_lsh"](spark, SF).collect()
     )
@@ -65,7 +66,7 @@ def test_minhash_lsh_gate_drops_replica_pairs_only(spark, tmp_path):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     n = docs.agg(F.max("doc_id")).collect()[0][0] + 1
     copies = docs
-    for i in range(1, 40):  # 20k docs > HUBNESS_EXACT_MAX_ROWS
+    for i in range(1, 40):  # 20k docs > THRESHOLDS["pairwise_exact"]
         copies = copies.unionByName(
             docs.withColumn("doc_id", F.col("doc_id") + F.lit(i * n))
         )
@@ -104,7 +105,7 @@ def test_duplicate_span_stats_entry_gate_forced(spark, monkeypatch):
     base = sorted(
         tuple(r) for r in QS["dedup_duplicate_spans"](spark, SF).collect()
     )
-    monkeypatch.setattr(em._gates, "LSH_VALVE_MIN_ROWS", 1)
+    monkeypatch.setitem(gates.THRESHOLDS, "docs", 1)
     gated = sorted(
         tuple(r) for r in QS["dedup_duplicate_spans"](spark, SF).collect()
     )
@@ -119,7 +120,7 @@ def test_spearman_contingency_arm_identity(spark, monkeypatch):
     base = sorted(
         tuple(r) for r in QS["agg_spearman_rank_corr"](spark, SF).collect()
     )
-    monkeypatch.setattr(em._gates, "PIN_FACT_MIN_ROWS", 0)
+    monkeypatch.setitem(gates.THRESHOLDS, "fact", 0)
     gated = sorted(
         tuple(r) for r in QS["agg_spearman_rank_corr"](spark, SF).collect()
     )
@@ -134,7 +135,7 @@ def test_anderson_darling_run_closed_form_identity(spark, monkeypatch):
         tuple(r)
         for r in QS["agg_anderson_darling_normality"](spark, SF).collect()
     )
-    monkeypatch.setattr(em._gates, "PIN_FACT_MIN_ROWS", 0)
+    monkeypatch.setitem(gates.THRESHOLDS, "fact", 0)
     gated = sorted(
         tuple(r)
         for r in QS["agg_anderson_darling_normality"](spark, SF).collect()

@@ -9,6 +9,7 @@
 """
 
 import __spark_entry__ as em
+from boann_ocsf_security_data_platform_spark.operators import gates
 
 QS = em.queries()
 SF = "/root/testdata/sf0.001"
@@ -23,7 +24,7 @@ def test_spearman_scale_arm_has_no_broadcast_join(spark, monkeypatch):
     joins must both be SortMergeJoin — zero broadcast exchanges anywhere
     in the plan, since every broadcast candidate here is a derived table
     whose size scales with the value domain."""
-    monkeypatch.setattr(em._gates, "PIN_FACT_MIN_ROWS", 0)
+    monkeypatch.setitem(gates.THRESHOLDS, "fact", 0)
     plan = _executed_plan(QS["agg_spearman_rank_corr"](spark, SF))
     assert plan.count("SortMergeJoin") == 2, plan
     assert "BroadcastHashJoin" not in plan, plan
@@ -36,7 +37,7 @@ def test_spearman_scale_arm_values_unchanged(spark, monkeypatch):
     base = sorted(
         tuple(r) for r in QS["agg_spearman_rank_corr"](spark, SF).collect()
     )
-    monkeypatch.setattr(em._gates, "PIN_FACT_MIN_ROWS", 0)
+    monkeypatch.setitem(gates.THRESHOLDS, "fact", 0)
     gated = sorted(
         tuple(r) for r in QS["agg_spearman_rank_corr"](spark, SF).collect()
     )

@@ -208,8 +208,8 @@ def test_bcast_detector_sees_through_persist(spark):
 def test_dim_pin_engages_at_sf100_counts():
     from boann_ocsf_security_data_platform_spark.operators import gates
 
-    assert gates.pin_shuffle_join_dim(15_000_000)  # sf100 customer
-    assert not gates.pin_shuffle_join_dim(1_500_000)  # sf10 measured safe
+    assert gates.over("dim", 15_000_000)  # sf100 customer
+    assert not gates.over("dim", 1_500_000)  # sf10 measured safe
 
 
 # ---------------------------------------------------------------------------
@@ -223,7 +223,7 @@ def test_dim_pin_engages_at_sf100_counts():
 def test_widen_fact_shuffle_noop_below_gate(spark):
     l = spark.read.parquet(f"{SF}/lineitem.parquet")
     out = em._widen_fact_shuffle(l, "l_orderkey", 6_000_000)
-    assert out is l  # below PIN_FACT_MIN_ROWS: planner freedom
+    assert out is l  # below THRESHOLDS["fact"]: planner freedom
 
 
 def test_widen_fact_shuffle_sizes_partitions_by_count(spark):

@@ -18,6 +18,7 @@ import pyspark.sql.functions as F
 from pyspark.sql.window import Window
 
 import __spark_entry__ as em
+from boann_ocsf_security_data_platform_spark.operators import gates
 
 QS = em.queries()
 SF = "/root/testdata/sf0.001"
@@ -106,7 +107,7 @@ def test_percentile_users_avoid_concentrated_aggregate(spark, monkeypatch):
     agg_percentile_disc_cont stays literal by design: the entry's
     surface IS the ordered-set aggregate family (documented sf100
     passer, bounded on the replicated bench domains)."""
-    monkeypatch.setattr(em._gates, "PIN_FACT_MIN_ROWS", 0)
+    monkeypatch.setitem(gates.THRESHOLDS, "fact", 0)
     for name in _PCT_ENTRIES:
         plan = _executed_plan(QS[name](spark, SF))
         assert "percentile" not in plan.lower(), (name, plan[:2000])
@@ -119,16 +120,16 @@ def test_percentile_gate_arms_identical(spark, monkeypatch):
     scale) and the distributed domain-count form (what runs at sf100).
     ADVICE r12 #3: the native baseline is FORCED (gate pinned huge), not
     left to the real gate — if the fixture ever outgrew
-    PIN_FACT_MIN_ROWS the test would otherwise silently compare
+    THRESHOLDS["fact"] the test would otherwise silently compare
     distributed vs distributed."""
     import sys
 
-    monkeypatch.setattr(em._gates, "PIN_FACT_MIN_ROWS", sys.maxsize)
+    monkeypatch.setitem(gates.THRESHOLDS, "fact", sys.maxsize)
     native = {
         n: sorted(tuple(r) for r in QS[n](spark, SF).collect())
         for n in _PCT_ENTRIES
     }
-    monkeypatch.setattr(em._gates, "PIN_FACT_MIN_ROWS", 0)
+    monkeypatch.setitem(gates.THRESHOLDS, "fact", 0)
     for n in _PCT_ENTRIES:
         forced = sorted(tuple(r) for r in QS[n](spark, SF).collect())
         assert forced == native[n] and len(forced) > 0, n

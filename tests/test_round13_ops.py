@@ -1,7 +1,7 @@
 """Round-13 optimization pins.
 
 1. join_theta_inequality's measured-size gate (r12 VERDICT #2): the
-   literal broadcast theta-join below PIN_DIM_MIN_ROWS customers, the
+   literal broadcast theta-join below THRESHOLDS["dim"] customers, the
    order-statistics domain form above — forced-gate identity + plan pins
    for both arms.
 2. Writer file sizing (r12 VERDICT #7, guide §6): the landing/staging
@@ -17,6 +17,7 @@ import sys
 import pyspark.sql.functions as F
 
 import __spark_entry__ as em
+from boann_ocsf_security_data_platform_spark.operators import gates
 
 QS = em.queries()
 SF = "/root/testdata/sf0.01"
@@ -46,11 +47,11 @@ def test_theta_gate_arms_identical(spark, monkeypatch):
     per-nation pair counts. ADVICE r12 #3 discipline: BOTH arms are
     forced explicitly — the baseline never silently rides the real
     gate."""
-    monkeypatch.setattr(em._gates, "PIN_DIM_MIN_ROWS", sys.maxsize)
+    monkeypatch.setitem(gates.THRESHOLDS, "dim", sys.maxsize)
     literal = sorted(
         tuple(r) for r in QS["join_theta_inequality"](spark, SF).collect()
     )
-    monkeypatch.setattr(em._gates, "PIN_DIM_MIN_ROWS", 0)
+    monkeypatch.setitem(gates.THRESHOLDS, "dim", 0)
     domain = sorted(
         tuple(r) for r in QS["join_theta_inequality"](spark, SF).collect()
     )
@@ -63,12 +64,12 @@ def test_theta_plan_shapes_per_arm(spark, monkeypatch):
     no full-outer merge — the 0.4 s bench shape); above it the domain
     form runs its running-count Window and never materializes pairs (no
     inequality join condition anywhere)."""
-    monkeypatch.setattr(em._gates, "PIN_DIM_MIN_ROWS", sys.maxsize)
+    monkeypatch.setitem(gates.THRESHOLDS, "dim", sys.maxsize)
     below = _executed_plan(QS["join_theta_inequality"](spark, SF))
     assert "BroadcastHashJoin" in below and "Window" not in below, below[
         :2000
     ]
-    monkeypatch.setattr(em._gates, "PIN_DIM_MIN_ROWS", 0)
+    monkeypatch.setitem(gates.THRESHOLDS, "dim", 0)
     above = _executed_plan(QS["join_theta_inequality"](spark, SF))
     assert "Window" in above, above[:2000]
     assert "c_acctbal > s_acctbal" not in above, above[:2000]
@@ -144,11 +145,11 @@ def test_q5_gate_arms_identical(spark, monkeypatch):
     with widened fact shuffles (above-gate arm) must produce identical
     per-nation revenue. Inner-join reorder provably cannot move rows;
     this pins it against future edits."""
-    monkeypatch.setattr(em._gates, "PIN_DIM_MIN_ROWS", sys.maxsize)
+    monkeypatch.setitem(gates.THRESHOLDS, "dim", sys.maxsize)
     below = sorted(
         tuple(r) for r in QS["q5_local_supplier_volume"](spark, SF).collect()
     )
-    monkeypatch.setattr(em._gates, "PIN_DIM_MIN_ROWS", 0)
+    monkeypatch.setitem(gates.THRESHOLDS, "dim", 0)
     above = sorted(
         tuple(r) for r in QS["q5_local_supplier_volume"](spark, SF).collect()
     )

@@ -39,6 +39,7 @@ values; these pin the MEANING):
 import math
 
 import __spark_entry__ as entrymod
+from boann_ocsf_security_data_platform_spark.operators import gates
 
 QS = entrymod.queries()
 
@@ -587,12 +588,12 @@ def test_hubness_mean_k(spark, sf_smoke):
 
 
 def test_hubness_lsh_dispatch_above_threshold(spark, sf_smoke, monkeypatch):
-    """The r8 scale fix: above HUBNESS_EXACT_MAX_ROWS the query must
+    """The r8 scale fix: above THRESHOLDS["pairwise_exact"] the query must
     dispatch to LSH-bucketed blocks — the pair join gains an `_hb`
     equi-key (bounded pairs per bucket, ~linear total work) and the
     profile keeps its invariants. Forcing the threshold to 0 exercises
     the scale arm on the small fixture."""
-    monkeypatch.setattr(entrymod, "HUBNESS_EXACT_MAX_ROWS", 0)
+    monkeypatch.setitem(gates.THRESHOLDS, "pairwise_exact", 0)
     df = QS["embedding_hubness_profile"](spark, sf_smoke)
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
@@ -611,7 +612,7 @@ def test_hubness_lsh_dispatch_above_threshold(spark, sf_smoke, monkeypatch):
 
 def test_hubness_lsh_candidate_cap_bounds_blocks(spark, sf_smoke, monkeypatch):
     """The r8 skew valve: on the LSH arm every (label, bucket) block
-    contributes at most _HUBNESS_MAX_BLOCK_CAND candidate rows — exact
+    contributes at most MAX_BLOCK_CANDIDATES candidate rows — exact
     replicas share every bucket, so without the cap pair work grows with
     the square of the duplication factor. Rebuild the capped candidate
     frame exactly as the query does and assert the bound."""
@@ -630,7 +631,7 @@ def test_hubness_lsh_candidate_cap_bounds_blocks(spark, sf_smoke, monkeypatch):
     n = e.count()
     n_labels = e.agg(F.countDistinct("label")).collect()[0][0]
     planes = auto_n_planes(
-        n // max(1, n_labels), entrymod._HUBNESS_LSH_TARGET_BUCKET
+        n // max(1, n_labels), gates.LSH_TARGET_BUCKET
     )
     eb = e.withColumn(
         "_hb", lsh_bucket(F.col("v"), planes, entrymod._HUBNESS_EMB_DIM)
@@ -638,7 +639,7 @@ def test_hubness_lsh_candidate_cap_bounds_blocks(spark, sf_smoke, monkeypatch):
     wb = W.partitionBy("label", "_hb").orderBy(F.xxhash64("vec_id"), "vec_id")
     capped = (
         eb.withColumn("_crn", F.row_number().over(wb))
-        .filter(F.col("_crn") <= entrymod._HUBNESS_MAX_BLOCK_CAND)
+        .filter(F.col("_crn") <= gates.MAX_BLOCK_CANDIDATES)
     )
     worst = (
         capped.groupBy("label", "_hb")
@@ -646,7 +647,7 @@ def test_hubness_lsh_candidate_cap_bounds_blocks(spark, sf_smoke, monkeypatch):
         .agg(F.max("m"))
         .collect()[0][0]
     )
-    assert worst <= entrymod._HUBNESS_MAX_BLOCK_CAND
+    assert worst <= gates.MAX_BLOCK_CANDIDATES
     # the cap is deterministic: same hash order on every run
     again = (
         capped.groupBy("label", "_hb")

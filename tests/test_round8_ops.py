@@ -8,6 +8,7 @@
 """
 
 import __spark_entry__ as entrymod
+from boann_ocsf_security_data_platform_spark.operators import gates
 
 QS = entrymod.queries()
 
@@ -43,7 +44,7 @@ def test_fuzzy_er_scale_arm_caps_blocks(spark, sf_smoke, monkeypatch):
     fixture: results keep the schema/invariants (dist <= 4, rank <= 3,
     per-probe ranks dense from 1) and every probe's match panel is
     bounded."""
-    monkeypatch.setattr(entrymod, "FUZZY_EXACT_MAX_ROWS", 0)
+    monkeypatch.setitem(gates.THRESHOLDS, "fuzzy_exact", 0)
     rows = QS["join_fuzzy_entity_resolution"](spark, sf_smoke).collect()
     by_probe = {}
     for r in rows:
@@ -64,7 +65,7 @@ def test_prefix_filter_scale_arm_subset(spark, sf_smoke, monkeypatch):
         (r.id_a, r.id_b): r.jaccard
         for r in QS["dedup_prefix_filter_jaccard"](spark, sf_smoke).collect()
     }
-    monkeypatch.setattr(entrymod, "HUBNESS_EXACT_MAX_ROWS", 0)
+    monkeypatch.setitem(gates.THRESHOLDS, "pairwise_exact", 0)
     scale_pairs = {
         (r.id_a, r.id_b): r.jaccard
         for r in QS["dedup_prefix_filter_jaccard"](spark, sf_smoke).collect()
@@ -81,7 +82,7 @@ def test_semantic_dedup_scale_arm_survivors(spark, sf_smoke, monkeypatch):
     arm: at the 500-row fixture auto_n_planes lands COARSER than 4
     planes, so it co-buckets more candidates and keeps fewer survivors
     — plane counts only grow past the exact arm's at real scale.)"""
-    monkeypatch.setattr(entrymod, "HUBNESS_EXACT_MAX_ROWS", 0)
+    monkeypatch.setitem(gates.THRESHOLDS, "pairwise_exact", 0)
     rows = QS["semantic_dedup_survivors"](spark, sf_smoke).collect()
     ids = [r.vec_id for r in rows]
     assert len(ids) == len(set(ids)) > 0
@@ -104,7 +105,7 @@ def test_embedding_near_dup_scale_arm_pairs(spark, sf_smoke, monkeypatch):
     subset claim vs the 4-plane arm: at the 500-row fixture
     auto_n_planes lands coarser than 4 planes and surfaces MORE
     candidates; plane counts only exceed the exact arm's at scale."""
-    monkeypatch.setattr(entrymod, "HUBNESS_EXACT_MAX_ROWS", 0)
+    monkeypatch.setitem(gates.THRESHOLDS, "pairwise_exact", 0)
     rows = QS["embedding_near_dup"](spark, sf_smoke).collect()
     assert rows
     for r in rows:

@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
+from boann_ocsf_security_data_platform_spark.operators import gates
 from boann_ocsf_security_data_platform_spark.operators import cache_scope
 
 QS = entrymod.queries()
@@ -21,7 +22,7 @@ def test_near_dup_planes_sized_from_collapsed_count(
     because after collapse both corpora are the same 500 vectors and must
     get the same plane count. Pre-fix, planes sized from 20k raw rows
     (9 planes vs 3) over-split the 500 distinct vectors and lose pairs."""
-    monkeypatch.setattr(entrymod, "HUBNESS_EXACT_MAX_ROWS", 0)
+    monkeypatch.setitem(gates.THRESHOLDS, "pairwise_exact", 0)
 
     base = QS["embedding_near_dup"](spark, sf_smoke)
     base_pairs = {(r.id_a, r.id_b) for r in base.collect()}
@@ -97,9 +98,9 @@ def test_hard_negatives_scale_arm_ivf(spark, sf_smoke, monkeypatch):
     (identical to the brute-force score — bucketing selects candidates,
     never changes scores), ranks are contiguous from 1 per query, and
     every returned pair exists in the exact arm's candidate universe."""
-    monkeypatch.setattr(entrymod, "HUBNESS_EXACT_MAX_ROWS", 0)
+    monkeypatch.setitem(gates.THRESHOLDS, "pairwise_exact", 0)
     approx = QS["knn_hard_negatives"](spark, sf_smoke).collect()
-    monkeypatch.setattr(entrymod, "HUBNESS_EXACT_MAX_ROWS", 10_000)
+    monkeypatch.setitem(gates.THRESHOLDS, "pairwise_exact", 10_000)
     exact_all = {
         (r.query_id, r.neighbor_id): r.cosine
         for r in QS["knn_hard_negatives"](spark, sf_smoke).collect()
@@ -277,7 +278,7 @@ def test_replica_map_shape(spark):
         assert m[rep][0] == rep and rep <= doc and n >= 1
 
 
-def test_clusters_family_gate_is_output_identical(spark):
+def test_clusters_family_gate_is_output_identical(spark, monkeypatch):
     """Entry-level identity: with the pairwise gate forced LOW, the five
     clusters-family entries run the collapse-and-expand arm at sf0.001 and
     must produce byte-identical rows to the full-corpus (oracle) arm —
@@ -298,15 +299,12 @@ def test_clusters_family_gate_is_output_identical(spark):
         n: sorted(tuple(r) for r in qs[n](spark, sf).collect())
         for n in names
     }
-    old = em.HUBNESS_EXACT_MAX_ROWS
-    em.HUBNESS_EXACT_MAX_ROWS = 1  # force the collapse-and-expand arm
-    try:
-        got = {
-            n: sorted(tuple(r) for r in qs[n](spark, sf).collect())
-            for n in names
-        }
-    finally:
-        em.HUBNESS_EXACT_MAX_ROWS = old
+    # force the collapse-and-expand arm
+    monkeypatch.setitem(gates.THRESHOLDS, "pairwise_exact", 1)
+    got = {
+        n: sorted(tuple(r) for r in qs[n](spark, sf).collect())
+        for n in names
+    }
     for n in names:
         assert got[n] == want[n], n
         assert len(want[n]) > 0, n

@@ -27,11 +27,77 @@ import sys
 
 sys.path.insert(0, ".")
 
+from boann_ocsf_security_data_platform_spark.operators import gates  # noqa: E402
+
 
 def plan_of(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
+
+
+# ---- pairwise gate discipline (round-9 consolidation) -------------------
+# Every query whose source touches a pair-enumerating primitive must either
+# route through operators.gates.size_gated or the pairwise gate, pass a
+# primitive skew valve (max_bucket_size / max_shingle_df), or carry a
+# documented inherent-output rationale below — so the next pairwise wave
+# cannot reintroduce the quadratic-arm defect class the round-8 sf1 sweep
+# flushed. Source inspection only; the check is coarse by design (one
+# marker anywhere in the entry's source) — the per-entry docstrings carry
+# the precise contract.
+PAIRWISE_PRIMITIVES = (
+    "embedding_near_dup_pairs(",
+    "containment_pairs(",
+    "prefix_filter_jaccard_pairs(",
+    "semantic_dedup(",
+    "cosine_topk(",
+    "cosine_topk_lsh(",
+    "minhash_near_dup_pairs(",
+    "ngram_jaccard_pairs(",
+    "cross_corpus_jaccard_pairs(",
+    "weighted_jaccard_pairs(",
+    "lsh_candidate_pairs(",
+    "_hubness_pairs(",
+)
+GATE_MARKERS = (
+    "size_gated(",
+    'over("pairwise_exact", ',
+    "max_bucket_size=",
+    "max_shingle_df=",
+    "_docs_gated_with_pin(",  # one count -> collapse + valve + pin
+)
+INHERENT_OK = {
+    # exact brute-force cosine is the pinned accuracy baseline; the
+    # documented scale path is the IVF/LSH entries (docstring)
+    "knn_bruteforce_cosine",
+    # LSH-bucketed by construction; approximate by design (rows-only)
+    "knn_lsh_approx",
+    # probe side is a fixed bounded panel -> corpus-linear pair work
+    "knn_truncated_recall",
+    # (dedup_ngram_jaccard / dedup_weighted_jaccard left this list in
+    # round 9: the sf10 sweep measured 85x/81x wall on the 100-copy
+    # corpus — replica pairs are inherent OUTPUT growing copies² —
+    # so both now carry the exact-dedup-first size gate instead.)
+}
+
+
+def unguarded_pairwise(qs) -> list[str]:
+    """Names of entries that call a pairwise primitive with no gate marker
+    in their source and no documented inherent-output rationale."""
+    import inspect
+
+    unguarded = []
+    for qname, qfn in qs.items():
+        try:
+            src = inspect.getsource(qfn)
+        except (OSError, TypeError):
+            continue
+        if any(prim in src for prim in PAIRWISE_PRIMITIVES):
+            if qname in INHERENT_OK:
+                continue
+            if not any(mk in src for mk in GATE_MARKERS):
+                unguarded.append(qname)
+    return unguarded
 
 
 def audit(spark, sf_dir: str) -> list[tuple[str, bool, str]]:
@@ -732,14 +798,12 @@ def audit(spark, sf_dir: str) -> list[tuple[str, bool, str]]:
 
     # Round-8: hubness size-gated dispatch — the scale arm must bound
     # pairs per block with the LSH bucket as an extra equi-join key
-    import __spark_entry__ as _em
-
-    _saved = _em.HUBNESS_EXACT_MAX_ROWS
+    _saved = gates.THRESHOLDS["pairwise_exact"]
     try:
-        _em.HUBNESS_EXACT_MAX_ROWS = 0
+        gates.THRESHOLDS["pairwise_exact"] = 0
         phub = plan_of(qs["embedding_hubness_profile"](spark, sf_dir))
     finally:
-        _em.HUBNESS_EXACT_MAX_ROWS = _saved
+        gates.THRESHOLDS["pairwise_exact"] = _saved
     check(
         "hubness scale arm: pair join keyed by (label, lsh bucket)",
         "_hb" in phub
@@ -774,60 +838,7 @@ def audit(spark, sf_dir: str) -> list[tuple[str, bool, str]]:
     )
 
     # ---- pairwise gate discipline (round-9 consolidation) ---------------
-    # Every query whose source touches a pair-enumerating primitive must
-    # either route through operators.gates.size_gated, pass a primitive
-    # skew valve (max_bucket_size / max_shingle_df), or carry a documented
-    # inherent-output rationale below — so the next pairwise wave cannot
-    # reintroduce the quadratic-arm defect class the round-8 sf1 sweep
-    # flushed. Source inspection only; the check is coarse by design (one
-    # marker anywhere in the entry's source) — the per-entry docstrings
-    # carry the precise contract.
-    import inspect
-
-    PAIRWISE_PRIMITIVES = (
-        "embedding_near_dup_pairs(",
-        "containment_pairs(",
-        "prefix_filter_jaccard_pairs(",
-        "semantic_dedup(",
-        "cosine_topk(",
-        "cosine_topk_lsh(",
-        "minhash_near_dup_pairs(",
-        "ngram_jaccard_pairs(",
-        "cross_corpus_jaccard_pairs(",
-        "weighted_jaccard_pairs(",
-        "lsh_candidate_pairs(",
-        "_hubness_pairs(",
-    )
-    GATE_MARKERS = (
-        "size_gated(",
-        "max_bucket_size=",
-        "max_shingle_df=",
-        "_docs_gated_with_pin(",  # one count -> collapse + valve + pin
-    )
-    INHERENT_OK = {
-        # exact brute-force cosine is the pinned accuracy baseline; the
-        # documented scale path is the IVF/LSH entries (docstring)
-        "knn_bruteforce_cosine",
-        # LSH-bucketed by construction; approximate by design (rows-only)
-        "knn_lsh_approx",
-        # probe side is a fixed bounded panel -> corpus-linear pair work
-        "knn_truncated_recall",
-        # (dedup_ngram_jaccard / dedup_weighted_jaccard left this list in
-        # round 9: the sf10 sweep measured 85x/81x wall on the 100-copy
-        # corpus — replica pairs are inherent OUTPUT growing copies² —
-        # so both now carry the exact-dedup-first size gate instead.)
-    }
-    unguarded = []
-    for qname, qfn in qs.items():
-        try:
-            src = inspect.getsource(qfn)
-        except (OSError, TypeError):
-            continue
-        if any(prim in src for prim in PAIRWISE_PRIMITIVES):
-            if qname in INHERENT_OK:
-                continue
-            if not any(mk in src for mk in GATE_MARKERS):
-                unguarded.append(qname)
+    unguarded = unguarded_pairwise(qs)
     check(
         "pairwise gate discipline: size-gated/valved or documented-inherent",
         not unguarded,
@@ -840,15 +851,15 @@ def audit(spark, sf_dir: str) -> list[tuple[str, bool, str]]:
     # dedup family's joins — the size estimate propagates through
     # explode/aggregate and lands under autoBroadcastJoinThreshold while
     # the true size is gigabytes, so BroadcastExchange OOMs at scale.
-    # Those joins are now pinned sort-merge (operators.dedup._corpus_sized
-    # / operators.similarity._corpus_sized); the ONLY broadcasts allowed
+    # Those joins are now pinned sort-merge (operators.gates.merge_pinned);
+    # the ONLY broadcasts allowed
     # in these plans are the explicit bounded ones — stop-gram / oversized
     # -bucket lists (hash, appears twice when the valved frame feeds both
     # self-join sides), the benchmark shingle set, and one-row/k-row
     # scalar attaches (nested-loop). A count above budget means a
     # corpus-sized frame lost its pin.
-    # The pin is size-gated (gates.pin_shuffle_join: engaged above
-    # LSH_VALVE_MIN_ROWS documents, planner freedom below, where a
+    # The pin is size-gated (gates.over("docs", n): engaged above
+    # THRESHOLDS["docs"] documents, planner freedom below, where a
     # measured count proves every frame broadcast-safe), so at the audit
     # scale the entries would legitimately broadcast. Force the
     # above-threshold regime for the check by dropping the threshold —
@@ -875,11 +886,9 @@ def audit(spark, sf_dir: str) -> list[tuple[str, bool, str]]:
         "dedup_weighted_jaccard": (0, 8),  # one-row n_docs scalar x4 uses
         "embedding_threshold_sweep": (0, 2),  # 4-row threshold frame
     }
-    from boann_ocsf_security_data_platform_spark.operators import gates as _g
-
     over_budget = []
-    _old_valve_min = _g.LSH_VALVE_MIN_ROWS
-    _g.LSH_VALVE_MIN_ROWS = -1  # force valve + sort-merge pin everywhere
+    _old_docs = gates.THRESHOLDS["docs"]
+    gates.THRESHOLDS["docs"] = -1  # force valve + sort-merge pin everywhere
     try:
         for qname, (max_bhj, max_bnlj) in PAIR_BCAST_BUDGET.items():
             spark.catalog.clearCache()
@@ -891,7 +900,7 @@ def audit(spark, sf_dir: str) -> list[tuple[str, bool, str]]:
                     f"{qname}: BHJ {bhj}>{max_bhj} or BNLJ {bnlj}>{max_bnlj}"
                 )
     finally:
-        _g.LSH_VALVE_MIN_ROWS = _old_valve_min
+        gates.THRESHOLDS["docs"] = _old_docs
         spark.catalog.clearCache()
     check(
         "pair-entry broadcast budget: only explicit bounded broadcasts",
@@ -996,7 +1005,7 @@ _BCAST_REDUCERS = (
 )
 
 # Raw-scan broadcast gate: flag tables whose measured row count at the
-# scanned scale exceeds this. Matches gates.PIN_DIM_MIN_ROWS — below it a
+# scanned scale exceeds the dim bound of gates.THRESHOLDS — below it a
 # dim broadcast build is measured-safe; above it the build side belongs
 # in a shuffle (round-12 tail-sweep class: Catalyst estimated the
 # column-pruned 15M-row sf100 customer scan under the 64 MB threshold —
@@ -1005,13 +1014,12 @@ _BCAST_REDUCERS = (
 # heap). Calibrated to the SCAN scale on purpose: the hazard is what
 # Catalyst would actually build at the audited sf_dir, and the
 # measured-count pins engage dynamically as tables cross the bound.
-BCAST_RAW_SCAN_MAX_ROWS = 2_000_000
 
 
 def _broadcast_raw_scans(node, table_rows, under=False, reduced=False):
     """Tables scanned RAW (no aggregate/limit on the path) beneath a
-    BroadcastExchange, restricted to tables measured above
-    BCAST_RAW_SCAN_MAX_ROWS at the audited scale. Walks through
+    BroadcastExchange, restricted to tables measured above the dim bound
+    at the audited scale. Walks through
     AdaptiveSparkPlan wrappers and InMemoryRelation cached plans so a
     persist() cannot blind the gate (same discipline as the sorter
     scorer)."""
@@ -1037,7 +1045,7 @@ def _broadcast_raw_scans(node, table_rows, under=False, reduced=False):
         if under and not reduced:
             s = node.toString()
             for t, n in table_rows.items():
-                if n > BCAST_RAW_SCAN_MAX_ROWS and f"{t}.parquet" in s:
+                if gates.over("dim", n) and f"{t}.parquet" in s:
                     out.append(t)
         return out
     ch = node.children()
@@ -1095,12 +1103,12 @@ SMJ_STACK_ALLOWED: dict[str, str] = {
     ),
     "join_fuzzy_entity_resolution": (
         "region = the blocked candidate equi-join (block sizes capped by "
-        "FUZZY_MAX_BLOCK_CAND) + Spark's partial-WindowGroupLimit top-3 "
+        "gates.MAX_FUZZY_BLOCK_CANDIDATES) + Spark's partial-WindowGroupLimit top-3 "
         "prune fused above it"
     ),
     "embedding_hubness_profile": (
         "region = the LSH-blocked pair join (per-block candidates capped "
-        "by _HUBNESS_MAX_BLOCK_CAND) + the partial top-k prune; the valve "
+        "by gates.MAX_BLOCK_CANDIDATES) + the partial top-k prune; the valve "
         "bounds per-task pair counts"
     ),
 }

@@ -11,7 +11,9 @@ order given) where the before/after plans DIFFER — many round-12 fixes
 are measured-count gated and only re-plan above a fact/dim/docs gate,
 so small scales show identical plans by design. When no scale shows a
 difference the entry is captured at the first scale with a NOTE header
-(helper-level change, plan-identical at capturable scales).
+(helper-level change, plan-identical at capturable scales). Plans are
+compared with the per-build ids masked (:func:`same_plan`); the written
+files keep the raw text.
 
 Usage:
   git show <r11-sha>:__spark_entry__.py > /tmp/entry_r11.py
@@ -23,6 +25,7 @@ from __future__ import annotations
 
 import importlib.util
 import os
+import re
 import sys
 from pathlib import Path
 
@@ -41,6 +44,23 @@ def _formatted(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
+
+
+# Ids that differ every time the same DataFrame is built: expression ids
+# (``l_orderkey#123``), exchange plan ids (``[plan_id=45]``), checkpointed
+# RDD ids (``MapPartitionsRDD[2968]``) and lambda variable names
+# (``lambda x_952``).
+_BUILD_IDS = re.compile(r"(#|plan_id=|RDD\[|lambda \w+?_)\d+")
+
+
+def masked(plan: str) -> str:
+    """``plan`` with its per-build ids replaced by fixed placeholders."""
+    return _BUILD_IDS.sub(r"\1_", plan)
+
+
+def same_plan(a: str, b: str) -> bool:
+    """Are two formatted plans the same plan, whatever build made them?"""
+    return masked(a) == masked(b)
 
 
 def main() -> int:
@@ -72,7 +92,7 @@ def main() -> int:
             except Exception as e:  # noqa: BLE001 - record and move on
                 print(f"  ERR {name} @ {sf_dir}: {e}", flush=True)
                 continue
-            if before != after:
+            if not same_plan(before, after):
                 chosen, plans = sf_dir, (before, after)
                 break
             if chosen is None:
@@ -80,7 +100,7 @@ def main() -> int:
         if plans is None:
             print(f"  SKIP {name}: no scale produced a plan", flush=True)
             continue
-        differ = plans[0] != plans[1]
+        differ = not same_plan(*plans)
         note = "" if differ else (
             "NOTE: before/after plans are IDENTICAL at every capturable "
             "scale - the change is gated on a measured row count above "
