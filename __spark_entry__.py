@@ -25,6 +25,7 @@ from boann_ocsf_security_data_platform_spark.operators import (
     text_quality,
 )
 from boann_ocsf_security_data_platform_spark.operators import gates as _gates
+from boann_ocsf_security_data_platform_spark.operators import ranks
 from boann_ocsf_security_data_platform_spark.operators.cache import (
     cache_scope,
     materialize,
@@ -103,297 +104,6 @@ def _widen_fact_shuffle(df: DataFrame, key: str, n_rows: int) -> DataFrame:
     if _gates.over("fact", n_rows):
         return _gates.sized_shuffle(df, key, n_rows)
     return df
-
-
-def _order_buckets(
-    df: DataFrame, col: str, ascending: bool = True, n_buckets: int = 200
-) -> DataFrame:
-    """Quantile-bucket a GLOBAL window order so running aggregates
-    parallelize (round-11 defect class: ``Window.orderBy`` with no
-    partition key is the rank-window funnel at cardinality 1 — the whole
-    grain sorts in ONE task; 437 s for the skyline's 150M rows at sf100).
-
-    Adds a ``bkt`` column that RESPECTS the global order on ``col``:
-    every row of bucket i sorts before every row of bucket i+1, and
-    equal values always share a bucket (assignment depends on the value
-    alone). Any running aggregate over the global order then decomposes
-    exactly into (aggregate over all earlier buckets — a prefix over the
-    tiny bucket-summary table) ⊕ (in-bucket running aggregate over a
-    ``partitionBy("bkt")`` window). Boundaries come from approxQuantile
-    — a bounded driver-side model (≤ n_buckets doubles, never data);
-    their QUALITY affects only bucket balance, never values, so sketch
-    nondeterminism is harmless. ``col`` must be non-null."""
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    bounds = sorted(set(df.stat.approxQuantile(col, probs, 0.001)))
-    if not bounds:
-        return df.withColumn("bkt", F.lit(0))
-    arr = F.array(*[F.lit(float(b)) for b in bounds])
-    v = F.col(col)
-    cond = (lambda b: b < v) if ascending else (lambda b: b > v)
-    return df.withColumn("bkt", F.size(F.filter(arr, cond)))
-
-
-def _bucketed_ntiles(
-    df: DataFrame,
-    specs: "list[tuple[str, bool, str]]",
-    key_col: str,
-    k: int,
-) -> DataFrame:
-    """Exact ``ntile(k)`` columns over the deterministic (value, unique
-    key) orders WITHOUT a global single-task sort (round-11 defect
-    class): ``specs`` is [(value_col, ascending, out_col), ...]. The
-    global row rank r = lower-bucket prefix count + in-bucket row_number
-    (equal values share a bucket — see :func:`_order_buckets`), and
-    ntile's remainder rule is closed-form in (r, n): the first n%k
-    buckets take ceil(n/k) rows. Bit-identical to the literal ntile.
-    ``ascending=False`` mirrors ``orderBy(desc(value), key)`` (the key
-    tie-break stays ascending). All specs share ONE sketch action:
-    chaining one ntile per metric re-executed every previous ntile's
-    join/window plan (round-11: the 3-chain over 15M RFM customers cost
-    390 s at sf100); the multi-column approxQuantile reads the BASE frame
-    once and every bucket/prefix/window composition after that is lazy
-    plan."""
-    probs = [i / 200 for i in range(1, 200)]
-    all_bounds = df.stat.approxQuantile([s[0] for s in specs], probs, 0.001)
-    nn = df.agg(F.count(F.lit(1)).alias("_n"))
-    out = df.crossJoin(F.broadcast(nn))
-    q = F.floor(F.col("_n") / k)
-    rem = F.col("_n") % k
-    thr = rem * (q + 1)
-    for (col, asc, name), bounds in zip(specs, all_bounds):
-        bounds = sorted(set(bounds))
-        v = F.col(col)
-        if bounds:
-            arr = F.array(*[F.lit(float(b)) for b in bounds])
-            cond = (lambda b: b < v) if asc else (lambda b: b > v)
-            bkt_expr = F.size(F.filter(arr, cond))
-        else:
-            bkt_expr = F.lit(0)
-        out = out.withColumn("_bkt", bkt_expr)
-        order_v = F.asc(col) if asc else F.desc(col)
-        w_in = Window.partitionBy("_bkt").orderBy(order_v, F.asc(key_col))
-        w_pre = Window.orderBy("_bkt").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        # prefix counts derive from the BASE frame, not `out`: a branch
-        # over `out` would re-execute every previous ntile's window at
-        # execution time — the very recompute this helper exists to kill
-        prefix = (
-            df.groupBy(bkt_expr.alias("_bkt"))
-            .agg(F.count(F.lit(1)).alias("_bn"))
-            .select(
-                "_bkt",
-                F.coalesce(F.sum("_bn").over(w_pre), F.lit(0)).alias(
-                    "_prev_n"
-                ),
-            )
-        )
-        r = F.col("_prev_n") + F.row_number().over(w_in)
-        out = (
-            out.join(F.broadcast(prefix), "_bkt")
-            .withColumn(
-                name,
-                F.when(r <= thr, F.floor((r - 1) / (q + 1))).otherwise(
-                    rem + F.floor((r - thr - 1) / q)
-                )
-                + 1,
-            )
-            .drop("_bkt", "_prev_n")
-        )
-    return out.drop("_n")
-
-
-def _cum_before(
-    df: DataFrame,
-    order_col: str,
-    sum_col: str,
-    out_col: str,
-    n_buckets: int = 200,
-) -> DataFrame:
-    """Exclusive running sum over a global order, bucket-decomposed via
-    :func:`_order_buckets`: ``out_col`` = sum of ``sum_col`` over every
-    row with a strictly smaller ``order_col`` — the cum-count primitive
-    behind the distinct-value average-rank formulation (Mann-Whitney,
-    Kruskal-Wallis, Wilcoxon, KS). Requires ``order_col`` unique per row
-    (these frames are grouped by the value first). For integer
-    ``sum_col`` the decomposition is bit-exact (integer addition is
-    associative); the windows run |bucket|-parallel instead of funneling
-    the whole value domain through one task — the domain is bounded on
-    the bench corpora but scales with genuinely continuous data
-    (ADVICE r10 #1's hazard class). Drops the helper ``bkt`` column.
-
-    ``df`` is persisted here (round 13): it fans out to THREE consumers
-    — the approxQuantile sketch ACTION inside _order_buckets, the
-    bucket-summary prefix branch, and the bucketed window join — and
-    every caller feeds it a chain ending in a fact scan, so unpersisted
-    each consumer re-ran that scan (the agg_kruskal_wallis plan showed
-    the orders⋈customer join FIVE times). Domain-grain rows, so the
-    in-memory level is bounded at the gate scales and evicts gracefully
-    past them."""
-    df = materialize(df)
-    b = _order_buckets(df, order_col, ascending=True, n_buckets=n_buckets)
-    w_in = (
-        Window.partitionBy("bkt")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_pre = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    prefix = (
-        b.groupBy("bkt")
-        .agg(F.sum(sum_col).alias("_bsum"))
-        .select(
-            "bkt",
-            F.coalesce(F.sum("_bsum").over(w_pre), F.lit(0)).alias("_prev"),
-        )
-    )
-    return (
-        b.join(F.broadcast(prefix), "bkt")
-        .withColumn(
-            out_col,
-            F.col("_prev")
-            + F.coalesce(F.sum(sum_col).over(w_in), F.lit(0)),
-        )
-        .drop("bkt", "_prev")
-    )
-
-
-def _grouped_percentile_cont(
-    df: DataFrame,
-    part_col: str,
-    value_col: str,
-    ps: "list[tuple[float, str]]",
-) -> DataFrame:
-    """Exact per-group ``percentile_cont`` WITHOUT concentrating a
-    group's value domain in one task (round-12 class: Spark's exact
-    Percentile aggregate carries an OpenHashMap of value -> count per
-    group, merges every map of a group onto ONE reducer and sorts it
-    there — bounded on the replicated bench domains, but O(rows) on a
-    genuinely continuous column, ADVICE r10 #1's hazard shape).
-
-    The same counts, distributed: one hash aggregate builds the
-    (group, value) domain with row counts, the bucketed exclusive
-    cum-count (:func:`_order_buckets` discipline, partitioned per
-    group) gives each domain row its 0-based starting index, and the
-    percentile is Spark's own interpolation over the two straddled
-    order statistics: pos = p*(n-1), result = v_lo*(ceil(pos)-pos) +
-    v_hi*(pos-floor(pos)) — the identical doubles Percentile emits,
-    so oracle hashes cannot move. ``ps`` is [(fraction, out_col)...];
-    returns one row per group with the named percentile columns,
-    computed from ONE scan of ``df``.
-
-    PRECONDITION (ADVICE r12 #1): every group must have at least one
-    non-null ``value_col`` row. An all-null group is dropped here (the
-    null filter precedes the groupBy) but kept — with a NULL percentile
-    — by the native ordered-set arm, so the two arms of
-    :func:`_percentiles_by_group` would diverge on it. No current
-    caller's grouping can produce an all-null group (the TPC-H numeric
-    columns are NOT NULL); a new caller that can must left-join its
-    distinct group keys back."""
-    # dv feeds the approxQuantile ACTION, the bucketed join chain, and
-    # the per-group total — unmaterialized, each re-ran the fact scan this
-    # arm exists to protect
-    dv = materialize(
-        df.where(F.col(value_col).isNotNull())  # percentile ignores nulls
-        .groupBy(part_col, value_col)
-        .agg(F.count(F.lit(1)).alias("_c"))
-    )
-    b = _order_buckets(dv, value_col)
-    w_in = (
-        Window.partitionBy(part_col, "bkt")
-        .orderBy(value_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_pre = (
-        Window.partitionBy(part_col)
-        .orderBy("bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    prefix = (
-        b.groupBy(part_col, "bkt")
-        .agg(F.sum("_c").alias("_bn"))
-        .select(
-            part_col,
-            "bkt",
-            F.coalesce(F.sum("_bn").over(w_pre), F.lit(0)).alias("_prev"),
-        )
-    )
-    nn = dv.groupBy(part_col).agg(F.sum("_c").alias("_n"))
-    idx = (
-        b.join(F.broadcast(prefix), [part_col, "bkt"])
-        .join(F.broadcast(nn), part_col)
-        .select(
-            part_col,
-            value_col,
-            "_c",
-            "_n",
-            (
-                F.col("_prev")
-                + F.coalesce(F.sum("_c").over(w_in), F.lit(0))
-            ).alias("_cb"),
-        )
-    )
-    # idx is re-filtered once per requested percentile — materialize it so
-    # a three-percentile caller (trimmed/winsorized, psi) pays the bucketed
-    # cum-count pipeline once, not three times (round 13)
-    idx = materialize(idx)
-    out = None
-    for p, name in ps:
-        pos = F.lit(float(p)) * (F.col("_n") - 1)
-        lower, higher = F.floor(pos), F.ceil(pos)
-        hit = idx.filter(
-            (F.col("_cb") <= higher) & (lower < F.col("_cb") + F.col("_c"))
-        )
-        v = F.col(value_col)
-        one = hit.groupBy(part_col).agg(
-            F.when(F.min(lower) == F.max(higher), F.min(v))
-            .otherwise(
-                F.min(v) * (F.max(higher) - F.max(pos))
-                + F.max(v) * (F.max(pos) - F.min(lower))
-            )
-            .alias(name)
-        )
-        out = one if out is None else out.join(one, part_col)
-    return out
-
-
-def _percentiles_by_group(
-    spark,
-    sf_dir: str,
-    df: DataFrame,
-    count_table: str,
-    part_col: str,
-    value_col: str,
-    ps: "list[tuple[float, str]]",
-) -> DataFrame:
-    """Concentration-gated exact grouped ``percentile_cont``: below the
-    fact gate Spark's own ordered-set aggregate runs (single pass, its
-    per-group value-count map measured-bounded there — and ~4x cheaper
-    than the distributed pipeline at bench scale, the round-12
-    regression find); above it
-    :func:`_grouped_percentile_cont` distributes the identical
-    computation through domain counts. Both arms emit bit-identical
-    doubles (raw-equality pin), so oracle hashes cannot move.
-    ``count_table`` names the fact table whose measured row count
-    drives the dispatch — the same count every other gate on the entry
-    shares via :func:`_table_count`. The count is a PROXY for the
-    percentile input's size (ADVICE r12 #2): callers feeding a filtered
-    slice (psi's 1995 window, MAD's dev frame) engage the distributed
-    form a bit earlier than the threshold's ~4x-cheaper rationale
-    strictly needs — a conservative plan heuristic, never a correctness
-    concern (both arms are bit-identical). Inherits
-    :func:`_grouped_percentile_cont`'s non-null-per-group
-    precondition."""
-    if _gates.over("fact", _table_count(spark, sf_dir, count_table)):
-        return _grouped_percentile_cont(df, part_col, value_col, ps)
-    return df.groupBy(part_col).agg(
-        *[
-            F.expr(
-                f"percentile_cont({float(p)!r}) WITHIN GROUP"
-                f" (ORDER BY `{value_col}`)"
-            ).alias(name)
-            for p, name in ps
-        ]
-    )
 
 
 def _table_count(spark, sf_dir: str, name: str) -> int:
@@ -2498,7 +2208,7 @@ def agg_median_countif_bool(spark, sf_dir):
     exact median is concentration-gated: below the fact gate it rides
     the SAME single aggregate (one pass over orders, the per-group
     value-count map measured-bounded), above it
-    :func:`_grouped_percentile_cont` distributes the order statistics
+    :func:`ranks.grouped_percentile_cont` distributes the order statistics
     and joins back on the 5-row priority grain — identical doubles
     either way (raw-equality pin)."""
     o = _t(spark, sf_dir, "orders")
@@ -2509,7 +2219,7 @@ def agg_median_countif_bool(spark, sf_dir):
             F.bool_and(F.col("o_totalprice") > 0).alias("all_positive"),
             F.bool_or(F.col("o_orderstatus") == "F").alias("any_finished"),
         )
-    med = _grouped_percentile_cont(
+    med = ranks.grouped_percentile_cont(
         o, "o_orderpriority", "o_totalprice", [(0.5, "_med")]
     )
     return (
@@ -5610,14 +5320,15 @@ def events_mad_anomalies(spark, sf_dir):
     the output is the per-type summary, so the final aggregate is
     map-side combinable."""
     e = _t(spark, sf_dir, "events")
-    med = _percentiles_by_group(
-        spark, sf_dir, e, "events", "event_type", "value", [(0.5, "med")]
+    n = _table_count(spark, sf_dir, "events")
+    med = ranks.percentiles_by_group(
+        e, "event_type", "value", [(0.5, "med")], n
     )
     dev = e.join(F.broadcast(med), "event_type").withColumn(
         "adev", F.abs(F.col("value") - F.col("med"))
     )
-    mad = _percentiles_by_group(
-        spark, sf_dir, dev, "events", "event_type", "adev", [(0.5, "mad")]
+    mad = ranks.percentiles_by_group(
+        dev, "event_type", "adev", [(0.5, "mad")], n
     )
     return (
         dev.join(F.broadcast(mad), "event_type")
@@ -6077,19 +5788,19 @@ def agg_trimmed_winsorized(spark, sf_dir):
     """Robust means: 10%-trimmed (drop the tails) and winsorized (clamp
     to the p10/p90 fence) per return flag — outlier-resistant central
     tendency for noisy value columns. The per-group fences (3 rows,
-    broadcast back) come from :func:`_percentiles_by_group` —
+    broadcast back) come from :func:`ranks.percentiles_by_group` —
     concentration-gated, so the single-pass ordered-set aggregate runs
     below the fact gate and the distributed domain-count form above it
     (Spark's Percentile aggregate merges each group's whole value-count
-    map onto one reducer, the concentration this round's sweep class
-    names) — then a single partial+final pass computes all three
-    means."""
+    map onto one reducer) — then a single partial+final pass computes
+    all three means."""
     l = _t(spark, sf_dir, "lineitem")
-    th = _percentiles_by_group(
-        spark, sf_dir, l, "lineitem",
+    th = ranks.percentiles_by_group(
+        l,
         "l_returnflag",
         "l_extendedprice",
         [(0.1, "lo"), (0.9, "hi")],
+        _table_count(spark, sf_dir, "lineitem"),
     )
     x = F.col("l_extendedprice")
     return (
@@ -6264,60 +5975,30 @@ def window_distribution_ranks(spark, sf_dir):
     CDF position, tie-broken by orderkey so both engines rank
     identically.
 
-    Round-12 sf100 find: the literal PARTITION BY o_orderpriority window
-    is the rank-window funnel at cardinality 5 — the whole order fact
-    sorts in five tasks (144 s isolated at sf100, ~10x the parallel
+    The literal PARTITION BY o_orderpriority window sorts the whole
+    order fact in five tasks (144 s isolated at sf100, ~10x the parallel
     scan cost). The deterministic (price, orderkey) order has no ties,
     so rank == row_number and all three functions are closed-form in
     the per-priority rank r and count n: percent_rank = (r-1)/(n-1),
-    cume_dist = r/n, and ntile's remainder rule is the same expression
-    :func:`_bucketed_ntiles` uses. r decomposes through global price
-    buckets exactly as in the other bucketed windows — equal prices
-    share a bucket (:func:`_order_buckets`), so r = per-(priority,
-    lower-bucket) prefix count + in-(priority, bucket) row_number over
-    the same order. Bit-identical output, (5 x n_buckets)-parallel
-    sort instead of 5 tasks."""
+    cume_dist = r/n, quartile = :func:`ranks.ntile_of`. r is the
+    bucketed running row number (:func:`ranks.running`) per priority.
+    Bit-identical output, (5 x 200)-parallel sort instead of 5 tasks."""
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    b = _order_buckets(o, "o_totalprice")
-    w_in = Window.partitionBy("o_orderpriority", "bkt").orderBy(
-        "o_totalprice", "o_orderkey"
-    )
-    w_pre = (
-        Window.partitionBy("o_orderpriority")
-        .orderBy("bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
     # both model tables are bounded: |priorities| x |buckets| and
     # |priorities| rows — broadcast joins, never a fact shuffle
-    prefix = (
-        b.groupBy("o_orderpriority", "bkt")
-        .agg(F.count(F.lit(1)).alias("_bn"))
-        .select(
-            "o_orderpriority",
-            "bkt",
-            F.coalesce(F.sum("_bn").over(w_pre), F.lit(0)).alias("_prev_n"),
-        )
+    framed, r = ranks.running(
+        o, "o_totalprice", by=("o_orderpriority",), tie=("o_orderkey",)
     )
     nn = o.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("_n"))
-    r = F.col("_prev_n") + F.row_number().over(w_in)
     n = F.col("_n")
-    q = F.floor(n / 4)
-    rem = n % 4
-    thr = rem * (q + 1)
-    quartile = (
-        F.when(r <= thr, F.floor((r - 1) / (q + 1)))
-        .otherwise(rem + F.floor((r - thr - 1) / q))
-        + 1
-    )
     return (
-        b.join(F.broadcast(prefix), ["o_orderpriority", "bkt"])
-        .join(F.broadcast(nn), "o_orderpriority")
+        framed.join(F.broadcast(nn), "o_orderpriority")
         .select(
             "o_orderkey",
             "o_orderpriority",
-            quartile.cast("long").alias("quartile"),
+            ranks.ntile_of(r, n, 4).cast("long").alias("quartile"),
             F.round(
                 F.when(n > 1, (r - 1) / (n - 1)).otherwise(F.lit(0.0)), 6
             ).alias("pct_rank"),
@@ -6497,46 +6178,25 @@ def agg_pareto_abc(spark, sf_dir):
     """Pareto/ABC revenue segmentation: customers sorted by revenue,
     classed by the cumulative share BEFORE them (A < 80%, B < 95%, C
     rest) so the straddling customer deterministically lands in the
-    earlier class. Round-12 sf100 find: 'the window input is already an
-    aggregate' stopped being a defense at customer grain — the rollup
-    is 15M rows at sf100 and the global Window.orderBy sorted all of
-    them in ONE task (the rank-window funnel at cardinality 1). Same
-    bucketed running sum as parts_abc_xyz_classification: cum = prefix
-    over strictly-higher-revenue buckets + in-bucket running sum; tot
-    rides a broadcast scalar, not a whole-frame window. The rollup is
-    persisted (r12 VERDICT #6): it feeds FOUR consumers — the
-    approxQuantile sketch action, the scalar total, the bucket prefix
-    table and the classed aggregate — and unpersisted each re-ran the
-    fact scan + customer rollup (4 scans of orders)."""
+    earlier class. The customer rollup is 15M rows at sf100, and a
+    global Window.orderBy sorts all of them in ONE task, so the running
+    sum is bucketed (:func:`ranks.running`); tot rides a broadcast
+    scalar, not a whole-frame window. The rollup is persisted: it feeds
+    FOUR consumers — the sketch action, the scalar total, the bucket
+    prefix table and the classed aggregate — and unpersisted each re-ran
+    the fact scan + customer rollup (4 scans of orders)."""
     o = _t(spark, sf_dir, "orders")
     c = materialize(
         o.groupBy("o_custkey").agg(F.sum("o_totalprice").alias("rev")),
         disk=_gates.over("fact", _table_count(spark, sf_dir, "orders")),
     )
     tot = c.agg(F.sum("rev").alias("tot"))
-    b = _order_buckets(c, "rev", ascending=False)
-    w_cum = (
-        Window.partitionBy("bkt")
-        .orderBy(F.col("rev").desc(), F.col("o_custkey"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    framed, cum = ranks.running(
+        c, "rev", ascending=False, tie=("o_custkey",), sum_col="rev"
     )
-    w_pre = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    prefix = (
-        b.groupBy("bkt")
-        .agg(F.sum("rev").alias("bsum"))
-        .select(
-            "bkt",
-            F.coalesce(F.sum("bsum").over(w_pre), F.lit(0.0)).alias(
-                "prev_rev"
-            ),
-        )
-    )
-    share_before = (
-        F.col("prev_rev") + F.sum("rev").over(w_cum) - F.col("rev")
-    ) / F.col("tot")
+    share_before = (cum - F.col("rev")) / F.col("tot")
     return (
-        b.join(F.broadcast(prefix), "bkt")
-        .crossJoin(F.broadcast(tot))
+        framed.crossJoin(F.broadcast(tot))
         .withColumn(
             "klass",
             F.when(share_before < 0.8, "A")
@@ -6950,13 +6610,16 @@ def feature_psi_drift(spark, sf_dir):
     # th is flag-grain (5 rows) but its lineage is a percentile
     # SortAggregate over the 1995 fact slice, and FOUR consumers
     # (both binned() broadcasts, the spine, and their recomputes via j)
-    # each re-ran it — round-12 sorter-pipeline scan found the
-    # duplicated subtrees fusing 5 sorters into one region at sf10.
+    # each re-ran it: at sf10 the duplicated subtrees fused 5 sorters
+    # into one region.
     # Materialize the bounded frame; every branch then reads 5 cached rows.
     th = materialize(
-        _percentiles_by_group(
-            spark, sf_dir, ref, "lineitem",
-            "flag", "x", [(i / 10, f"t{i}") for i in range(1, 10)],
+        ranks.percentiles_by_group(
+            ref,
+            "flag",
+            "x",
+            [(i / 10, f"t{i}") for i in range(1, 10)],
+            _table_count(spark, sf_dir, "lineitem"),
         )
     )
     bin_expr = sum(
@@ -7027,15 +6690,13 @@ def agg_gini_coefficient(spark, sf_dir):
     """Gini coefficient of customer revenue concentration (the
     inequality summary behind the Pareto view): rank-weighted-sum
     formula G = 2·Σ(i·xᵢ)/(n·Σx) − (n+1)/n over revenue-sorted
-    customers. Round-12 sf100 find: the global rank window sorted the
-    15M-row customer rollup in ONE task (rank-window funnel at
-    cardinality 1), and the two whole-frame aggregate windows shuffled
-    the frame to a single partition besides. The rank decomposes
-    through revenue buckets (i = lower-bucket prefix count + in-bucket
-    row_number — exact integers); n and Σx ride ONE broadcast scalar
-    row. The rollup is persisted (r12 VERDICT #6): it feeds the sketch
-    action, the (n, tot) scalar, the prefix table and the ranked frame —
-    unpersisted, 4 fact scans."""
+    customers. A global rank window sorts the 15M-row customer rollup
+    (sf100) in ONE task, and whole-frame aggregate windows shuffle the
+    frame to a single partition besides: the rank is the bucketed
+    running row number (:func:`ranks.running`, exact integers), and n
+    and Σx ride ONE broadcast scalar row. The rollup is persisted: it
+    feeds the sketch action, the (n, tot) scalar, the prefix table and
+    the ranked frame — unpersisted, 4 fact scans."""
     o = _t(spark, sf_dir, "orders")
     c = materialize(
         o.groupBy("o_custkey").agg(F.sum("o_totalprice").alias("rev")),
@@ -7044,28 +6705,9 @@ def agg_gini_coefficient(spark, sf_dir):
     nt = c.agg(
         F.count(F.lit(1)).alias("n"), F.sum("rev").alias("tot")
     )
-    b = _order_buckets(c, "rev", ascending=True)
-    w_in = Window.partitionBy("bkt").orderBy(
-        F.col("rev"), F.col("o_custkey")
-    )
-    w_pre = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    prefix = (
-        b.groupBy("bkt")
-        .agg(F.count(F.lit(1)).alias("bn"))
-        .select(
-            "bkt",
-            F.coalesce(F.sum("bn").over(w_pre), F.lit(0)).alias("prev_n"),
-        )
-    )
-    r = (
-        b.join(F.broadcast(prefix), "bkt")
-        .crossJoin(F.broadcast(nt))
-        .select(
-            "rev",
-            (F.col("prev_n") + F.row_number().over(w_in)).alias("i"),
-            "n",
-            "tot",
-        )
+    framed, i = ranks.running(c, "rev", tie=("o_custkey",))
+    r = framed.crossJoin(F.broadcast(nt)).select(
+        "rev", i.alias("i"), "n", "tot"
     )
     return r.agg(
         F.round(
@@ -7316,9 +6958,9 @@ def orders_rfm_segments(spark, sf_dir):
             "monetary",
         )
     )
-    # three bucket-decomposed exact ntiles, one sketch action (round 11
-    # — each literal ntile was a global single-task customer-grain sort)
-    s = _bucketed_ntiles(
+    # three bucket-decomposed exact ntiles, one sketch action (each
+    # literal ntile is a global single-task customer-grain sort)
+    s = ranks.ntiles(
         c,
         [
             ("recency_days", False, "r_score"),
@@ -8858,12 +8500,16 @@ def agg_mann_whitney_u(spark, sf_dir):
             F.sum(F.when(~F.col("is_a"), 1).otherwise(0)).alias("nb"),
         )
     )
-    # bucket-parallel exclusive cum-count (round 11, ADVICE r10 #1);
+    # bucket-parallel exclusive cum-count: the price domain is bounded on
+    # the bench corpora but scales with genuinely continuous data;
     # integer sums, so bit-exact vs the single global window
-    pv = _cum_before(
-        pv.withColumn("tn", F.col("na") + F.col("nb")), "v", "tn", "_cb"
+    pv, cb = ranks.running(
+        materialize(pv.withColumn("tn", F.col("na") + F.col("nb"))),
+        "v",
+        sum_col="tn",
+        inclusive=False,
     )
-    arank = F.col("_cb") + (F.col("tn") + 1) / F.lit(2.0)
+    arank = cb + (F.col("tn") + 1) / F.lit(2.0)
     st = pv.select(
         "na", "nb", "tn", arank.alias("arank")
     ).agg(
@@ -10279,16 +9925,11 @@ def feature_quantile_binning(spark, sf_dir):
     + unique key tie-break, so equal prices land in the same bin on
     every engine); the rollup is one map-combinable aggregate over the
     binned frame.
-    Round-11 sf100 find: the literal ntile ran a global single-task sort
-    of the whole order fact (518 s in-sweep). The global row rank r
-    decomposes through price buckets exactly like the other bucketed
-    windows (equal prices share a bucket; r = prefix count of lower
-    buckets + in-bucket row_number over the same (price, key) order) and
-    ntile's exact remainder rule — the first n%10 bins take one extra
-    row — is closed-form in (r, n). Bit-identical bins, bucket-parallel
-    sort."""
+    The literal ntile runs a global single-task sort of the whole order
+    fact (518 s in an sf100 sweep); :func:`ranks.ntiles` computes the
+    identical bins bucket-parallel."""
     o = _t(spark, sf_dir, "orders").select("o_totalprice", "o_orderkey")
-    b = _bucketed_ntiles(o, [("o_totalprice", True, "bin")], "o_orderkey", 10)
+    b = ranks.ntiles(o, [("o_totalprice", True, "bin")], "o_orderkey", 10)
     return b.groupBy(F.col("bin").cast("long").alias("bin")).agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.min("o_totalprice"), 2).alias("lo"),
@@ -11542,40 +11183,15 @@ def parts_abc_xyz_classification(spark, sf_dir):
         ),
         disk=pin,
     )
-    # Bucketed running sum (round-11: the global Window.orderBy funneled
-    # the whole part grain — 20M rows at sf100 — through one task; see
-    # _order_buckets). cum = prefix over strictly-higher-revenue buckets
-    # + in-bucket running sum; tot rides a broadcast scalar, not a
-    # whole-frame window.
+    # Bucketed running sum (a global Window.orderBy funnels the whole
+    # part grain — 20M rows at sf100 — through one task); tot rides a
+    # broadcast scalar, not a whole-frame window.
     tot = per_part.agg(F.sum("rev").alias("tot_rev"))
-    b = _order_buckets(per_part, "rev", ascending=False)
-    w_cum = (
-        Window.partitionBy("bkt")
-        .orderBy(F.desc("rev"), F.asc("pk"))
-        .rowsBetween(Window.unboundedPreceding, 0)
+    framed, cum = ranks.running(
+        per_part, "rev", ascending=False, tie=("pk",), sum_col="rev"
     )
-    w_pre = Window.orderBy("bkt").rowsBetween(Window.unboundedPreceding, -1)
-    prefix = (
-        b.groupBy("bkt")
-        .agg(F.sum("rev").alias("bsum"))
-        .select(
-            "bkt",
-            F.coalesce(F.sum("bsum").over(w_pre), F.lit(0.0)).alias(
-                "prev_rev"
-            ),
-        )
-    )
-    ranked = (
-        b.join(F.broadcast(prefix), "bkt")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "pk",
-            "rev",
-            "cv",
-            "n_months",
-            (F.col("prev_rev") + F.sum("rev").over(w_cum)).alias("cum_rev"),
-            "tot_rev",
-        )
+    ranked = framed.crossJoin(F.broadcast(tot)).select(
+        "pk", "rev", "cv", "n_months", cum.alias("cum_rev"), "tot_rev"
     )
     share = F.col("cum_rev") / F.col("tot_rev")
     classed = ranked.select(
@@ -11859,9 +11475,9 @@ def feature_woe_information_value(spark, sf_dir):
     broadcast one-row frame. Near-zero IV on TPC-H's independent
     priority column is the correct reading. The supervised sibling of
     feature_quantile_binning beside feature_loo_target_encoding."""
-    # bucket-decomposed exact ntile (round 11 — the literal ntile was a
-    # global single-task fact sort; see _bucketed_ntiles)
-    b = _bucketed_ntiles(
+    # bucket-decomposed exact ntile (the literal ntile is a global
+    # single-task fact sort)
+    b = ranks.ntiles(
         _t(spark, sf_dir, "orders").select(
             "o_totalprice",
             "o_orderkey",
@@ -13231,9 +12847,9 @@ def orders_rfm_segmentation(spark, sf_dir):
             "mon_c",
         )
     )
-    # three bucket-decomposed exact ntiles, one sketch action (round 11
-    # — each literal ntile was a global single-task customer-grain sort)
-    scored = _bucketed_ntiles(
+    # three bucket-decomposed exact ntiles, one sketch action (each
+    # literal ntile is a global single-task customer-grain sort)
+    scored = ranks.ntiles(
         cust,
         [
             ("rec", False, "r_score"),
@@ -15305,15 +14921,18 @@ def agg_brown_forsythe_test(spark, sf_dir):
     the within sum-of-squares expanded algebraically (sum z², sum z per
     group) so the whole test is TWO passes: one median aggregate (both
     engines interpolate linearly — the pinned percentile pairing;
-    concentration-gated via :func:`_percentiles_by_group`, so above the
+    concentration-gated via :func:`ranks.percentiles_by_group`, so above the
     fact gate the median distributes through domain counts instead of
     Spark's per-group value-count-map), one moment aggregate over the
     deviations; the 2.60 threshold is F(0.05; 2, inf). Group medians
     ride a broadcast join."""
     l = _t(spark, sf_dir, "lineitem")
-    med = _percentiles_by_group(
-        spark, sf_dir, l, "lineitem",
-        "l_returnflag", "l_extendedprice", [(0.5, "md")],
+    med = ranks.percentiles_by_group(
+        l,
+        "l_returnflag",
+        "l_extendedprice",
+        [(0.5, "md")],
+        _table_count(spark, sf_dir, "lineitem"),
     )
     z = l.join(F.broadcast(med), "l_returnflag").select(
         "l_returnflag",
@@ -16614,17 +16233,17 @@ def agg_kruskal_wallis(spark, sf_dir):
     match a cross-derivation proof. At 100 TB the window runs over
     distinct prices (bounded domain), not rows."""
     o = _t(spark, sf_dir, "orders")
-    # measured-count sort-merge pin (round 11): the _cum_before prefix
-    # branch prunes customer to c_custkey alone, whose size ESTIMATE
-    # then slips under the broadcast threshold — Spark tried to build a
-    # 15M-row hashed relation at sf100 ("Not enough memory to build and
-    # broadcast"). Same estimate-driven-broadcast class as round 9.
+    # measured-count sort-merge pin: the running-sum prefix branch
+    # prunes customer to c_custkey alone, whose size ESTIMATE then slips
+    # under the broadcast threshold — Spark tried to build a 15M-row
+    # hashed relation at sf100 ("Not enough memory to build and
+    # broadcast").
     pin = _gates.over("fact", _table_count(spark, sf_dir, "orders"))
     c = merge_pinned(_t(spark, sf_dir, "customer"), pin)
     # pv feeds the distinct-value table AND the per-group rank join —
     # unmaterialized, the orders⋈customer join ran once per consumer
     # (in-suite 6.4 s at sf0.1 for what is one small join; the plan
-    # showed five fact-join subtrees counting _cum_before's internal
+    # showed five fact-join subtrees counting the running sum's internal
     # fan-out)
     pv = materialize(
         o.join(c, o.o_custkey == c.c_custkey)
@@ -16637,13 +16256,14 @@ def agg_kruskal_wallis(spark, sf_dir):
         disk=pin,
     )
     vals = pv.groupBy("v").agg(F.sum("n_vg").alias("tn"))
-    # bucket-parallel exclusive cum-count (round 11, ADVICE r10 #1: the
-    # price domain is bounded on the bench corpora but scales with
-    # genuinely continuous data); integer sums, so bit-exact
-    vals = _cum_before(vals, "v", "tn", "_cb").select(
-        "v",
-        "tn",
-        (F.col("_cb") + (F.col("tn") + 1) / F.lit(2.0)).alias("arank"),
+    # bucket-parallel exclusive cum-count (the price domain is bounded
+    # on the bench corpora but scales with genuinely continuous data);
+    # integer sums, so bit-exact
+    framed, cb = ranks.running(
+        materialize(vals), "v", sum_col="tn", inclusive=False
+    )
+    vals = framed.select(
+        "v", "tn", (cb + (F.col("tn") + 1) / F.lit(2.0)).alias("arank")
     )
     grp = (
         pv.join(vals, "v")
@@ -17336,12 +16956,13 @@ def agg_wilcoxon_signed_rank(spark, sf_dir):
         F.count(F.lit(1)).alias("tn"),
         F.sum(F.when(F.col("diff") > 0, 1).otherwise(0)).alias("npos"),
     )
-    # bucket-parallel exclusive cum-count (round 11, ADVICE r10 #1);
-    # integer sums, so bit-exact vs the single global window
-    pv = _cum_before(pv, "ad", "tn", "_cb").select(
-        "tn",
-        "npos",
-        (F.col("_cb") + (F.col("tn") + 1) / F.lit(2.0)).alias("arank"),
+    # bucket-parallel exclusive cum-count; integer sums, so bit-exact
+    # vs the single global window
+    framed, cb = ranks.running(
+        materialize(pv), "ad", sum_col="tn", inclusive=False
+    )
+    pv = framed.select(
+        "tn", "npos", (cb + (F.col("tn") + 1) / F.lit(2.0)).alias("arank")
     )
     st = pv.agg(
         F.sum("tn").alias("n"),
@@ -19278,10 +18899,10 @@ def orders_abc_migration(spark, sf_dir):
     partitioned by year) full-outer-joined with itself, '-' for years
     the customer didn't order — the churn/upsell flow a key-account
     dashboard actually shows (how many A-customers slipped to C or
-    vanished?). Round-12 sf100 find: PARTITION BY yr is the rank-window
-    funnel at cardinality 2 over a 30M-row (customer, year) grain — the
-    same bucketed prefix-sum as agg_pareto_abc, partitioned per year,
-    replaces it; per-year totals ride a broadcast 2-row aggregate."""
+    vanished?). PARTITION BY yr sorts a 30M-row (customer, year) grain
+    (sf100) in two tasks, so the running sum is the bucketed one of
+    agg_pareto_abc, partitioned per year; per-year totals ride a
+    broadcast 2-row aggregate."""
     o = _t(spark, sf_dir, "orders").withColumn(
         "yr", F.year(F.col("o_orderdate").cast("date"))
     )
@@ -19291,34 +18912,16 @@ def orders_abc_migration(spark, sf_dir):
         .agg(F.sum("o_totalprice").alias("rev"))
     )
     tot = r.groupBy("yr").agg(F.sum("rev").alias("_tot"))
-    rb = _order_buckets(r, "rev", ascending=False)
-    wcum = (
-        Window.partitionBy("yr", "bkt")
-        .orderBy(F.col("rev").desc(), "o_custkey")
-        .rowsBetween(Window.unboundedPreceding, 0)
+    framed, cum = ranks.running(
+        r,
+        "rev",
+        ascending=False,
+        by=("yr",),
+        tie=("o_custkey",),
+        sum_col="rev",
     )
-    w_pre = (
-        Window.partitionBy("yr")
-        .orderBy("bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    prefix = (
-        rb.groupBy("yr", "bkt")
-        .agg(F.sum("rev").alias("_bsum"))
-        .select(
-            "yr",
-            "bkt",
-            F.coalesce(F.sum("_bsum").over(w_pre), F.lit(0.0)).alias(
-                "_prev"
-            ),
-        )
-    )
-    r = rb.join(F.broadcast(prefix), ["yr", "bkt"]).join(
-        F.broadcast(tot), "yr"
-    )
-    share = (
-        F.col("_prev") + F.sum("rev").over(wcum) - F.col("rev")
-    ) / F.col("_tot")
+    r = framed.join(F.broadcast(tot), "yr")
+    share = (cum - F.col("rev")) / F.col("_tot")
     c = r.select(
         "o_custkey",
         "yr",
@@ -19813,20 +19416,21 @@ def agg_conformal_interval(spark, sf_dir):
         )
     )
     # k-th order statistic via the bucketed cum-count, not a global
-    # row_number sort (round 11: the unpartitioned window funneled the
-    # 75M-row calibration half through ONE task at sf100). The
+    # row_number sort (the unpartitioned window funneled the 75M-row
+    # calibration half through ONE task at sf100). The
     # ceil(0.9(n+1))-th score is the distinct score whose exclusive
     # cum-count straddles k — exact under ties, bucket-parallel.
     nc = cal.agg(F.count(F.lit(1)).alias("n_cal"))
     k = F.ceil(0.9 * (F.col("n_cal") + 1)).cast("long")
-    sc = _cum_before(
-        cal.groupBy("score").agg(F.count(F.lit(1)).alias("tn")),
+    framed, cb = ranks.running(
+        materialize(cal.groupBy("score").agg(F.count(F.lit(1)).alias("tn"))),
         "score",
-        "tn",
-        "_cb",
+        sum_col="tn",
+        inclusive=False,
     )
     qh = (
-        sc.join(F.broadcast(nc))
+        framed.withColumn("_cb", cb)
+        .join(F.broadcast(nc))
         .filter((F.col("_cb") < k) & (k <= F.col("_cb") + F.col("tn")))
         .select(F.col("score").alias("qhat"))
     )

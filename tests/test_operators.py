@@ -4,6 +4,7 @@ import datetime as dt
 
 import numpy as np
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from boann_ocsf_security_data_platform_spark.operators import (
@@ -15,7 +16,7 @@ from boann_ocsf_security_data_platform_spark.operators import (
     text_quality,
     topk_per_group,
 )
-from boann_ocsf_security_data_platform_spark.operators import gates
+from boann_ocsf_security_data_platform_spark.operators import gates, ranks
 from boann_ocsf_security_data_platform_spark.operators.dedup import (
     minhash_near_dup_pairs,
 )
@@ -1635,3 +1636,78 @@ def test_gate_engages_strictly_above_threshold(name):
     bound = gates.THRESHOLDS[name]
     assert not gates.over(name, bound)
     assert gates.over(name, bound + 1)
+
+
+@pytest.mark.parametrize(
+    "col,ascending,by",
+    [
+        ("v", True, ()),
+        ("v", False, ()),
+        ("v", True, ("g",)),
+        ("v", False, ("g",)),
+        ("tie", True, ()),
+        ("tie", False, ("g",)),
+        ("empty", True, ()),
+        ("empty", False, ("g",)),
+    ],
+)
+def test_bucketed_running_matches_literal_window(spark, col, ascending, by):
+    """ranks.running equals Spark's unbucketed window row for row — row
+    number and sum, inclusive and exclusive, ascending and descending,
+    with and without ``by``, on a duplicated column, an all-ties column
+    and an empty frame (no bounds) — and ntile_of equals F.ntile for
+    group sizes 103, 35 and 34, which leave remainders for k = 4, 5, 10."""
+    df = spark.range(103).select(
+        "id",
+        (F.col("id") % 3).alias("g"),
+        ((F.col("id") * 7) % 23).cast("double").alias("v"),
+        F.lit(1.0).alias("tie"),
+        (F.col("id") % 5 + 1).alias("x"),
+    )
+    if col == "empty":
+        df, col = df.where(F.col("id") < 0), "v"
+    modes = {
+        "rn": (None, True),
+        "rn_ex": (None, False),
+        "sum": ("x", True),
+        "sum_ex": ("x", False),
+    }
+    (bounds,) = ranks.quantile_bounds(df, [col])
+    out = df
+    for name, (sum_col, inclusive) in modes.items():
+        framed, value = ranks.running(
+            out,
+            col,
+            ascending=ascending,
+            by=by,
+            tie=("id",),
+            sum_col=sum_col,
+            inclusive=inclusive,
+            bounds=bounds,
+            base=df,
+        )
+        out = framed.withColumn(name, value).drop(ranks.BKT, ranks.PREV)
+    ks = (4, 5, 10)
+    n = F.count(F.lit(1)).over(Window.partitionBy(*by))
+    got = out.select(
+        "id",
+        *modes,
+        *[ranks.ntile_of(F.col("rn"), n, k).alias(f"nt{k}") for k in ks],
+    )
+    w = Window.partitionBy(*by).orderBy(
+        F.asc(col) if ascending else F.desc(col), "id"
+    )
+    want = df.select(
+        "id",
+        F.row_number().over(w).alias("rn"),
+        (F.row_number().over(w) - 1).alias("rn_ex"),
+        F.sum("x").over(w.rowsBetween(Window.unboundedPreceding, 0)),
+        F.coalesce(
+            F.sum("x").over(w.rowsBetween(Window.unboundedPreceding, -1)),
+            F.lit(0),
+        ),
+        *[F.ntile(k).over(w) for k in ks],
+    )
+    got_rows, want_rows = sorted(got.collect()), sorted(want.collect())
+    assert [tuple(r) for r in got_rows] == [tuple(r) for r in want_rows]
+    assert len(got_rows) == (0 if bounds == [] else 103)

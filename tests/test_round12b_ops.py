@@ -19,6 +19,9 @@ from pyspark.sql.window import Window
 
 import __spark_entry__ as em
 from boann_ocsf_security_data_platform_spark.operators import gates
+from boann_ocsf_security_data_platform_spark.operators.ranks import (
+    grouped_percentile_cont,
+)
 
 QS = em.queries()
 SF = "/root/testdata/sf0.001"
@@ -59,13 +62,13 @@ def test_distribution_ranks_bucketed_identity(spark):
 
 
 def test_grouped_percentile_cont_matches_spark_percentile(spark):
-    """_grouped_percentile_cont must emit the EXACT doubles Spark's own
+    """grouped_percentile_cont must emit the EXACT doubles Spark's own
     Percentile aggregate produces (same straddled order statistics, same
     interpolation expression) — raw equality, no rounding slack."""
     l = spark.read.parquet(f"{SF}/lineitem.parquet")
     got = {
         r["l_returnflag"]: (r["lo"], r["hi"])
-        for r in em._grouped_percentile_cont(
+        for r in grouped_percentile_cont(
             l, "l_returnflag", "l_extendedprice", [(0.1, "lo"), (0.9, "hi")]
         ).collect()
     }

@@ -179,9 +179,10 @@ def test_dsir_single_corpus_featurize(spark):
 
 
 def test_rank_family_persists_fan_out(spark):
-    """The distinct-value rank family (kruskal / conformal and the
-    _cum_before helper) persists its fan-out frames: unpersisted, every
-    consumer (including _order_buckets' approxQuantile ACTION) re-ran
+    """The distinct-value rank family (kruskal / conformal and their
+    exclusive running sums through operators.ranks.running) persists its
+    fan-out frames: unpersisted, every consumer (including the running
+    sum's approxQuantile sketch ACTION) re-ran
     the fact join — agg_kruskal_wallis' executed plan held five copies
     of orders⋈customer."""
     for name in ("agg_kruskal_wallis", "agg_conformal_interval"):

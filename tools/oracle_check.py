@@ -6,16 +6,25 @@ row count, column names, and cell values (columns sorted by name, rows
 sorted by all columns — order-insensitive, exact equality so a pass here
 predicts a value-hash match).
 
-Usage: python tools/oracle_check.py [--hostile] [sf_dir] [query ...]
+Usage: python tools/oracle_check.py [--hostile] [--ledger PATH] [sf_dir] [query ...]
 
 ``--hostile`` simulates the verification driver's session instead of the
 engine's defaults: ANSI mode ON, session timezone America/New_York, none of
 session.py's engine confs — every query must still match (load_table sets
 the confs it needs defensively at runtime).
+
+``--ledger PATH`` also records, per entry, its row count and (for an
+entry with an oracle) the sha256 of its sorted :func:`frame_key` rows,
+under the session's key (``default`` or ``hostile``) in the JSON file
+PATH. Shards of one sweep merge into the same file under a lock, so
+``tools/run_oracle_parallel.py ... --ledger PATH`` writes one ledger.
 """
 
 from __future__ import annotations
 
+import fcntl
+import hashlib
+import json
 import math
 import sys
 
@@ -70,7 +79,10 @@ def frame_key(df: pd.DataFrame) -> list[tuple]:
 def compare_one(spark, con, name: str, fn, sql: str, sf_dir: str):
     with cache_scope():
         sdf = fn(spark, sf_dir).toPandas()
-    ddf = con.execute(sql).fetchdf()
+    return compare_frames(sdf, con.execute(sql).fetchdf())
+
+
+def compare_frames(sdf: pd.DataFrame, ddf: pd.DataFrame):
     issues = []
     if sorted(sdf.columns) != sorted(ddf.columns):
         issues.append(f"columns differ: spark={sorted(sdf.columns)} duck={sorted(ddf.columns)}")
@@ -90,11 +102,51 @@ def compare_one(spark, con, name: str, fn, sql: str, sf_dir: str):
     return not issues, issues
 
 
+def ledger_row(sdf: pd.DataFrame) -> dict:
+    """An oracle entry's ledger record: row count and value hash."""
+    h = hashlib.sha256()
+    for row in frame_key(sdf):
+        h.update(json.dumps(row, ensure_ascii=False).encode())
+        h.update(b"\n")
+    return {"rows": len(sdf), "sha256": h.hexdigest()}
+
+
+def write_ledger(path: str, session: str, rows: dict) -> None:
+    """Merge ``rows`` (entry -> record) into the ledger at ``path`` under
+    ``session``; an exclusive lock lets parallel shards share the file."""
+    with open(path, "a+", encoding="utf-8") as f:
+        fcntl.flock(f, fcntl.LOCK_EX)
+        f.seek(0)
+        text = f.read()
+        ledger = json.loads(text) if text.strip() else {}
+        ledger.setdefault(session, {}).update(rows)
+        f.seek(0)
+        f.truncate()
+        f.write(_ledger_text(ledger))
+
+
+def _ledger_text(ledger: dict) -> str:
+    # one line per entry, sorted, so a diff names the entries that moved
+    sessions = []
+    for session in sorted(ledger):
+        entries = ",\n".join(
+            f"    {json.dumps(name)}: {json.dumps(rec, sort_keys=True)}"
+            for name, rec in sorted(ledger[session].items())
+        )
+        sessions.append(f"  {json.dumps(session)}: {{\n{entries}\n  }}")
+    return "{\n" + ",\n".join(sessions) + "\n}\n"
+
+
 def main():
     args = sys.argv[1:]
     hostile = "--hostile" in args
     if hostile:
         args.remove("--hostile")
+    ledger_path = None
+    if "--ledger" in args:
+        i = args.index("--ledger")
+        ledger_path = args[i + 1]
+        del args[i : i + 2]
     shard = None  # "--shard=i/n": keep the crc32 1/n slice (parallel sweeps)
     for a in list(args):
         if a.startswith("--shard="):
@@ -126,6 +178,7 @@ def main():
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     passed = failed = skipped = 0
+    ledger = {}
     import zlib
 
     for name, fn in qs.items():
@@ -137,10 +190,14 @@ def main():
             with cache_scope():
                 n = fn(spark, sf_dir).count()
             print(f"  ~ {name}: no oracle (rows-only check), {n} rows")
+            ledger[name] = {"rows": n}
             skipped += 1
             continue
         try:
-            ok, issues = compare_one(spark, con, name, fn, oracles[name], sf_dir)
+            with cache_scope():
+                sdf = fn(spark, sf_dir).toPandas()
+            ok, issues = compare_frames(sdf, con.execute(oracles[name]).fetchdf())
+            ledger[name] = ledger_row(sdf)
         except Exception as e:
             ok, issues = False, [f"EXCEPTION: {type(e).__name__}: {e}"]
         if ok:
@@ -151,6 +208,8 @@ def main():
             for i in issues[:8]:
                 print(f"      {i}")
             failed += 1
+    if ledger_path:
+        write_ledger(ledger_path, "hostile" if hostile else "default", ledger)
     print(f"\n{passed} matched, {failed} failed, {skipped} rows-only @ {sf_dir}")
     return 1 if failed else 0
 
